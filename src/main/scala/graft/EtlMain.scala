@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.ReferenceHypercube
+import graft.sources.{FixedWidthBinary, FixedWidthBinaryV2}
 
 /** The reference CLI, Spark-first: `java ETL data_folder output_file
   * [-t threads …]` (reference `ETL.java:272-294`) becomes
@@ -35,7 +36,8 @@ import graft.operators.ReferenceHypercube
   * in a fused hash aggregate; zeros keep the CSV schema-compatible
   * with the reference's sweep tooling while saying exactly that),
   * t5 = the ordered CSV write. The pools/threads/chunk prefix carries
-  * (1, defaultParallelism, files.maxPartitionBytes) — the Spark
+  * (1, defaultParallelism, the bytes per split the `invoices.bin` scan
+  * plans — [[graft.sources.FixedWidthBinaryV2.splitBytes]]) — the Spark
   * equivalents of the reference's knobs. Without the flag the default
   * human-readable two-bucket line is unchanged.
   */
@@ -104,8 +106,8 @@ object EtlMain {
     timed(5)(ReferenceHypercube.writeCsv(cube, outDir, singleFile))
     val pools = 1
     val threads = spark.sparkContext.defaultParallelism
-    val chunk = spark.conf.get("spark.sql.files.maxPartitionBytes",
-      "134217728").stripSuffix("b")
+    val chunk = FixedWidthBinaryV2.splitBytes(spark, s"$dataFolder/invoices.bin",
+      FixedWidthBinary.recordLength(FixedWidthBinary.invoiceLayout))
     println(s"$pools,$threads,$chunk," + times.mkString(","))
   }
 }

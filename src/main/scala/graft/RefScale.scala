@@ -20,9 +20,13 @@ import graft.operators.ReferenceHypercube
   * if absent). Value domains follow `README.md:12-38`.
   */
 object RefScale {
-  private val NClients = 1000000
-  private val NContracts = 1600000
-  private val NInvoices = 57600000
+  /** Row counts of a generated folder. */
+  final case class Shape(clients: Int, contracts: Int, invoices: Int)
+  /** The reference's published dataset (`README.md:76`). */
+  val Reference: Shape = Shape(1000000, 1600000, 57600000)
+  /** The shape of the reference's `data-sample` (1,000 clients, 1,600
+    * contracts, 57,600 invoices). */
+  val Sample: Shape = Shape(1000, 1600, 57600)
 
   /** SplitMix64 — tiny deterministic PRNG (public-domain algorithm). */
   private def mix(x0: Long): Long = {
@@ -34,12 +38,12 @@ object RefScale {
   private def bounded(seed: Long, lo: Int, hi: Int): Int =
     lo + (Math.floorMod(mix(seed), (hi - lo + 1).toLong)).toInt
 
-  def generate(dir: String): Unit = {
+  def generate(dir: String, shape: Shape = Reference): Unit = {
     Files.createDirectories(Paths.get(dir))
     val cw = new PrintWriter(new BufferedOutputStream(new FileOutputStream(s"$dir/clients.csv"), 1 << 20))
     cw.println("id,type,geo,misc")
     var i = 1
-    while (i <= NClients) {
+    while (i <= shape.clients) {
       cw.println(s"$i,${bounded(i * 7L + 1, 1, 5)},${bounded(i * 7L + 2, 1, 578)},${bounded(i * 7L + 3, 1, 6)}")
       i += 1
     }
@@ -51,8 +55,8 @@ object RefScale {
     val kw = new PrintWriter(new BufferedOutputStream(new FileOutputStream(s"$dir/contracts.csv"), 1 << 20))
     kw.println("id,id_client,nature,start,end")
     i = 1
-    while (i <= NContracts) {
-      kw.println(s"$i,${bounded(i * 13L + 1, 1, NClients)},${bounded(i * 13L + 2, 1, 5)},201401,201612")
+    while (i <= shape.contracts) {
+      kw.println(s"$i,${bounded(i * 13L + 1, 1, shape.clients)},${bounded(i * 13L + 2, 1, 5)},201401,201612")
       i += 1
     }
     kw.close()
@@ -60,9 +64,9 @@ object RefScale {
 
     val bw = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(s"$dir/invoices.bin"), 1 << 20))
     i = 1
-    while (i <= NInvoices) {
+    while (i <= shape.invoices) {
       bw.writeInt(i)                                         // id (discarded by the engine)
-      bw.writeInt(bounded(i * 17L + 1, 1, NContracts))       // contract
+      bw.writeInt(bounded(i * 17L + 1, 1, shape.contracts))  // contract
       bw.writeByte(bounded(i * 17L + 2, 1, 36))              // time
       bw.writeFloat(bounded(i * 17L + 3, 0, 99999) / 100.0f) // amount [0, 1000), 2dp
       bw.writeShort(bounded(i * 17L + 4, 0, 2000))           // consumption
@@ -72,16 +76,16 @@ object RefScale {
     bw.close()
   }
 
-  private[graft] def invoiceRows: Int = NInvoices
+  private[graft] def invoiceRows: Int = Reference.invoices
 
   /** Size-gated fixture materialization, not existence-gated: a crash
     * mid-write leaves a truncated invoices.bin that a bare exists()
     * would silently accept and benchmark (rows_per_sec computed against
-    * the full NInvoices). Shared by the single-point main and the
+    * the full Reference.invoices). Shared by the single-point main and the
     * thread-sweep main. */
   private[graft] def ensure(dir: String): Unit = {
     val binPath = Paths.get(s"$dir/invoices.bin")
-    val expectedBytes = NInvoices.toLong * 16L
+    val expectedBytes = Reference.invoices.toLong * 16L
     if (!Files.exists(binPath) || Files.size(binPath) != expectedBytes) {
       println("generating reference-scale dataset (~950 MB)...")
       val t0 = System.nanoTime()
@@ -161,7 +165,7 @@ object RefScale {
       (System.nanoTime() - t1) / 1e9
     }.sorted
     val secs = times(2)
-    val json = f"""{"metric":"refscale_end_to_end","value":$secs%.3f,"unit":"sec","runs":[${times.map(t => f"$t%.3f").mkString(",")}],"rows":$NInvoices,"rows_per_sec":${(NInvoices / secs).toLong},"baseline_sec":11.5,"baseline_rows_per_sec":11800000,"loadavg_start":$loadStart,"loadavg_end":${Bench.loadavgJson()}}"""
+    val json = f"""{"metric":"refscale_end_to_end","value":$secs%.3f,"unit":"sec","runs":[${times.map(t => f"$t%.3f").mkString(",")}],"rows":${Reference.invoices},"rows_per_sec":${(Reference.invoices / secs).toLong},"baseline_sec":11.5,"baseline_rows_per_sec":11800000,"loadavg_start":$loadStart,"loadavg_end":${Bench.loadavgJson()}}"""
     Files.writeString(Paths.get("target/refscale_bench.json"), json + "\n")
     // The tracked root copy is OPT-IN: an unconditional write here once
     // let a contention-skewed experiment (median 28.6 s at loadavg 14.7)

@@ -1,5 +1,9 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.IOUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -83,26 +87,6 @@ object ReferenceHypercube {
         col("k.nature").as("nature"), col("c.type").as("type"),
         col("c.geo").as("geo"), col("c.misc").as("misc"))
 
-  /** J2 + A1–A6 + P3 + O1: two-phase aggregation exploiting the same
-    * functional dependencies the reference does (`ETL.java:226-252`,
-    * SURVEY.md §4 "COUNT(DISTINCT) sharing"):
-    *
-    *  1. pre-aggregate the fact by its natural key (contract, time) —
-    *     a plain hash aggregate, partials combined map-side, shrinking
-    *     the stream before the join (57.6 M invoices → ≤ |contracts|×36
-    *     rows at reference shape);
-    *  2. join the reduced stream against the denormalized dim and run
-    *     the 5-dim final aggregate. Because contract determines
-    *     (geo,type,misc,nature), every pre-aggregated row is a distinct
-    *     contract within its output group — `ncontrats` becomes a plain
-    *     COUNT(*), and only the client distinct remains. A single
-    *     distinct aggregate needs no `Expand`, so the naive plan's 3×
-    *     row multiplication over the full fact stream disappears
-    *     (measured 2.4× end-to-end at reference scale).
-    *
-    * Empty groups never materialize (hash aggregate only creates touched
-    * groups — the reference needs an explicit `!= 0` filter only because
-    * its dense array pre-materializes all 3.1 M slots, `ETL.java:265`). */
   /** Amount-precision modes (SURVEY.md §7.2 M3): the reference
     * accumulates float32 amounts in double (`ETL.java:126,150,38`) —
     * fast, but low-order bits depend on addition order; SQL-exact mode
@@ -114,11 +98,11 @@ object ReferenceHypercube {
   /** SQL-exact: `DECIMAL(10,2)` inputs, exact decimal accumulation. */
   case object SqlExact extends AmountMode
 
-  /** Round-3 plan (replaces the r2 three-exchange shape): broadcast-join
-    * the fact against the dim FIRST, then ONE hash repartition on the
-    * five output dimensions, then three chained aggregation levels that
-    * all run in-partition — `HashPartitioning(geo,type,misc,nature,time)`
-    * satisfies the `ClusteredDistribution` of every level because each
+  /** J2 + A1–A6 + P3 + O1: the hypercube of the three inputs.
+    * Broadcast-join the fact against the denormalized dim first, then ONE
+    * hash repartition on the five output dimensions, then three chained
+    * aggregation levels that all run in-partition —
+    * `HashPartitioning(geo,type,misc,nature,time)` satisfies the `ClusteredDistribution` of every level because each
     * grouping key is a superset of the partitioning expressions, so
     * Catalyst inserts no further exchange:
     *
@@ -130,12 +114,21 @@ object ReferenceHypercube {
     *  3. (dims): `count(*)` = distinct clients (level 2 made rows
     *     client-unique within each group), `sum` = distinct contracts.
     *
-    * The r2 plan shuffled three times (pre-agg on (contract,time) ~36 M
-    * rows, then Spark's single-distinct rewrite added exchanges on
-    * (dims, client) and (dims)); this shuffles once, and the distinct
-    * counts cost no Expand and no extra exchange at any scale — the
-    * executor-side hash maps stay bounded by the per-partition slice of
-    * (contract × time), the same working set the r2 pre-aggregate had. */
+    * The exact distinct counts thus cost no Expand and no extra exchange
+    * at any scale, and the executor-side hash maps stay bounded by the
+    * per-partition slice of (contract × time). Empty groups never
+    * materialize: a hash aggregate only creates touched groups (the
+    * reference needs its `!= 0` filter only because its dense array
+    * pre-materializes all 3.1 M slots, `ETL.java:265`).
+    *
+    * Output contract — ordered partitions: the cube comes out split into
+    * partitions that are each sorted by (geo, type, misc, nature, time)
+    * and hold disjoint, ascending key ranges, so reading the partitions
+    * in index order (`collect()`, the part files of [[writeCsv]]) yields
+    * the reference's total order (`ETL.java:259-264`). The packed plan
+    * gets there with no sampling pass ([[packedPlan]]); the generic
+    * fallback uses a range-partitioned `orderBy`, which has the same
+    * partition-order property. */
   def hypercube(clients: DataFrame, contracts: DataFrame, invoices: DataFrame,
       amountMode: AmountMode = ReferenceExact,
       broadcastDim: Boolean = false): DataFrame = {
@@ -188,21 +181,6 @@ object ReferenceHypercube {
       .orderBy(dims: _*)
   }
 
-  /** Bit-packed variant of [[chainedPlan]] — same three levels, but the
-    * grouping keys are packed into single longs so each hash-aggregate
-    * pass hashes/compares 2–3 numeric fields instead of 5–7 (measured
-    * ~2× on the aggregation stages, which dominate at reference scale):
-    *
-    *   - `g`  = geo‖type‖misc‖nature, power-of-two strides (pure
-    *     shifts/ors — no overflow, order-preserving, bijective);
-    *   - `cc` = client‖contract; the level-2 client key is `cc >>`
-    *     the contract bit width.
-    *
-    * The bit widths come from a one-off aggregate over the (broadcastable,
-    * hence tiny) dim table — the same cheap statistics pass any
-    * cost-based planner runs. Returns None (→ generic fallback) when the
-    * dim has NULL or negative keys or the packed widths overflow a long;
-    * `time` stays unpacked, so fact-side values are unconstrained. */
   /** Driver-side memo of the dim-statistics row — the stats job is
     * deterministic for a given input, and callers (bench loops, retries)
     * rebuild the same plan many times. Same spirit as Spark's own
@@ -249,6 +227,32 @@ object ReferenceHypercube {
       count(col("geo")) + count(col("type")) + count(col("misc")) +
         count(col("nature")) + count(col("client")) + count(col("contract_id"))).head()
 
+  /** Bit-packed variant of [[chainedPlan]] — same three levels, but the
+    * grouping keys are packed into single longs so each hash-aggregate
+    * pass hashes/compares 2–3 numeric fields instead of 5–7 (measured
+    * ~2× on the aggregation stages, which dominate at reference scale):
+    *
+    *   - `g`  = geo‖type‖misc‖nature, power-of-two strides (pure
+    *     shifts/ors — no overflow, order-preserving, bijective);
+    *   - `cc` = client‖contract; the level-2 client key is `cc >>`
+    *     the contract bit width.
+    *
+    * The bit widths come from a one-off aggregate over the (broadcastable,
+    * hence tiny) dim table — the same cheap statistics pass any
+    * cost-based planner runs. Returns None (→ generic fallback) when the
+    * dim has NULL or negative keys or the packed widths overflow a long;
+    * `time` stays unpacked, so fact-side values are unconstrained.
+    *
+    * Ordering without sampling: the same statistics bound every `g` to
+    * `[lo, hi]` (the packed mins and maxes), so `pid = (g - lo) div w`
+    * with `w = (hi - lo) / parts + 1` is a monotone bucket of `g` in
+    * `[0, parts)`, `parts` = `spark.sql.shuffle.partitions` — long
+    * arithmetic on values below 2^62, no overflow. Shuffling the cube by
+    * `pid` (`repartitionById`) and sorting each partition by (g, time)
+    * yields ordered partitions (see [[hypercube]]) in one exchange and
+    * one parallel sort. A global `orderBy` would instead run the three
+    * aggregate levels a second time, for the range partitioner's
+    * sample. */
   private def packedPlan(dim: DataFrame, joined: DataFrame): Option[DataFrame] = {
     val s = dimStatsCached(dim)
     val n = s.getLong(12)
@@ -279,6 +283,12 @@ object ReferenceHypercube {
       .bitwiseOR(pk("nature"))
     val cc = shiftleft(pk("client"), bContract).bitwiseOR(pk("contract"))
     def mask(b: Int): Long = (1L << b) - 1
+    def pack(geo: Long, tpe: Long, misc: Long, nature: Long): Long =
+      geo << (bType + bMisc + bNature) | tpe << (bMisc + bNature) | misc << bNature | nature
+    val lo = pack(mins(0), mins(1), mins(2), mins(3))
+    val hi = pack(maxes(0), maxes(1), maxes(2), maxes(3))
+    val parts = joined.sparkSession.sessionState.conf.numShufflePartitions
+    val pid = call_function("div", col("g") - lit(lo), lit((hi - lo) / parts + 1)).cast("int")
     Some(joined
       .select(g.as("g"), col("time"), cc.as("cc"), col("consumption"), col("amt"))
       .repartition(col("g"), col("time"))
@@ -302,7 +312,8 @@ object ReferenceHypercube {
         count(lit(1)).as("nclients"),
         sum("pre_ncontr").as("ncontrats"),
         sum("pre_ninv").as("ninvoices"))
-      .orderBy("g", "time") // order-preserving packing ⇒ same order as the 5 dims
+      .repartitionById(parts, pid)
+      .sortWithinPartitions("g", "time") // order-preserving packing ⇒ same order as the 5 dims
       .select(
         shiftright(col("g"), bType + bMisc + bNature).cast(geoT).as("geo"),
         shiftright(col("g"), bMisc + bNature).bitwiseAND(lit(mask(bType))).cast(typeT).as("type"),
@@ -339,6 +350,23 @@ object ReferenceHypercube {
       broadcastDim = dimBytes <= BroadcastDimMaxCsvBytes)
   }
 
+  /** Folder of the reference's `data-sample` (`clients.csv`,
+    * `contracts.csv`, `invoices.bin`, `invoices.csv`), which the golden
+    * tests and the q10/q11/q63 entries read: the one setting
+    * `SPARK_GRAFT_REFERENCE_DIR`, by default `~/reference/data-sample`.
+    * Absolute, because the oracle SQL embeds it and DuckDB runs from
+    * another working directory. Not checked — [[referenceSample]] is. */
+  val referenceDir: String = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REFERENCE_DIR",
+    s"${sys.props("user.home")}/reference/data-sample")).getAbsolutePath
+
+  /** [[referenceDir]], failing with one clear message when it is missing. */
+  def referenceSample(): String = {
+    if (!new java.io.File(referenceDir).isDirectory)
+      throw new java.io.FileNotFoundException(
+        s"reference sample missing at $referenceDir (set SPARK_GRAFT_REFERENCE_DIR)")
+    referenceDir
+  }
+
   /** Staged-fingerprint oracle root for q10/q11 (round-14 upgrade —
     * the q110 convention, applied to the binary fact): DuckDB cannot
     * read the 16-byte big-endian format, but the DSv2 decode is
@@ -357,7 +385,7 @@ object ReferenceHypercube {
   /** Write-once staged decode of the reference's `invoices.bin`
     * (contract, time, amount DECIMAL(20,10), consumption). */
   private[graft] def invoicesStaged(spark: SparkSession): String = {
-    val bin = "/root/reference/data-sample/invoices.bin"
+    val bin = s"${referenceSample()}/invoices.bin"
     val out = "target/reference/graft_invbin_" + Bucketed.md5hex(
       s"$bin/v1/${Layout.contentKey(spark, bin)}").take(8)
     Staging.ensure(spark, out) { tmp =>
@@ -379,15 +407,51 @@ object ReferenceHypercube {
     regexp_replace(format_string("%.2f", round(c, 2)), "^(-?)0\\.", "$1.")
 
   /** S4: CSV sink with the reference's header, row order and amount
-    * rendering (reference `ETL.java:254-270`). `singleFile = true`
-    * reproduces the reference's one-ordered-file contract via
-    * `coalesce(1)` — fine at reference scale, a driver bottleneck at
-    * 100 TB; `singleFile = false` keeps the global sort but writes one
-    * file per partition (rows remain totally ordered across the
-    * lexicographically-named part files). */
+    * rendering (reference `ETL.java:254-270`) for a cube with ordered
+    * partitions (see [[hypercube]]).
+    *
+    * `singleFile = false` writes one headed file per partition, in
+    * parallel; the rows are totally ordered across the part files taken
+    * in partition-index order.
+    *
+    * `singleFile = true` reproduces the reference's one ordered file: the
+    * partitions are written in parallel without headers into a temporary
+    * `_parts` directory under `outPath`, then the driver concatenates
+    * them through the Hadoop `FileSystem` API into `outPath/part-00000.csv`
+    * — the header once, then the parts ordered numerically by the
+    * partition index and file counter in their names — and deletes the
+    * temporary directory. The copy is bounded by the cube's size (at most
+    * 3,121,200 rows, `ETL.java:33-35`), not by the fact's. An existing
+    * `outPath` is replaced. */
   def writeCsv(cube: DataFrame, outPath: String, singleFile: Boolean = true): Unit = {
     val formatted = cube.withColumn("amount", refAmountFormat(col("amount")))
-    (if (singleFile) formatted.coalesce(1) else formatted)
-      .write.mode("overwrite").option("header", "true").csv(outPath)
+    if (!singleFile) formatted.write.mode("overwrite").option("header", "true").csv(outPath)
+    else {
+      val out = new Path(outPath)
+      val fs = out.getFileSystem(cube.sparkSession.sparkContext.hadoopConfiguration)
+      val tmp = new Path(out, "_parts")
+      fs.delete(out, true)
+      try {
+        formatted.write.option("header", "false").csv(tmp.toString)
+        val parts = fs.listStatus(tmp).map(_.getPath).filter(_.getName.startsWith("part-"))
+          .map(p => p.getName match {
+            case PartFile(index, counter) => ((index.toInt, counter.toInt), p)
+            case name => throw new IllegalStateException(s"unexpected CSV part file name $name")
+          }).sortBy(_._1).map(_._2)
+        val sink = fs.create(new Path(out, "part-00000.csv"))
+        try {
+          sink.write((formatted.columns.mkString(",") + "\n").getBytes(StandardCharsets.UTF_8))
+          parts.foreach { p =>
+            val in = fs.open(p)
+            try IOUtils.copyBytes(in, sink, 1 << 20, false) finally in.close()
+          }
+        } finally sink.close()
+        // written last: marks the concatenated file complete
+        fs.create(new Path(out, "_SUCCESS")).close()
+      } finally fs.delete(tmp, true)
+    }
   }
+
+  /** Spark's part-file name: `part-<partition index>-<job uuid>-c<file counter>.<ext>`. */
+  private val PartFile = """part-(\d+)-.*-c(\d+)\..*""".r
 }

@@ -446,7 +446,7 @@ object Relational {
       (s, _) => {
         ReferenceHypercube.binOracleRoot = Some(
           new java.io.File(ReferenceHypercube.invoicesStaged(s)).getAbsolutePath)
-        FixedWidthBinary.invoices(s, "/root/reference/data-sample/invoices.bin")
+        FixedWidthBinary.invoices(s, s"${ReferenceHypercube.referenceSample()}/invoices.bin")
           .agg(
             count(lit(1)).as("n_records"),
             sum("consumption").as("sum_consumption"),
@@ -474,7 +474,7 @@ object Relational {
         "accumulation contract stays golden-gated on fromFolder/EtlMain in " +
         "ReferenceParitySpec).",
       (s, _) => {
-        val folder = "/root/reference/data-sample"
+        val folder = ReferenceHypercube.referenceSample()
         val root = ReferenceHypercube.invoicesStaged(s)
         ReferenceHypercube.binOracleRoot =
           Some(new java.io.File(root).getAbsolutePath)
@@ -490,11 +490,11 @@ object Relational {
         WITH i AS (
           SELECT * FROM read_parquet('$root/fact/*.parquet')
         ), k AS (
-          SELECT * FROM read_csv('/root/reference/data-sample/contracts.csv', header=true,
+          SELECT * FROM read_csv('${ReferenceHypercube.referenceDir}/contracts.csv', header=true,
             columns={'id':'INTEGER','id_client':'INTEGER','nature':'INTEGER',
                      'start':'INTEGER','end':'INTEGER'})
         ), c AS (
-          SELECT * FROM read_csv('/root/reference/data-sample/clients.csv', header=true,
+          SELECT * FROM read_csv('${ReferenceHypercube.referenceDir}/clients.csv', header=true,
             columns={'id':'INTEGER','type':'INTEGER','geo':'INTEGER','misc':'INTEGER'})
         )
         SELECT c.geo, c.type, c.misc, k.nature, i."time",
@@ -520,7 +520,7 @@ object Relational {
         "result row-hash-compares against DuckDB — upgrading reference parity from " +
         "golden-total checks to a per-row differential.",
       (s, _) => {
-        val folder = "/root/reference/data-sample"
+        val folder = ReferenceHypercube.referenceSample()
         // schema-first like the other reference scans; amount as exact
         // DECIMAL (the CSV carries full-precision decimal strings — both
         // engines parse the string exactly, no float round-trip)
@@ -541,17 +541,17 @@ object Relational {
           // decimal-exact sum rendered as double for engine-portable hashing
           .withColumn("amount", col("amount").cast("double"))
       },
-      Some("""
+      Some(s"""
         WITH i AS (
-          SELECT * FROM read_csv('/root/reference/data-sample/invoices.csv', header=true,
+          SELECT * FROM read_csv('${ReferenceHypercube.referenceDir}/invoices.csv', header=true,
             columns={'id':'INTEGER','id_contract':'INTEGER','time':'INTEGER',
                      'amount':'DECIMAL(20,10)','consumption':'INTEGER'})
         ), k AS (
-          SELECT * FROM read_csv('/root/reference/data-sample/contracts.csv', header=true,
+          SELECT * FROM read_csv('${ReferenceHypercube.referenceDir}/contracts.csv', header=true,
             columns={'id':'INTEGER','id_client':'INTEGER','nature':'INTEGER',
                      'start':'INTEGER','end':'INTEGER'})
         ), c AS (
-          SELECT * FROM read_csv('/root/reference/data-sample/clients.csv', header=true,
+          SELECT * FROM read_csv('${ReferenceHypercube.referenceDir}/clients.csv', header=true,
             columns={'id':'INTEGER','type':'INTEGER','geo':'INTEGER','misc':'INTEGER'})
         )
         SELECT c.geo, c.type, c.misc, k.nature, i."time",

@@ -4,13 +4,14 @@ import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,9 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * What V2 buys over the `binaryRecords` RDD path:
   *   - **splits + statistics reported to Catalyst**: record-aligned input
-  *     partitions of a declared target size, and exact `sizeInBytes` /
-  *     `numRows` estimates (`SupportsReportStatistics`) so join-strategy
-  *     and AQE decisions see real numbers instead of defaults;
+  *     partitions sized by Spark's own file-source rule ([[splitBytes]]),
+  *     so a file fans out over every core like a parquet or CSV scan of
+  *     the same bytes would, and exact `sizeInBytes` / `numRows`
+  *     estimates (`SupportsReportStatistics`) so join-strategy and AQE
+  *     decisions see real numbers instead of defaults;
   *   - **column pruning pushdown** (`SupportsPushDownRequiredColumns`):
   *     un-projected fields are never decoded — the byte offsets are
   *     skipped, mirroring the reference's positional pruning
@@ -34,7 +37,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage: `spark.read.format(classOf[FixedWidthBinaryV2].getName)
   * .option("layout", "skip:4,i32:contract,i8:time,f32:amount,i16:consumption,skip:1")
-  * .load(path)`.
+  * .load(path)`. An explicit `.option("targetSplitBytes", n)` replaces the
+  * split rule with `n` bytes (rounded down to whole records).
   */
 class FixedWidthBinaryV2 extends TableProvider {
   import FixedWidthBinaryV2._
@@ -135,6 +139,33 @@ object FixedWidthBinaryV2 {
     out.result()
   }
 
+  /** The one file a scan reads. Fails loudly on a directory: its inode
+    * "length" is meaningless and would silently plan an empty/garbage scan
+    * (globs never resolve to a status and already throw). Multi-file
+    * layouts would need a listing + per-file partition planning — a
+    * contract widening, not a silent fallback. */
+  private def fileStatus(spark: SparkSession, path: String): FileStatus = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    require(st.isFile,
+      s"FixedWidthBinaryV2 reads a single record-aligned file; $path is a directory")
+    st
+  }
+
+  /** Bytes per split a scan of `path` (records of `recLen` bytes) plans
+    * when no `targetSplitBytes` option is given: Spark's own file-source
+    * rule (`FilePartition.maxSplitBytes`), `min(files.maxPartitionBytes,
+    * max(files.openCostInBytes, (bytes + openCost) / parallelism))` with
+    * parallelism = `files.minPartitionNum`, else the leaf-node default
+    * parallelism — rounded down to whole records, at least one. A file
+    * larger than `openCost × parallelism` thus gets at least one split
+    * per core, and no split exceeds `maxPartitionBytes`. */
+  def splitBytes(spark: SparkSession, path: String, recLen: Int): Long = {
+    val dir = PartitionDirectory(InternalRow.empty,
+      Seq(FileStatusWithMetadata(fileStatus(spark, path))))
+    math.max(1L, FilePartition.maxSplitBytes(spark, Seq(dir)) / recLen) * recLen
+  }
+
   private final class FwbTable(options: CaseInsensitiveStringMap) extends Table with SupportsRead {
     val layout: Seq[Field] = parseLayout(layoutOf(options))
     val path: String = {
@@ -155,30 +186,18 @@ object FixedWidthBinaryV2 {
     private var required: StructType = table.schema()
     override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
     override def build(): Scan = {
-      val splitBytes = math.max(1L, options.getLong("targetSplitBytes", 16L * 1024 * 1024))
-      new FwbScan(table, required, splitBytes)
+      val explicit = Option(options.get("targetSplitBytes")).map(b => math.max(1L, b.toLong))
+      new FwbScan(table, required, explicit)
     }
   }
 
   private final case class FwbPartition(path: String, startByte: Long, numRecords: Long)
       extends InputPartition
 
-  private final class FwbScan(table: FwbTable, required: StructType, targetSplitBytes: Long)
-      extends Scan with Batch with SupportsReportStatistics {
+  private final class FwbScan(table: FwbTable, required: StructType,
+      targetSplitBytes: Option[Long]) extends Scan with Batch with SupportsReportStatistics {
     private val recLen = recordLength(table.layout)
-    private lazy val fileLen: Long = {
-      val conf = SparkSession.active.sparkContext.hadoopConfiguration
-      val p = new Path(table.path)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      // fail loudly on a directory: its inode "length" is meaningless and
-      // would silently plan an empty/garbage scan (globs never resolve to
-      // a status and already throw). Multi-file layouts would need a
-      // listing + per-file partition planning — a contract widening, not
-      // a silent fallback.
-      require(st.isFile,
-        s"FixedWidthBinaryV2 reads a single record-aligned file; ${table.path} is a directory")
-      st.getLen
-    }
+    private lazy val fileLen: Long = fileStatus(SparkSession.active, table.path).getLen
     private def totalRecords: Long = fileLen / recLen // trailing partial record dropped
 
     override def readSchema(): StructType = required
@@ -192,7 +211,8 @@ object FixedWidthBinaryV2 {
 
     override def planInputPartitions(): Array[InputPartition] = {
       val total = totalRecords
-      val recsPerSplit = math.max(1L, targetSplitBytes / recLen)
+      val recsPerSplit = math.max(1L, targetSplitBytes.getOrElse(
+        splitBytes(SparkSession.active, table.path, recLen)) / recLen)
       val nSplits64 = (total + recsPerSplit - 1) / recsPerSplit
       // a silent .toInt wrap (huge file + tiny targetSplitBytes) would
       // plan a negative/empty split range and read NOTHING — fail loudly

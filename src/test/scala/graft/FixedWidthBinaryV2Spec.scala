@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{FixedWidthBinary => FWB, FixedWidthBinaryV2}
 
 /** DataSource V2 fixed-width binary source: decode exactness, split
-  * planning, column-pruning pushdown, reported statistics, trailing
-  * partial-record handling. */
+  * planning (Spark's rule by default, `targetSplitBytes` when given),
+  * column-pruning pushdown, reported statistics, trailing partial-record
+  * handling. */
 class FixedWidthBinaryV2Spec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -56,6 +57,29 @@ class FixedWidthBinaryV2Spec extends AnyFunSuite {
     assert(df.rdd.getNumPartitions === 5)
     assert(df.count() === 10)
     assert(df.select("a").collect().map(_.getInt(0)).sorted.toSeq === (0 until 10))
+  }
+
+  test("default splits follow Spark's file-source rule: at least one per core, " +
+      "record-aligned, none above maxPartitionBytes") {
+    val cores = spark.sparkContext.defaultParallelism
+    val openCost = 1200
+    val n = 250 * cores // 3,000 bytes a core: the file outgrows openCost × cores
+    val f = Files.createTempDirectory("fwb-rule").resolve("t.bin").toFile
+    val out = new DataOutputStream(new FileOutputStream(f))
+    (0 until n).foreach { i => out.writeInt(i); out.writeShort(0); out.writeShort(i); out.writeInt(0) }
+    out.close()
+    assert(f.length() > openCost.toLong * cores)
+    for (maxBytes <- Seq(128L << 20, 1000L)) // the per-core share binds, then the cap
+      SparkTestSession.withConf("spark.sql.files.openCostInBytes" -> openCost.toString,
+          "spark.sql.files.maxPartitionBytes" -> maxBytes.toString) {
+        val df = FWB.read(spark, f.getAbsolutePath, layout)
+        val perSplit = df.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+        assert(perSplit.size >= cores)
+        assert(perSplit.forall(_ * 12L <= maxBytes))
+        assert(perSplit.sum === n)
+        assert(FixedWidthBinaryV2.splitBytes(spark, f.getAbsolutePath, 12) === perSplit.head * 12L)
+        assert(df.select("a").collect().map(_.getInt(0)).sorted.toSeq === (0 until n))
+      }
   }
 
   test("statistics report exact file size and row count to Catalyst") {

@@ -6,12 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.ReferenceHypercube
 import graft.sources.FixedWidthBinary
 
-/** Golden tests against the reference's own data-sample, values from
+/** Golden tests against the reference's own data-sample
+  * ([[ReferenceHypercube.referenceDir]]), values from
   * FIXTURES.md §1 (independently computed simulation of the reference
   * semantics over invoices.bin's 58,176 records). */
 class ReferenceParitySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  private val sample = "/root/reference/data-sample"
+  /** Each test fails with "reference sample missing at …" when the
+    * folder `SPARK_GRAFT_REFERENCE_DIR` names does not exist. */
+  private lazy val sample = ReferenceHypercube.referenceSample()
 
   private lazy val cube = ReferenceHypercube.fromFolder(spark, sample).cache()
 

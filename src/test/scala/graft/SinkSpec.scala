@@ -17,7 +17,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("writeCsv round-trip matches the reference output contract") {
     val out = "target/test-out/cube_csv"
-    val cube = ReferenceHypercube.fromFolder(spark, "/root/reference/data-sample")
+    val cube = ReferenceHypercube.fromFolder(spark, ReferenceHypercube.referenceSample())
     ReferenceHypercube.writeCsv(cube, out, singleFile = true)
 
     val parts = Files.list(Paths.get(out)).iterator().asScala
@@ -41,6 +41,43 @@ class SinkSpec extends AnyFunSuite {
     assert(keys === keys.sorted)
   }
 
+  /** A generated folder of the reference sample's shape. */
+  private lazy val generated: String = {
+    val dir = Files.createTempDirectory("sink-sample").toString
+    RefScale.generate(dir, RefScale.Sample)
+    dir
+  }
+
+  /** Entries directly under `dir`, by name. */
+  private def entries(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    Files.list(dir).iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+  private def partFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    entries(dir).filter(_.getFileName.toString.startsWith("part-"))
+
+  test("writeCsv(singleFile = true) of an empty cube writes a header-only single file") {
+    val out = Files.createTempDirectory("sink-empty").resolve("cube")
+    val empty = ReferenceHypercube.hypercube(
+      ReferenceHypercube.clients(spark, s"$generated/clients.csv"),
+      ReferenceHypercube.contracts(spark, s"$generated/contracts.csv"),
+      ReferenceHypercube.invoices(spark, s"$generated/invoices.bin").limit(0),
+      broadcastDim = true)
+    ReferenceHypercube.writeCsv(empty, out.toString, singleFile = true)
+    assert(partFiles(out).size === 1)
+    assert(Files.readAllLines(partFiles(out).head).asScala.toSeq === Seq(EtlTwin.Header))
+  }
+
+  test("writeCsv(singleFile = true) replaces an existing outPath and leaves no " +
+      "temporary part directory") {
+    val out = Files.createTempDirectory("sink-overwrite").resolve("cube")
+    val cube = ReferenceHypercube.fromFolder(spark, generated)
+    ReferenceHypercube.writeCsv(cube, out.toString, singleFile = false) // several headed parts
+    assert(partFiles(out).size > 1)
+    ReferenceHypercube.writeCsv(cube, out.toString, singleFile = true)
+    assert(partFiles(out).size === 1)
+    assert(Files.readAllLines(partFiles(out).head).asScala.toVector === EtlTwin.csvLines(generated))
+    assert(!entries(out).exists(Files.isDirectory(_)), entries(out).mkString(", "))
+  }
+
   test("refAmountFormat matches DecimalFormat('#.00') for |x| < 1") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -55,7 +92,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("SQL-exact amount mode (M3): decimal sums agree with double mode to the cent") {
     import org.apache.spark.sql.types.DecimalType
-    val sample = "/root/reference/data-sample"
+    val sample = ReferenceHypercube.referenceSample()
     val mk = (m: ReferenceHypercube.AmountMode) => ReferenceHypercube.hypercube(
       ReferenceHypercube.clients(spark, s"$sample/clients.csv"),
       ReferenceHypercube.contracts(spark, s"$sample/contracts.csv"),
