@@ -77,11 +77,11 @@ object EtlMain {
     }
   }
 
-  /** The `-l 1` twin: same answer as the default path (the staged
-    * pipeline feeds the SAME `hypercube`/`writeCsv` code, just from
-    * pre-materialized inputs — asserted byte-identical in
-    * ReferenceParitySpec), with per-stage wall times measured across
-    * eager materialization boundaries. */
+  /** The `-l 1` twin: the default path's plan — `hypercube` with the
+    * same [[ReferenceHypercube.smallDims]] broadcast gate as `fromFolder`,
+    * then `writeCsv` — over pre-materialized dims, with per-stage wall
+    * times measured across eager materialization boundaries. Both paths
+    * write the same CSV (HypercubeDifferentialSpec). */
   private def runStaged(spark: SparkSession, dataFolder: String,
       outDir: String, singleFile: Boolean): Unit = {
     val times = new Array[Long](6)
@@ -99,7 +99,8 @@ object EtlMain {
         .localCheckpoint(true))
     val cube = timed(2)(
       ReferenceHypercube.hypercube(cl, co,
-        ReferenceHypercube.invoices(spark, s"$dataFolder/invoices.bin"))
+        ReferenceHypercube.invoices(spark, s"$dataFolder/invoices.bin"),
+        broadcastDim = ReferenceHypercube.smallDims(spark, dataFolder))
         .localCheckpoint(true))
     // t3/t4 = 0: the fused hash aggregate computed both exact
     // distincts inside t2 — see the object doc

@@ -39,18 +39,6 @@ object GraftSession {
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "zstd"))
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The audited bounded global windows carry a constant partition
-      // key (`partitionBy(lit(0))` — one partition by DESIGN, over
-      // frames bounded by construction; see the r17 window audit).
-      // Spark 4's EliminateWindowPartitions folds foldable partition
-      // keys away again, which re-empties the partition spec and makes
-      // WindowExec warn "No Partition Defined" on every such site at
-      // runtime. Excluding the rule keeps the declared constant key in
-      // the plan: the executed exchange is the same single partition
-      // either way, but the spec stays visibly bounded and the
-      // spurious warning is gone.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
       .config("spark.ui.enabled", "false")
 
   /** Session for the driver-facing mains: `local[$SPARK_GRAFT_CPUS]`.

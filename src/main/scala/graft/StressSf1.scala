@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, DupClusters, SemanticDedup, Shards, Similarity, TrainingPipeline, Vocab}
+import graft.operators.{Dedup, DupClusters, SemanticDedup, Shards, Similarity, Staging,
+  TrainingPipeline, Vocab}
 import graft.sources.Tables
 
 /** 10× stress run for the dedup/similarity family (q17 MinHash-LSH, q22
@@ -118,34 +119,34 @@ object StressSf1 {
   }
 
   private val sfDir = "/root/testdata/sf0.1"
-  // stride- and schema-keyed: a change must invalidate the cached corpus
-  // (v3: events carry event_id/event_type, customer carries c_acctbal,
-  // lineitem offsets l_partkey, orders/part corpora added — round 11)
-  private val stressRoot = s"target/stress_sf1_s${IdStride}_v4"
 
-  /** Idempotently build + return the 10× embeddings corpus path — shared
-    * with [[Recall]]'s 10×-tier frontier sweep (round-10: the sf0.1
-    * frontier latencies are fixed-overhead-dominated; the 10× corpus is
-    * where probe width has a measurable cost). */
-  private[graft] def ensureStressEmbeddings(
-      spark: org.apache.spark.sql.SparkSession): String = {
-    val embStressPath = s"$stressRoot/embeddings.parquet"
-    if (!Files.exists(Paths.get(embStressPath, "_SUCCESS")))
-      buildEmbCorpus(spark,
-        Tables.embeddings(spark, sfDir)
-          .select("vec_id", "embedding", "label"),
-        embStressPath)
-    embStressPath
+  /** `table` at `copies`× the sf0.1 base, staged once as
+    * `<root>/<table>.parquet` by `build(path)`; returns that path. The
+    * root doubles as a table folder holding the one table. */
+  private def stressTable(spark: org.apache.spark.sql.SparkSession, table: String,
+      copies: Int = Copies)(build: String => Unit): String = {
+    val root = Staging.stage(spark,
+        Staging.Key(s"stress/$table", Seq(s"$sfDir/$table.parquet"), copies)) { tmp =>
+      build(s"$tmp/$table.parquet")
+    }
+    s"$root/$table.parquet"
   }
+
+  /** The 10× embeddings corpus path — shared with [[Recall]]'s 10×-tier
+    * frontier sweep (the sf0.1 frontier latencies are
+    * fixed-overhead-dominated; the 10× corpus is where probe width has a
+    * measurable cost). */
+  private[graft] def ensureStressEmbeddings(
+      spark: org.apache.spark.sql.SparkSession): String =
+    stressTable(spark, "embeddings")(buildEmbCorpus(spark,
+      Tables.embeddings(spark, sfDir).select("vec_id", "embedding", "label"), _))
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local("graft-stress-sf1")
     val base = Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang", "n_chars")
     val embBase = Tables.embeddings(spark, sfDir).select("vec_id", "embedding", "label")
-    val stressPath = s"$stressRoot/documents.parquet"
-    if (!Files.exists(Paths.get(stressPath, "_SUCCESS")))
-      buildCorpus(spark, base, stressPath)
+    val stressPath = stressTable(spark, "documents")(buildCorpus(spark, base, _))
     val embStressPath = ensureStressEmbeddings(spark)
     val stress = spark.read.parquet(stressPath)
     val embStress = spark.read.parquet(embStressPath)
@@ -155,15 +156,13 @@ object StressSf1 {
     // the five largest-marginal rows carry the extra tier — the fit
     // residual at the mid point is the check, reported per row.
     val MidCopies = 4
-    val midPath = s"$stressRoot/documents_mid$MidCopies.parquet"
-    if (!Files.exists(Paths.get(midPath, "_SUCCESS")))
-      buildCorpus(spark, base, midPath, copies = MidCopies)
+    val midPath = stressTable(spark, "documents", MidCopies)(
+      buildCorpus(spark, base, _, copies = MidCopies))
     val docsMid = spark.read.parquet(midPath)
     // mid-tier embeddings (round-12 verdict task 6: the graph family's
     // (1, 10) fits were untested between the endpoints)
-    val embMidPath = s"$stressRoot/embeddings_mid$MidCopies.parquet"
-    if (!Files.exists(Paths.get(embMidPath, "_SUCCESS")))
-      buildEmbCorpus(spark, embBase, embMidPath, copies = MidCopies)
+    val embMidPath = stressTable(spark, "embeddings", MidCopies)(
+      buildEmbCorpus(spark, embBase, _, copies = MidCopies))
     val embMid = spark.read.parquet(embMidPath)
 
     // lineitem at 10x under remapped order AND part keys: the key
@@ -172,8 +171,7 @@ object StressSf1 {
     // with the 10x orders/part tables below so dq violations replicate
     // per family) while value columns replicate verbatim — the
     // realistic wide-table mix for the all-columns profile (q83)
-    val liStressPath = s"$stressRoot/lineitem.parquet"
-    if (!Files.exists(Paths.get(liStressPath, "_SUCCESS"))) {
+    val liStressPath = stressTable(spark, "lineitem") { path =>
       val liBase = Tables.lineitem(spark, sfDir)
       (0 until Copies).map { k =>
         if (k == 0) liBase
@@ -182,7 +180,7 @@ object StressSf1 {
           .withColumn("l_partkey", col("l_partkey") + lit(k * IdStride))
       }.reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(liStressPath)
+        .write.mode("overwrite").parquet(path)
     }
     val liStress = spark.read.parquet(liStressPath)
 
@@ -190,8 +188,7 @@ object StressSf1 {
     // verbatim): the FK parents of the 10x lineitem — each family is a
     // self-consistent replica, so q113's orphan/temporal violation
     // counts are exactly 10x the base audit's
-    val ordStressPath = s"$stressRoot/orders.parquet"
-    if (!Files.exists(Paths.get(ordStressPath, "_SUCCESS"))) {
+    val ordStressPath = stressTable(spark, "orders") { path =>
       val oBase = Tables.orders(spark, sfDir)
       (0 until Copies).map { k =>
         if (k == 0) oBase
@@ -200,18 +197,17 @@ object StressSf1 {
           .withColumn("o_custkey", col("o_custkey") + lit(k * IdStride))
       }.reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(ordStressPath)
+        .write.mode("overwrite").parquet(path)
     }
     val ordStress = spark.read.parquet(ordStressPath)
-    val partStressPath = s"$stressRoot/part.parquet"
-    if (!Files.exists(Paths.get(partStressPath, "_SUCCESS"))) {
+    val partStressPath = stressTable(spark, "part") { path =>
       val pBase = Tables.part(spark, sfDir)
       (0 until Copies).map { k =>
         if (k == 0) pBase
         else pBase.withColumn("p_partkey", col("p_partkey") + lit(k * IdStride))
       }.reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(partStressPath)
+        .write.mode("overwrite").parquet(path)
     }
     val partStress = spark.read.parquet(partStressPath)
 
@@ -220,8 +216,7 @@ object StressSf1 {
     // cross-family pairs — a 1-char suffix would plant dist-1 pairs
     // between families), so edit-join pairs replicate per family ->
     // rows exactly 10x
-    val custStressPath = s"$stressRoot/customer.parquet"
-    if (!Files.exists(Paths.get(custStressPath, "_SUCCESS"))) {
+    val custStressPath = stressTable(spark, "customer") { path =>
       val cBase = Tables.customer(spark, sfDir)
         .select("c_custkey", "c_name", "c_acctbal")
       (0 until Copies).map { k =>
@@ -232,15 +227,14 @@ object StressSf1 {
           col("c_acctbal"))
       }.reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(custStressPath)
+        .write.mode("overwrite").parquet(path)
     }
     val custStress = spark.read.parquet(custStressPath)
 
     // customer at MidCopies for the q118 three-point fit (round-17:
     // the merge row's (1,10) fit had floor_frac 0.63 with no residual
     // check between the endpoints — r16 verdict item 4)
-    val custMidPath = s"$stressRoot/customer_mid$MidCopies.parquet"
-    if (!Files.exists(Paths.get(custMidPath, "_SUCCESS"))) {
+    val custMidPath = stressTable(spark, "customer", MidCopies) { path =>
       val cBase = Tables.customer(spark, sfDir)
         .select("c_custkey", "c_name", "c_acctbal")
       (0 until MidCopies).map { k =>
@@ -251,15 +245,14 @@ object StressSf1 {
           col("c_acctbal"))
       }.reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(custMidPath)
+        .write.mode("overwrite").parquet(path)
     }
     val custMid = spark.read.parquet(custMidPath)
 
     // events at 10x under disjoint user families (ts/event_type
     // verbatim, event_id offset to stay unique): each family replays
     // the base per-user series -> spike rows AND SCD-2 version rows 10x
-    val evStressPath = s"$stressRoot/events.parquet"
-    if (!Files.exists(Paths.get(evStressPath, "_SUCCESS"))) {
+    val evStressPath = stressTable(spark, "events") { path =>
       val eBase = Tables.events(spark, sfDir)
         .select("user_id", "ts", "event_id", "event_type")
       (0 until Copies).map { k =>
@@ -269,7 +262,7 @@ object StressSf1 {
           .withColumn("event_id", col("event_id") + lit(k * IdStride))
       }.reduce(_ unionByName _)
         .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(evStressPath)
+        .write.mode("overwrite").parquet(path)
     }
     val evStress = spark.read.parquet(evStressPath)
 
@@ -536,16 +529,12 @@ object StressSf1 {
     // content-keyed sf0.1 index), both ensured untimed — the q126 row
     // measures the pruned-scan query, not the build
     val bm25SfRoot = operators.TextIndex.bm25Index(spark, sfDir)
-    val bm25StressRoot = {
-      val out = s"$stressRoot/text_bm25"
-      operators.Staging.ensure(spark, out) { tmp =>
+    val bm25StressRoot =
+      Staging.stage(spark, Staging.Key("stress/text_bm25", Seq(stressPath))) { tmp =>
         operators.TextIndex.writeIndexSegment(stress, tmp)
       }
-      out
-    }
-    val annStressRoot = {
-      val out = s"$stressRoot/ann_ivf"
-      operators.Staging.ensure(spark, out) { tmp =>
+    val annStressRoot =
+      Staging.stage(spark, Staging.Key("stress/ann_ivf", Seq(embStressPath))) { tmp =>
         val e = Similarity.prepared(embStress)
         val cent = Similarity.ivfCentroids(e, 256, 3)
         cent.write.mode("overwrite").parquet(s"$tmp/centroids")
@@ -553,20 +542,15 @@ object StressSf1 {
           .write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/lists")
         cent.unpersist()
       }
-      out
-    }
 
     // ORC copies of both document tiers, staged untimed like the
     // indexes — the q128 row measures the pushed-down scan, not the
     // one-time format conversion
     val orcSfRoot = operators.Layout.orcDocuments(spark, sfDir)
-    val orcStressRoot = {
-      val out = s"$stressRoot/docs_orc"
-      operators.Staging.ensure(spark, out) { tmp =>
+    val orcStressRoot =
+      Staging.stage(spark, Staging.Key("stress/docs_orc", Seq(stressPath))) { tmp =>
         stress.write.mode("overwrite").orc(tmp)
       }
-      out
-    }
 
     // the composed paths: full in-memory pipeline chain (q76's semantic
     // twin — the catalog entry's parquet stage writes are write-once and
@@ -853,7 +837,9 @@ object StressSf1 {
     // with the layer-0 diameter as the corpus grows; hier hops grow
     // with the LEVEL count (logarithmic), so the hier column must stay
     // ~flat (within +levels) while the corpus grows 10x.
-    val hierHops = Seq("sf0.1" -> sfDir, "sf1" -> stressRoot).map {
+    // the 10x embeddings' stage root is a folder holding embeddings.parquet
+    val embStressDir = Paths.get(embStressPath).getParent.toString
+    val hierHops = Seq("sf0.1" -> sfDir, "sf1" -> embStressDir).map {
       case (tag, d) =>
         operators.NnDescent.graphIndexStaged(spark, d) // staged untimed
         operators.GraphServe.graphHierStaged(spark, d)

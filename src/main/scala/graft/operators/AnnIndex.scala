@@ -30,14 +30,10 @@ import graft.sources.Tables
   *     tracks nProbe/C of the corpus, not the corpus.
   *   - PQ: `codebooks/` (m·k rows) + `codes/` (vec_id, codes).
   *
-  * Cache keys fold in [[Layout.contentKey]]'s file fingerprint, so a
-  * source that changes under the same path invalidates the index
-  * instead of silently serving stale neighbors. Builds serialize
-  * per-stage on [[Staging]]'s path lock (same-JVM; different indexes
-  * build concurrently) and are committed by atomic rename via
-  * [[Staging]] — a half-built index (crash between writes, or a
-  * concurrent process mid-build) is invisible to readers, never
-  * served.
+  * Every index is a [[Staging]] stage keyed by the embeddings table's
+  * content, so a source that changes under the same path invalidates
+  * the index instead of silently serving stale neighbors, and a
+  * half-built index is never served.
   *
   * Both indexed query paths return BIT-IDENTICAL results to their
   * build-per-batch twins (q29/q74): training is deterministic
@@ -46,17 +42,17 @@ import graft.sources.Tables
   * AnnIndexSpec by frame-for-frame equality.
   */
 object AnnIndex {
-  import Bucketed.md5hex
+
+  /** A stage built from `dir`'s embeddings table. */
+  private def embKey(name: String, dir: String, params: Any*): Staging.Key =
+    Staging.Key(name, Seq(s"$dir/embeddings.parquet"), params: _*)
 
   /** Idempotently materialize the IVF index for `dir`'s embeddings:
     * `centroids/` + cluster-partitioned `lists/`. Returns the index
     * root. */
   def ivfIndex(spark: SparkSession, dir: String, centroids: Int = 256,
       lloydIters: Int = 3): String = {
-    val out = "target/ann/graft_ivf_" + md5hex(
-      s"$dir/$centroids/$lloydIters/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("ann/ivf", dir, centroids, lloydIters)) { tmp =>
       val e = Similarity.prepared(Tables.embeddings(spark, dir))
       val cent = Similarity.ivfCentroids(e, centroids, lloydIters)
       cent.write.mode("overwrite").parquet(s"$tmp/centroids")
@@ -199,15 +195,6 @@ object AnnIndex {
     probeAt(spark, dir, idx, nQueries, k, nProbe)
   }
 
-  /** The shared cache-key string of the split-10 delta-index family —
-    * ONE definition so the base/delta/compact/retrain artifacts can
-    * never silently decouple from the segments they derive from (a key
-    * edit here re-keys all four together). */
-  private def deltaKey(spark: SparkSession, dir: String, centroids: Int,
-      lloydIters: Int): String =
-    s"$dir/split10/$centroids/$lloydIters/" +
-      Layout.contentKey(spark, s"$dir/embeddings.parquet")
-
   /** The q77 probe shape against any persisted single-segment index
     * root: read centroids + lists, probe with the first `nQueries`
     * embeddings. */
@@ -242,10 +229,8 @@ object AnnIndex {
     * (asserted in AnnIndexSpec). Returns (baseRoot, deltaRoot). */
   def ivfDeltaIndex(spark: SparkSession, dir: String, centroids: Int = 256,
       lloydIters: Int = 3): (String, String) = {
-    val key = deltaKey(spark, dir, centroids, lloydIters)
     val all = Similarity.prepared(Tables.embeddings(spark, dir))
-    val baseRoot = "target/ann/graft_ivfb_" + md5hex(key).take(8)
-    Staging.ensure(spark, baseRoot) { tmp =>
+    val baseRoot = Staging.stage(spark, embKey("ann/ivfb", dir, centroids, lloydIters)) { tmp =>
       val base = all.filter(col("vec_id") % 10 =!= 0)
       val cent = Similarity.ivfCentroids(base, centroids, lloydIters)
       cent.write.mode("overwrite").parquet(s"$tmp/centroids")
@@ -253,8 +238,7 @@ object AnnIndex {
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/lists")
       cent.unpersist()
     }
-    val deltaRoot = "target/ann/graft_ivfd_" + md5hex(s"$key/delta").take(8)
-    Staging.ensure(spark, deltaRoot) { tmp =>
+    val deltaRoot = Staging.stage(spark, embKey("ann/ivfd", dir, centroids, lloydIters)) { tmp =>
       // delta-only work: one broadcast-centroid assignment pass over the
       // arrivals; the base segment is read-only input to QUERIES, not to
       // this build
@@ -298,16 +282,13 @@ object AnnIndex {
   def ivfCompactIndex(spark: SparkSession, dir: String, centroids: Int = 256,
       lloydIters: Int = 3): String = {
     val (baseRoot, deltaRoot) = ivfDeltaIndex(spark, dir, centroids, lloydIters)
-    val key = deltaKey(spark, dir, centroids, lloydIters)
-    val out = "target/ann/graft_ivfc_" + md5hex(s"$key/compact").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("ann/ivfc", dir, centroids, lloydIters)) { tmp =>
       spark.read.parquet(s"$baseRoot/centroids")
         .write.mode("overwrite").parquet(s"$tmp/centroids")
       spark.read.parquet(s"$baseRoot/lists")
         .unionByName(spark.read.parquet(s"$deltaRoot/lists"))
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/lists")
     }
-    out
   }
 
   /** IVF query over the compacted single segment — the q77 probe shape
@@ -335,9 +316,7 @@ object AnnIndex {
   def ivfRetrainIndex(spark: SparkSession, dir: String, centroids: Int = 256,
       lloydIters: Int = 3): String = {
     val (baseRoot, deltaRoot) = ivfDeltaIndex(spark, dir, centroids, lloydIters)
-    val key = deltaKey(spark, dir, centroids, lloydIters)
-    val out = "target/ann/graft_ivfr_" + md5hex(s"$key/retrain").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("ann/ivfr", dir, centroids, lloydIters)) { tmp =>
       val vecs = spark.read.parquet(s"$baseRoot/lists")
         .unionByName(spark.read.parquet(s"$deltaRoot/lists"))
         .select("vec_id", "emb", "nrm")
@@ -347,7 +326,6 @@ object AnnIndex {
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/lists")
       cent.unpersist()
     }
-    out
   }
 
   /** IVF query over the retrained index — the q77 probe shape against
@@ -383,10 +361,7 @@ object AnnIndex {
     * together. */
   def ivfFilteredIndex(spark: SparkSession, dir: String,
       centroids: Int = 64, lloydIters: Int = 3): String = {
-    val out = "target/ann/graft_ivff_" + md5hex(
-      s"$dir/f1/$centroids/$lloydIters/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("ann/ivff", dir, centroids, lloydIters)) { tmp =>
       val emb = Tables.embeddings(spark, dir)
       val e = Similarity.prepared(emb)
       val cent = Similarity.ivfCentroids(e, centroids, lloydIters)
@@ -431,10 +406,7 @@ object AnnIndex {
   def pqIndex(spark: SparkSession, dir: String, m: Int = 8,
       kCent: Int = 64, d: Int = 64): String = {
     require(d % m == 0, s"dim $d not divisible by $m subspaces")
-    val out = "target/ann/graft_pq_" + md5hex(
-      s"$dir/$m/$kCent/$d/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("ann/pq", dir, m, kCent, d)) { tmp =>
       val subdim = d / m
       val e = Similarity.pqPrepared(Tables.embeddings(spark, dir), d)
       val cb = Similarity.pqCodebooks(e, m, subdim, kCent)
@@ -471,11 +443,6 @@ object AnnIndex {
 
   // ---- q162: PQ delta append (maintenance) ----
 
-  private def pqDeltaKey(spark: SparkSession, dir: String, m: Int,
-      kCent: Int, d: Int): String =
-    s"$dir/pqsplit10/$m/$kCent/$d/" +
-      Layout.contentKey(spark, s"$dir/embeddings.parquet")
-
   /** Split-convention PQ segments — the maintenance op that completes
     * the PQ family's parity with IVF (q109/q124/q125) and the graph
     * (q148/q155): codebooks TRAIN once on the base slice (`vec_id %
@@ -491,9 +458,7 @@ object AnnIndex {
     * deterministic scratch build). Returns (baseRoot, deltaRoot). */
   def pqDeltaIndex(spark: SparkSession, dir: String, m: Int = 8,
       kCent: Int = 64, d: Int = 64): (String, String) = {
-    val key = pqDeltaKey(spark, dir, m, kCent, d)
-    val baseRoot = "target/ann/graft_pqb_" + md5hex(key).take(8)
-    Staging.ensure(spark, baseRoot) { tmp =>
+    val baseRoot = Staging.stage(spark, embKey("ann/pqb", dir, m, kCent, d)) { tmp =>
       val base = Similarity.pqPrepared(
         Tables.embeddings(spark, dir).filter(col("vec_id") % 10 =!= 0), d)
       val cb = Similarity.pqCodebooks(base, m, d / m, kCent)
@@ -503,8 +468,7 @@ object AnnIndex {
         .write.mode("overwrite").parquet(s"$tmp/codes")
       cb.unpersist()
     }
-    val deltaRoot = "target/ann/graft_pqdl_" + md5hex(s"$key/delta").take(8)
-    Staging.ensure(spark, deltaRoot) { tmp =>
+    val deltaRoot = Staging.stage(spark, embKey("ann/pqdl", dir, m, kCent, d)) { tmp =>
       // delta-only work: one broadcast-codebook encode pass over the
       // arrivals; the base segment is read-only input to QUERIES
       Similarity.pqEncode(
@@ -551,10 +515,7 @@ object AnnIndex {
     * q124-style compaction physically drops masked rows when the
     * tombstone fraction warrants the one-off rewrite. */
   def tombstonesStaged(spark: SparkSession, dir: String): String = {
-    val out = "target/ann/graft_ivft_" + md5hex(
-      s"$dir/ts5/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("ann/ivft", dir)) { tmp =>
       Tables.embeddings(spark, dir).select("vec_id")
         .filter(col("vec_id") % 10 === 5)
         .coalesce(1)
@@ -599,10 +560,7 @@ object AnnIndex {
       centroids: Int = 256, lloydIters: Int = 3): String = {
     val idx = ivfIndex(spark, dir, centroids, lloydIters)
     val ts = tombstonesStaged(spark, dir)
-    val out = "target/ann/graft_ivfdc_" + md5hex(
-      s"$dir/delcompact/$centroids/$lloydIters/" +
-        Layout.contentKey(spark, s"$dir/embeddings.parquet")).take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("ann/ivfdc", dir, centroids, lloydIters)) { tmp =>
       spark.read.parquet(s"$idx/centroids")
         .write.mode("overwrite").parquet(s"$tmp/centroids")
       spark.read.parquet(s"$idx/lists")
@@ -610,7 +568,6 @@ object AnnIndex {
           "left_anti")
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/lists")
     }
-    out
   }
 
   /** The q77 probe over the delete-compacted artifact — no anti-join
@@ -666,10 +623,7 @@ object AnnIndex {
       kCent: Int = 64, d: Int = 64): String = {
     val idx = pqIndex(spark, dir, m, kCent, d)
     val ts = tombstonesStaged(spark, dir)
-    val out = "target/ann/graft_pqdc_" + md5hex(
-      s"$dir/delcompact/$m/$kCent/$d/" +
-        Layout.contentKey(spark, s"$dir/embeddings.parquet")).take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("ann/pqdc", dir, m, kCent, d)) { tmp =>
       spark.read.parquet(s"$idx/codebooks")
         .write.mode("overwrite").parquet(s"$tmp/codebooks")
       spark.read.parquet(s"$idx/codes")
@@ -677,7 +631,6 @@ object AnnIndex {
           "left_anti")
         .write.mode("overwrite").parquet(s"$tmp/codes")
     }
-    out
   }
 
   /** Root of the compacted PQ artifact the last q169 probe served

@@ -432,28 +432,28 @@ object Bpe {
 
   // ---- staged artifact + session memo ----
 
-  /** Root of the fingerprinted learned-tokenizer materialization for
-    * (`dir`, `merges`): merge list + word segmentations, keyed on the
-    * source content like every staged artifact (AnnIndex rule). */
-  private[graft] def bpeRoot(spark: SparkSession, dir: String, merges: Int): String =
-    "target/bpe/graft_bpe_" + Bucketed.md5hex(
-      s"$dir/m$merges/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
+  private def docs(dir: String): Seq[String] = Seq(s"$dir/documents.parquet")
 
-  /** Write-once learned tokenizer under `out`: (merge table, word
+  /** Every table [[unionTextCorpus]] reads. */
+  private def lake(dir: String): Seq[String] =
+    Seq("documents", "customer", "supplier", "part", "events").map(t => s"$dir/$t.parquet")
+
+  private def bpeKey(dir: String, merges: Int) = Staging.Key("bpe/bpe", docs(dir), merges)
+
+  /** Root of the staged documents-corpus tokenizer for (`dir`, `merges`):
+    * merge list + word segmentations. */
+  private[graft] def bpeRoot(spark: SparkSession, dir: String, merges: Int): String =
+    Staging.root(spark, bpeKey(dir, merges))
+
+  /** Write-once learned tokenizer staged under `key`: (merge table, word
     * segmentations), trained — via the O(1)-job [[learnCollected]]
-    * path — only when no finished stage exists. Committed by atomic
-    * rename ([[Staging]]), so a half-built artifact is invisible to
-    * every reader, same-JVM or not. `corpus` is by-name — evaluated
-    * only on a build miss. */
-  private def stagedTokenizer(spark: SparkSession, out: String, merges: Int,
+    * path — only when no finished stage exists. `corpus` is by-name —
+    * evaluated only on a build miss. */
+  private def stagedTokenizer(spark: SparkSession, key: Staging.Key, merges: Int,
       minCount: Long,
       symsOf: String => Vector[String] = codePointSyms)
       (corpus: => DataFrame): (DataFrame, DataFrame) = {
-    // same-JVM duplicate-build elision is Staging's per-path lock
-    // (round-10 advice: an object-level synchronized here serialized
-    // trainings of DIFFERENT tokenizers behind one monitor)
-    Staging.ensure(spark, out) { tmp =>
+    val out = Staging.stage(spark, key) { tmp =>
       val (rules, words) = learnCollected(corpus, merges, minCount, symsOf)
       spark.createDataFrame(rules).write.mode("overwrite").parquet(s"$tmp/merges")
       words.write.mode("overwrite").parquet(s"$tmp/segments")
@@ -464,7 +464,7 @@ object Bpe {
   /** The staged documents-corpus tokenizer (q102/q103/q105). */
   def learnStaged(spark: SparkSession, dir: String, merges: Int)
       : (DataFrame, DataFrame) =
-    stagedTokenizer(spark, bpeRoot(spark, dir, merges), merges, 2L)(
+    stagedTokenizer(spark, bpeKey(dir, merges), merges, 2L)(
       Tables.documents(spark, dir))
 
   /** The staged BYTE-LEVEL documents-corpus tokenizer (q122/q123):
@@ -474,7 +474,7 @@ object Bpe {
     * and encode has no OOV path. */
   def learnStagedBytes(spark: SparkSession, dir: String, merges: Int)
       : (DataFrame, DataFrame) =
-    stagedTokenizer(spark, bpeByteRoot(spark, dir, merges),
+    stagedTokenizer(spark, bpeByteKey(dir, merges),
       merges, 2L, byteSymsLocal)(Tables.documents(spark, dir))
 
   /** Every textual column in the `dir` lake as one (text) corpus — the
@@ -505,14 +505,9 @@ object Bpe {
     * the merge-count scaling claim untestable. Content-keyed on every
     * source table. */
   def learnStagedFull(spark: SparkSession, dir: String, merges: Int)
-      : (DataFrame, DataFrame) = {
-    val key = Seq("documents", "customer", "supplier", "part", "events")
-      .map(t => Layout.contentKey(spark, s"$dir/$t.parquet")).mkString("/")
-    stagedTokenizer(spark,
-      "target/bpe/graft_bpe_full_" +
-        Bucketed.md5hex(s"$dir/m$merges/mc1/$key").take(8),
-      merges, 1L)(unionTextCorpus(spark, dir))
-  }
+      : (DataFrame, DataFrame) =
+    stagedTokenizer(spark, Staging.Key("bpe/bpe_full", lake(dir), merges), merges, 1L)(
+      unionTextCorpus(spark, dir))
 
   /** Session-scoped memo of [[learnCollected]] for the SQL TVF path
     * (`graft_bpe_encode`), keyed on the view's canonicalized analyzed
@@ -551,8 +546,7 @@ object Bpe {
     * argument). */
   def subwordIds(vocab: DataFrame): DataFrame =
     vocab.select(col("subword"), row_number().over(
-      Window.partitionBy(lit(0))
-        .orderBy(col("n").desc, col("subword").asc)).as("tid"))
+      Window.orderBy(col("n").desc, col("subword").asc)).as("tid"))
 
   /** Encode `corpus` as subword-id sequences under a learned tokenizer:
     * (doc_id, n_words, n_subwords, ids) with `ids` the space-joined id
@@ -781,12 +775,11 @@ object Bpe {
     * [[graft.BpeReference]] learner (full pair recount per round, no
     * incremental structure), schema-identical emit. `corpus` is
     * by-name — evaluated only on a build miss. */
-  private[graft] def twinMergesStaged(spark: SparkSession, key: String,
+  private[graft] def twinMergesStaged(spark: SparkSession, key: Staging.Key,
       merges: Int, minCount: Long,
       initial: String => Vector[String] = graft.BpeReference.cpInitial)
-      (corpus: => DataFrame): String = {
-    val out = "target/bpe/graft_bpetwin_" + Bucketed.md5hex(key).take(8)
-    Staging.ensure(spark, out) { tmp =>
+      (corpus: => DataFrame): String =
+    Staging.stage(spark, key) { tmp =>
       val wf = wordTable(corpus).toMap
       val (rules, _) = graft.BpeReference.refLearn(wf, merges, minCount, initial)
       spark.createDataFrame(rules.map { case (rank, a, b, c) =>
@@ -794,8 +787,6 @@ object Bpe {
         }).toDF("rank", "left", "right", "merged", "pair_count")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/merges")
     }
-    out
-  }
 
   /** The shared twin-oracle SQL (the staged twin read back in rank
     * order, schema-identical to the engine's merge table). */
@@ -882,13 +873,13 @@ object Bpe {
   /** The q123 byte-encode oracle root (set by the entry's run). */
   @volatile private[graft] var byteEncodeOracleRoot: Option[String] = None
 
-  /** Content-keyed root of the staged byte-level documents tokenizer
-    * (shared by [[learnStagedBytes]] and the q123 oracle). */
+  private def bpeByteKey(dir: String, merges: Int) = Staging.Key("bpe/bpeb", docs(dir), merges)
+
+  /** Root of the staged byte-level documents tokenizer (shared by
+    * [[learnStagedBytes]] and the q123 oracle). */
   private[graft] def bpeByteRoot(spark: SparkSession, dir: String,
       merges: Int): String =
-    "target/bpe/graft_bpeb_" + Bucketed.md5hex(
-      s"$dir/m$merges/bytes-oob-marker/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
+    Staging.root(spark, bpeByteKey(dir, merges))
 
   // `def`, not `val`: q105's oracle SQL embeds [[stagedOracleRoot]],
   // which exists only after the query has run — SparkEntry.catalog is
@@ -918,7 +909,7 @@ object Bpe {
         "aggregate twin (planted corpus + sf0.001 + sf0.1).",
       (s, dir) => {
         twinOracleRoot = Some(new java.io.File(twinMergesStaged(s,
-          s"$dir/m32/${Layout.contentKey(s, s"$dir/documents.parquet")}",
+          Staging.Key("bpe/bpetwin", docs(dir), 32),
           merges = 32, minCount = 2L)(Tables.documents(s, dir)))
           .getAbsolutePath)
         learnStaged(s, dir, merges = 32)._1
@@ -1014,10 +1005,8 @@ object Bpe {
         "in-suite parity AND the SparkListener job-count assertion: " +
         "learning 1,024 merges costs exactly as many Spark jobs as 32.",
       (s, dir) => {
-        val key = Seq("documents", "customer", "supplier", "part", "events")
-          .map(t => Layout.contentKey(s, s"$dir/$t.parquet")).mkString("/")
         twinFullOracleRoot = Some(new java.io.File(twinMergesStaged(s,
-          s"$dir/m1024/mc1/$key", merges = 1024, minCount = 1L)(
+          Staging.Key("bpe/bpetwin", lake(dir), 1024), merges = 1024, minCount = 1L)(
           unionTextCorpus(s, dir))).getAbsolutePath)
         learnStagedFull(s, dir, merges = 1024)._1
           .orderBy("rank")
@@ -1130,7 +1119,7 @@ object Bpe {
         "strings.",
       (s, dir) => {
         twinByteOracleRoot = Some(new java.io.File(twinMergesStaged(s,
-          s"$dir/m32/bytes/${Layout.contentKey(s, s"$dir/documents.parquet")}",
+          Staging.Key("bpe/bpetwin", docs(dir), 32, "bytes"),
           merges = 32, minCount = 2L,
           initial = graft.BpeReference.byteInitial)(Tables.documents(s, dir)))
           .getAbsolutePath)

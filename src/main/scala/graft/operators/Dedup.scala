@@ -681,14 +681,11 @@ object Dedup {
   /** Write-once staged SimHash fingerprints (doc_id, fp). */
   private[graft] def simhashStaged(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val out = "target/dedup/graft_simhash_" + Bucketed.md5hex(
-      s"$dir/${Layout.contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("dedup/simhash", Seq(s"$dir/documents.parquet"))) { tmp =>
       simhash64(Tables.documents(spark, dir))
         .select(col("doc_id"), col("simhash").as("fp"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/fp")
     }
-    out
   }
 
   // `def`, not `val`: q22's oracle SQL embeds the staged root set by

@@ -116,10 +116,7 @@ object Dsir {
   /** Write-once content-keyed weight table over the test corpus with
     * target = `lang = 'en'`. */
   def weightsStaged(spark: SparkSession, dir: String): String = {
-    val out = "target/dsir/weights_" +
-      Bucketed.md5hex(
-        s"$dir/${Layout.contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("dsir/weights", Seq(s"$dir/documents.parquet"))) { tmp =>
       val docs = Tables.rebalanced(Tables.documents(spark, dir))
       val gb = gramBuckets(docs, col("lang") === "en")
       val weighted = docWeights(gb, bucketLogRatios(spark, gb))
@@ -144,7 +141,6 @@ object Dsir {
         s"DSIR micro-unit projection overflowed on $overflowed docs " +
           "(|w| beyond decimal(27,15) headroom)")
     }
-    out
   }
 
   /** Top-k selection from a staged weight table: (w DESC, doc_id) — a

@@ -97,7 +97,7 @@ object Eval {
     //    windows (input = distinct scores, never documents)
     val bucketTotals = groups.groupBy("b").agg(sum("nneg").as("bneg"))
     val bucketOffsets = bucketTotals.withColumn("boff",
-      coalesce(sum("bneg").over(Window.partitionBy(lit(0)).orderBy("b")
+      coalesce(sum("bneg").over(Window.orderBy("b")
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select("b", "boff")
     val inBucket = Window.partitionBy("b").orderBy("s")
@@ -141,15 +141,11 @@ object Eval {
     * share the training output bit-for-bit (training itself is the
     * LogitSpec-gated deterministic IRLS). */
   def stagedScored(spark: SparkSession, dir: String): String = {
-    val out = "target/gate_eval/scored_" +
-      Bucketed.md5hex(
-        s"$dir/${Layout.contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("gate_eval/scored", Seq(s"$dir/documents.parquet"))) { tmp =>
       Logit.scored(Logit.features(spark, dir))
         .repartition(4)
         .write.mode("overwrite").parquet(tmp)
     }
-    out
   }
 
   // ---- q137: dedup-pipeline recall evaluation -------------------------
@@ -165,17 +161,14 @@ object Eval {
     * (structural-hash permutations), so the miss set is a fixed fact
     * of the corpus, not a sample. */
   def lshPairsStaged(spark: SparkSession, dir: String): String = {
-    val out = "target/dedup_eval/lsh_b4r24_" +
-      Bucketed.md5hex(
-        s"$dir/${Layout.contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark,
+        Staging.Key("dedup_eval/lsh_b4r24", Seq(s"$dir/documents.parquet"))) { tmp =>
       Dedup.nearDuplicates(graft.sources.Tables.documents(spark, dir),
         n = 3, k = 96, b = 4, r = 24, threshold = 0.7)
         .select("doc_a", "doc_b")
         .repartition(1)
         .write.mode("overwrite").parquet(tmp)
     }
-    out
   }
 
   /** Recall evaluation of an approximate dedup candidate generator

@@ -551,13 +551,10 @@ object GraphServe {
     * (the xxhash64 slot draw has no SQL twin; the frame does). */
   private def stagedEntries(spark: SparkSession, root: String,
       queries: DataFrame, beam: Int, tag: String): String = {
-    val eroot = "target/nndescent/graft_gse_" + Bucketed.md5hex(
-      s"$root/e1/$tag/$beam").take(8)
-    Staging.ensure(spark, eroot) { tmp =>
+    Staging.stage(spark, Staging.Key("nndescent/gse", Nil, root, tag, beam)) { tmp =>
       entriesBatch(spark, queries, root, beam)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
-    eroot
   }
 
   // ---- q151 (and q147 via wrapper): flat batched serving ----
@@ -719,17 +716,7 @@ object GraphServe {
 
   private def hierStaged(spark: SparkSession, dir: String, tag: String,
       pred: Option[org.apache.spark.sql.Column]): String = {
-    // h4: layer layout carries embedded dst vectors (round 14) and the
-    // payload attribute d_lab (q157 filtered search); the key also
-    // folds EVERY layout constant — MinLevelNodes and TopEntries
-    // included (r13 advice: changing either must not silently serve a
-    // stale level count or entry set)
-    val out = "target/nndescent/graft_nnh_" + Bucketed.md5hex(
-      s"$dir/h7/$tag/k${NnDescent.K}/w${NnDescent.WorkFactor}/d$HierDecimation" +
-        s"/m$MinLevelNodes/t$TopEntries" +
-        s"/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, NnDescent.embKey("nndescent/nnh", dir, tag)) { tmp =>
       val emb0 = Tables.embeddings(spark, dir)
       val emb = pred.map(emb0.filter).getOrElse(emb0)
       val e = Similarity.preparedLab(emb)
@@ -751,7 +738,6 @@ object GraphServe {
       writeTopEntries(topPool, s"$tmp/top")
       writeHierMeta(spark, levels.map(l => (l, counts(l - 1))), s"$tmp/meta")
     }
-    out
   }
 
   /** Per-level populations in one aggregate pass. */
@@ -809,12 +795,7 @@ object GraphServe {
     * delta node in any table the search reads), determinism, and
     * idempotent staging. */
   def graphHierAppendStaged(spark: SparkSession, dir: String): String = {
-    val out = "target/nndescent/graft_nnha_" + Bucketed.md5hex(
-      s"$dir/a5/k${NnDescent.K}/w${NnDescent.WorkFactor}/d$HierDecimation" +
-        s"/m$MinLevelNodes/t$TopEntries" +
-        s"/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, NnDescent.embKey("nndescent/nnha", dir)) { tmp =>
       val emb = Tables.embeddings(spark, dir)
       val e = Similarity.preparedLab(emb)
       val deltaPred = col("vec_id") % 10 === 0
@@ -849,7 +830,6 @@ object GraphServe {
       writeTopEntries(topPool, s"$tmp/top")
       writeHierMeta(spark, levels.map(l => (l, counts(l - 1))), s"$tmp/meta")
     }
-    out
   }
 
   /** Hierarchical serving over the APPENDED hierarchy — the exact
@@ -990,11 +970,7 @@ object GraphServe {
       dir: String): String = {
     val root = NnDescent.graphIndexStaged(spark, dir)
     val ts = AnnIndex.tombstonesStaged(spark, dir)
-    val out = "target/nndescent/graft_nngdc_" + Bucketed.md5hex(
-      s"$dir/delcompact/i9/k${NnDescent.K}/w${NnDescent.WorkFactor}" +
-        s"/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, NnDescent.embKey("nndescent/nngdc", dir)) { tmp =>
       val tsIds = spark.read.parquet(s"$ts/ids")
       spark.read.parquet(s"$root/edges")
         .join(broadcast(tsIds.select(col("vec_id").as("src"))), Seq("src"),
@@ -1017,7 +993,6 @@ object GraphServe {
       Seq(Tuple1(survivors.count())).toDF("n").coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/meta")
     }
-    out
   }
 
   /** (compacted root, staged-entries root) of the last q170 run. */
@@ -1074,11 +1049,7 @@ object GraphServe {
     * reconstruction-error shift in the q159-style health signals. */
   def graphSq8IndexStaged(spark: SparkSession, dir: String): String = {
     val root = NnDescent.graphIndexStaged(spark, dir)
-    val out = "target/nndescent/graft_nngq_" + Bucketed.md5hex(
-      s"$dir/q4/k${NnDescent.K}/w${NnDescent.WorkFactor}/r${NnDescent.Rounds}" +
-        s"/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, NnDescent.embKey("nndescent/nngq", dir)) { tmp =>
       val e = Similarity.prepared(Tables.embeddings(spark, dir))
       val bounds = Similarity.sqBounds(e)
       bounds.coalesce(1).write.mode("overwrite").parquet(s"$tmp/bounds")
@@ -1100,7 +1071,6 @@ object GraphServe {
         .write.mode("overwrite").partitionBy("nbucket")
         .parquet(s"$tmp/edges")
     }
-    out
   }
 
   /** Batched graph-ANN serving over the QUANTIZED edge table, with a

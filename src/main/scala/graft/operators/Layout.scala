@@ -31,25 +31,10 @@ import graft.sources.Tables
   * scan, the [[Bucketed]]/[[Partitioned]] economics.
   */
 object Layout {
-  import Bucketed.md5hex
 
-  /** Content fingerprint of a source table's files: sorted
-    * (name, length, mtime) triples hashed — a pure LISTING, no data
-    * read. Folded into every materialization cache key so a source that
-    * changes under the same path invalidates the layout instead of
-    * silently serving stale data against a fresh oracle scan. */
-  private[graft] def contentKey(spark: SparkSession, table: String): String = {
-    val p = new Path(table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (!fs.exists(p)) Seq(s"missing:$table")
-      else if (fs.getFileStatus(p).isFile) {
-        val st = fs.getFileStatus(p)
-        Seq(s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      } else fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
-        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-    md5hex(parts.mkString("|"))
-  }
+  /** A stage built from `dir`'s documents table. */
+  private def docsKey(name: String, dir: String, params: Any*): Staging.Key =
+    Staging.Key(name, Seq(s"$dir/documents.parquet"), params: _*)
 
   /** 2-D Morton (Z-order) key: quantize each dimension to 16 bits
     * against its [lo, hi] bounds, then interleave the bits (a-bits odd,
@@ -88,9 +73,8 @@ object Layout {
     * parquet footer min/max into a 2-D bounding box per file. */
   def zorderedLineitem(spark: SparkSession, dir: String,
       nFiles: Int = 24): String = synchronized {
-    val out = "target/zorder/graft_lineitem_z" +
-      md5hex(s"$dir/$nFiles/${contentKey(spark, s"$dir/lineitem.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark,
+        Staging.Key("zorder/lineitem", Seq(s"$dir/lineitem.parquet"), nFiles)) { tmp =>
       val li = Tables.lineitem(spark, dir)
       val bounds = li.agg(
         min("l_partkey").as("__plo"), max("l_partkey").as("__phi"),
@@ -111,9 +95,7 @@ object Layout {
     * lang, source, text) — the interchange-boundary fixture for the
     * q120 round trip; content-keyed like every layout stage. */
   def jsonlDocuments(spark: SparkSession, dir: String): String = synchronized {
-    val out = "target/jsonl/graft_documents_" +
-      md5hex(s"$dir/${contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, docsKey("jsonl/documents", dir)) { tmp =>
       Tables.documents(spark, dir)
         .select("doc_id", "lang", "source", "text")
         .repartition(4)
@@ -131,9 +113,7 @@ object Layout {
     * stripe/row-group index (`OrcSpec`/`LayoutSpec` assert both on the
     * executed plan). Content-keyed write-once like every layout stage. */
   def orcDocuments(spark: SparkSession, dir: String): String = synchronized {
-    val out = "target/orc/graft_documents_" +
-      md5hex(s"$dir/${contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, docsKey("orc/documents", dir)) { tmp =>
       Tables.documents(spark, dir)
         .repartition(4)
         .write.mode("overwrite").orc(tmp)
@@ -149,9 +129,7 @@ object Layout {
     * map-only — encode + emit, no further exchange (round-13 advice:
     * the earlier wording claimed the whole pipeline was map-only). */
   def avroDocuments(spark: SparkSession, dir: String): String = {
-    val out = "target/avro/graft_documents_" +
-      md5hex(s"$dir/${contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    val out = Staging.stage(spark, docsKey("avro/documents", dir)) { tmp =>
       graft.sources.AvroInterchange.write(
         Tables.documents(spark, dir)
           .select("doc_id", "lang", "source", "n_chars", "text")
@@ -173,9 +151,7 @@ object Layout {
     * Hive-style segment directories double as a free `seg` partition
     * column, so per-version audits are partition-pruned scans. */
   def evolvedDocuments(spark: SparkSession, dir: String): String = {
-    val out = "target/evolved/graft_documents_" +
-      md5hex(s"$dir/${contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, docsKey("evolved/documents", dir)) { tmp =>
       val docs = Tables.documents(spark, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "lang", "text")
@@ -212,17 +188,14 @@ object Layout {
     * row-for-row. Returns (scatteredPath, compactedPath). */
   def compactedDocs(spark: SparkSession, dir: String, nSmall: Int = 64,
       targetBytes: Long = 1L << 20): (String, String) = synchronized {
-    val id = md5hex(
-      s"$dir/$nSmall/$targetBytes/${contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    val scattered = s"target/compact/graft_docs_small_$id"
-    val compacted = s"target/compact/graft_docs_big_$id"
-    val fs = new Path(scattered)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Staging.ensure(spark, scattered) { tmp =>
+    val scattered = Staging.stage(spark, docsKey("compact/docs_small", dir, nSmall)) { tmp =>
       Tables.documents(spark, dir).repartition(nSmall)
         .write.mode("overwrite").parquet(tmp)
     }
-    Staging.ensure(spark, compacted) { tmp =>
+    val fs = new Path(scattered)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val compacted = Staging.stage(spark,
+        docsKey("compact/docs_big", dir, nSmall, targetBytes)) { tmp =>
       val totalBytes = fs.listStatus(new Path(scattered))
         .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
       val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
@@ -278,7 +251,7 @@ object Layout {
     Query(
       "q120_jsonl_roundtrip",
       "JSON-lines interchange boundary: the documents table staged out " +
-        "as JSONL (write-once, the Staging.ensure convention) and read " +
+        "as JSONL (write-once, a Staging stage) and read " +
         "back SCHEMA-FIRST — inference would cost a second full pass at " +
         "100 TB, so the reader never samples; JSONL splits by line, so " +
         "the scan parallelizes like any text source. The oracle compares " +

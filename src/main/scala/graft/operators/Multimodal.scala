@@ -493,13 +493,10 @@ object Multimodal {
     * corpus (doc_id, fp, is_image). */
   private[graft] def fingerprintsStaged(spark: SparkSession,
       dir: String): String = {
-    val out = "target/multimodal/graft_imgfp_" + Bucketed.md5hex(
-      s"$dir/${Layout.contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("multimodal/imgfp", Seq(s"$dir/documents.parquet"))) { tmp =>
       imageFingerprints(plantedImagePayloads(Tables.documents(spark, dir)))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/fp")
     }
-    out
   }
 
   /** Staged planted-audio payloads for the q165 oracle: unlike q110's
@@ -512,9 +509,7 @@ object Multimodal {
 
   private[graft] def audioPayloadsStaged(spark: SparkSession,
       dir: String): String = {
-    val out = "target/multimodal/graft_wav_" + Bucketed.md5hex(
-      s"$dir/a1/${Layout.contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("multimodal/wav", Seq(s"$dir/documents.parquet"))) { tmp =>
       plantedAudioPayloads(Tables.documents(spark, dir))
         .select("doc_id", "payload")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/payloads")

@@ -75,6 +75,10 @@ import graft.sources.Tables
   */
 object NnDescent {
 
+  /** A stage built from `dir`'s embeddings table. */
+  private[operators] def embKey(name: String, dir: String, params: Any*): Staging.Key =
+    Staging.Key(name, Seq(s"$dir/embeddings.parquet"), params: _*)
+
   /** Graph degree (neighbors kept per node). */
   val K = 10
 
@@ -561,20 +565,11 @@ object NnDescent {
     * [[appendToGraph]] maintains when the `% 10 == 0` arrivals land. */
   def baseGraphStaged(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    // the init/build algorithm is part of the key — the round-13
-    // working-beam build must not be satisfied by a stale narrow-list
-    // artifact (the r12 convention); i5→i6 alongside graphIndexStaged's
-    // i9 bump: [[build]] itself changed in round 16, so this artifact's
-    // bytes change too (r16 advice: builder changes ride the key)
-    val out = "target/nndescent/graft_nngb_" + Bucketed.md5hex(
-      s"$dir/base10/i6/k$K/w$WorkFactor/r$Rounds/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("nndescent/nngb", dir)) { tmp =>
       build(Tables.embeddings(spark, dir).filter(col("vec_id") % 10 =!= 0))
         .repartition(4)
         .write.mode("overwrite").parquet(tmp)
     }
-    out
   }
 
   /** Write-once APPENDED flat graph over the full corpus: the staged
@@ -589,17 +584,13 @@ object NnDescent {
     * concern. */
   def appendedGraphStaged(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val out = "target/nndescent/graft_nnga_" + Bucketed.md5hex(
-      s"$dir/append10/a1/k$K/w$WorkFactor/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("nndescent/nnga", dir)) { tmp =>
       appendToGraph(Tables.embeddings(spark, dir),
         spark.read.parquet(baseGraphStaged(spark, dir)),
         col("vec_id") % 10 === 0)
         .repartition(4)
         .write.mode("overwrite").parquet(tmp)
     }
-    out
   }
 
   /** Write-once content-keyed graph index: `edges/` (the NN-descent
@@ -622,18 +613,7 @@ object NnDescent {
     * sample is deterministic, hash-uniform, and corpus-spread. */
   def graphIndexStaged(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    // "i9": init/build algorithm AND index layout ride the key — the
-    // round-14 edge layout embeds each destination's vector (the
-    // serving fusion) and its payload attribute `d_lab` (the q157
-    // filtered-search attribute-rides-the-index rule); bumped i8→i9
-    // for the round-16 build-algorithm changes (edge-only cap salt,
-    // rho=0.5 new-member cap, delta-K-N termination) — the built
-    // graph's BYTES change, so a pre-r16 staged artifact under the
-    // same content key must not be served (r16 advice)
-    val out = "target/nndescent/graft_nng_" + Bucketed.md5hex(
-      s"$dir/i9/k$K/w$WorkFactor/r$Rounds/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, embKey("nndescent/nng", dir)) { tmp =>
       val emb = Tables.embeddings(spark, dir)
       val e = Similarity.preparedLab(emb)
       val n = e.count()
@@ -648,7 +628,6 @@ object NnDescent {
       Seq(Tuple1(n)).toDF("n").coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/meta")
     }
-    out
   }
 
   /** Write a built graph in the SERVING layout: each edge carries its

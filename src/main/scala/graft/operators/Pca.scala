@@ -296,9 +296,8 @@ object Pca {
     * digit-exactly, so the merged fit stays bit-identical. */
   def baseMomentsStaged(spark: SparkSession, dir: String)
       : Array[java.math.BigDecimal] = {
-    val out = "target/pca/base_moments_" + Bucketed.md5hex(
-      s"$dir/split10/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    val out = Staging.stage(spark,
+        Staging.Key("pca/base_moments", Seq(s"$dir/embeddings.parquet"))) { tmp =>
       val base = Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 10 =!= 0)
       import spark.implicits._
@@ -338,18 +337,14 @@ object Pca {
     m
   }
 
-  // "model2": the round-12 schema adds the fitted corpus size `n`
-  // (proportional-quota input) — a fresh path prefix so a stale
-  // 4-column round-11 artifact can never satisfy the 5-column read.
   // Returns (model, staged root) so callers that embed the root into
   // oracle SQL get it from the SAME call that fit the model — routing
   // it through a second mutable global could mis-pair an interleaved
   // caller's root with this model (round-14 advice).
   private def stagedModel(spark: SparkSession, dir: String, tag: String,
       fitNow: () => Model): (Model, String) = {
-    val out = "target/pca/model2_" + Bucketed.md5hex(
-      s"$dir/$tag/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    val out = Staging.stage(spark,
+        Staging.Key("pca/model", Seq(s"$dir/embeddings.parquet"), tag)) { tmp =>
       val m = fitNow()
       import spark.implicits._
       Seq((m.mu.toSeq, m.eigenvalues.toSeq,

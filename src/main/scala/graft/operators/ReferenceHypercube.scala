@@ -330,25 +330,28 @@ object ReferenceHypercube {
     * so a dim that outgrows memory can never OOM the executors. */
   private val BroadcastDimMaxCsvBytes = 256L * 1024 * 1024
 
+  /** Whether `dataFolder`'s dimension CSVs are small enough to broadcast
+    * (at most [[BroadcastDimMaxCsvBytes]]): a filesystem stat, no Spark
+    * job. The `broadcastDim` that [[fromFolder]] and `EtlMain
+    * --stage-times` pass to [[hypercube]]. */
+  private[graft] def smallDims(spark: SparkSession, dataFolder: String): Boolean =
+    try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      Seq(s"$dataFolder/clients.csv", s"$dataFolder/contracts.csv").map { p =>
+        val path = new org.apache.hadoop.fs.Path(p)
+        path.getFileSystem(conf).getContentSummary(path).getLength
+      }.sum <= BroadcastDimMaxCsvBytes
+    } catch { case _: java.io.IOException => false }
+
   /** End-to-end over a reference-layout data folder (`clients.csv`,
-    * `contracts.csv`, `invoices.bin` — reference `ETL.java:292-294`).
-    * The dim-broadcast decision is size-gated on the actual input file
-    * bytes (a filesystem stat, no Spark job). */
-  def fromFolder(spark: SparkSession, dataFolder: String): DataFrame = {
-    val dimBytes =
-      try {
-        val conf = spark.sparkContext.hadoopConfiguration
-        Seq(s"$dataFolder/clients.csv", s"$dataFolder/contracts.csv").map { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(conf).getContentSummary(path).getLength
-        }.sum
-      } catch { case _: java.io.IOException => Long.MaxValue }
+    * `contracts.csv`, `invoices.bin` — reference `ETL.java:292-294`),
+    * with the dim broadcast gated by [[smallDims]]. */
+  def fromFolder(spark: SparkSession, dataFolder: String): DataFrame =
     hypercube(
       clients(spark, s"$dataFolder/clients.csv"),
       contracts(spark, s"$dataFolder/contracts.csv"),
       invoices(spark, s"$dataFolder/invoices.bin"),
-      broadcastDim = dimBytes <= BroadcastDimMaxCsvBytes)
-  }
+      broadcastDim = smallDims(spark, dataFolder))
 
   /** Folder of the reference's `data-sample` (`clients.csv`,
     * `contracts.csv`, `invoices.bin`, `invoices.csv`), which the golden
@@ -386,16 +389,13 @@ object ReferenceHypercube {
     * (contract, time, amount DECIMAL(20,10), consumption). */
   private[graft] def invoicesStaged(spark: SparkSession): String = {
     val bin = s"${referenceSample()}/invoices.bin"
-    val out = "target/reference/graft_invbin_" + Bucketed.md5hex(
-      s"$bin/v1/${Layout.contentKey(spark, bin)}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("reference/invbin", Seq(bin))) { tmp =>
       invoices(spark, bin)
         .select(col("contract"), col("time"),
           col("amount").cast(DecimalType(20, 10)).as("amount"),
           col("consumption"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/fact")
     }
-    out
   }
 
   /** Reference-exact `#.00` amount rendering (`ETL.java:255,266`):

@@ -50,6 +50,11 @@ object Relational {
     * pass-2 candidate set ~targets/4096 of the data. */
   private val PctBuckets = 4096
 
+  /** Most rows [[localize]] collects: 256 groups with all [[PctBuckets]]
+    * buckets filled. Every catalog entry's percentile groups (return
+    * flags, event types, languages) fill a few percent of it. */
+  private[graft] val LocalizeCap = 1 << 20
+
   /** Distributed EXACT per-group percentiles (linear interpolation,
     * `lo*(1-f)+hi*f` — bit-matches DuckDB `quantile_cont`).
     *
@@ -89,9 +94,15 @@ object Relational {
     * 4.6 s pre-change baseline, with monotone per-run escalation. An
     * eager driver-side collect of a provably tiny frame is race-free,
     * pins no cache for the session, and embeds the rows as literals so
-    * every downstream reference (and broadcast) is planning-free. */
-  private[operators] def localize(df: DataFrame): DataFrame = {
-    val rows = df.collect()
+    * every downstream reference (and broadcast) is planning-free.
+    * Fails when the frame holds more than [[LocalizeCap]] rows. */
+  private[graft] def localize(df: DataFrame): DataFrame = {
+    val rows = df.limit(LocalizeCap + 1).collect()
+    require(rows.length <= LocalizeCap,
+      s"a per-group statistics frame has more than $LocalizeCap rows: exact percentiles " +
+        "(Relational.exactPercentiles, Curation.quantileFilter, graft_quantile_gate) " +
+        s"collect up to $PctBuckets rows per group to the driver, so the group column " +
+        s"must have few distinct values (at most ${LocalizeCap / PctBuckets} groups)")
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)
   }

@@ -102,9 +102,7 @@ object SemanticDedup {
     * the artifact is content-keyed write-once. */
   private[graft] def twinStaged(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val out = "target/semdedup/graft_sdd_" + Bucketed.md5hex(
-      s"$dir/t1/${Layout.contentKey(spark, s"$dir/embeddings.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("semdedup/sdd", Seq(s"$dir/embeddings.parquet"))) { tmp =>
       val e = Similarity.prepared(q80Corpus(spark, dir))
       val cent = Similarity.ivfCentroids(e, centroids = 64, lloydIters = 1)
       val centRows = cent.collect().map(r => (r.getLong(0),
@@ -117,7 +115,6 @@ object SemanticDedup {
         .toDF("vec_id", "component_id", "canonical_vec", "keep")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/verdicts")
     }
-    out
   }
 
   val queries: Seq[Query] = Seq(

@@ -243,15 +243,12 @@ object Similarity {
     * the same staged parquet (the staged-fingerprint convention). */
   private[graft] def srpSignaturesStaged(spark: org.apache.spark.sql.SparkSession,
       dir: String, tables: Int = 32, bits: Int = 14, dim: Int = 64): String = {
-    val out = "target/similarity/graft_srp_" + Bucketed.md5hex(
-      s"$dir/s1/$tables/$bits/$dim/" +
-        Layout.contentKey(spark, s"$dir/embeddings.parquet")).take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("similarity/srp", Seq(s"$dir/embeddings.parquet"),
+        tables, bits, dim)) { tmp =>
       srpBuckets(prepared(Tables.embeddings(spark, dir)), tables, bits, dim)
         .select(col("vec_id"), col("table").as("tbl"), col("bucket"))
         .write.mode("overwrite").parquet(tmp)
     }
-    out
   }
 
   /** q20's probe over the STAGED signature table — candidate set and
@@ -500,7 +497,7 @@ object Similarity {
         s => slice(col("u"), s * subdim + 1, lit(subdim)))).as(Seq("sub", "sv")))
     val seeds = train.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
       .withColumn("cid", row_number().over(
-        Window.partitionBy(lit(0)).orderBy(xxhash64(col("vec_id")), col("vec_id"))) - 1)
+        Window.orderBy(xxhash64(col("vec_id")), col("vec_id"))) - 1)
       .select(col("cid"), posexplode(transform(sequence(lit(0), lit(m - 1)),
         s => slice(col("u"), s * subdim + 1, lit(subdim)))).as(Seq("sub", "c_sv")))
       .persist()

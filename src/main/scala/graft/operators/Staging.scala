@@ -1,122 +1,129 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Cross-process-safe write-once stage materialization — the shared
-  * build discipline behind every fingerprinted parquet artifact in the
-  * engine (BPE tokenizer, ANN indexes, ingest-gate corpus index,
-  * pipeline stages, layout fixtures).
+/** The one way the engine persists an artifact it may reuse later (BPE
+  * and unigram tokenizers, ANN and text indexes, ingest-gate corpus
+  * index, pipeline stages, layout fixtures, stress corpora). Callers
+  * describe a stage by a [[Staging.Key]] and get back its root; where
+  * the root lives, what it is keyed by and how it is committed is
+  * decided here alone.
   *
-  * The round-9 pattern — build components in place, then write a root
-  * `_SUCCESS` marker last — is safe against crashes (a half-built stage
-  * has no marker and is rebuilt) and against same-JVM races (builders
-  * `synchronized`), but two *processes* sharing `target/` could race:
-  * one reads a half-built component directory after the other creates
-  * the root mid-write (round-9 advice). This helper closes that window
-  * with the standard commit-by-rename protocol:
+  * '''Key.''' A root is a function of three things:
+  *   - the stage's inputs: each input path and its content key (the
+  *     sorted (name, length, mtime) listing of its files — a listing,
+  *     no data read), so a source rewritten under the same path gets a
+  *     new root;
+  *   - the stage's parameters, which tell apart artifacts built from
+  *     the same inputs;
+  *   - the code fingerprint: one MD5 over the bytes of every compiled
+  *     class on the code source that holds `Staging` (a classes
+  *     directory or a jar), computed once per JVM. An artifact built by
+  *     other code is never served, so no key carries a hand-kept
+  *     version tag.
   *
-  *   1. build every component under a private temp root
-  *      (`<out>.tmp-<nonce>`) that no reader ever probes;
-  *   2. write the root `_SUCCESS` marker inside the temp root, AFTER
-  *      all component writes — the finished-stage invariant;
-  *   3. `rename(tmp, out)` — one filesystem metadata operation
-  *      (atomic on POSIX and HDFS). Readers see either nothing or the
-  *      complete finished stage, never an intermediate state.
+  * '''Layout.''' Key `name = "<family>/<artifact>"` lands at
+  * `target/<family>/graft_<artifact>_<8 hex>`, relative to the working
+  * directory.
   *
-  * Since round 15 the rename protocol runs under a cross-process
-  * LOCK FILE (`<out>.lock`, create-if-absent — a true single-writer
-  * create on HDFS; on the local FS Hadoop's create(overwrite=false)
-  * is check-then-create, i.e. NOT atomic, which is one more reason
-  * the rename commit below stays the correctness backstop): competing
-  * processes serialize the whole check-build-commit sequence, so the
-  * former two-metadata-op residual windows (pre-delete re-check →
-  * delete; pre-rename check → rename) cannot interleave at all in the
-  * locked path. The lock is liveness-guarded AND heartbeat-kept
-  * (round 16): the holder advances the lock's mtime from a daemon
-  * thread every quarter of `graft.staging.lock.stale.ms` (default
-  * 10 min), so a live build of ANY duration never looks crashed,
-  * while a holder that died mid-build leaves a frozen mtime and a
-  * waiter takes the lock over after the stale bound. The lock body
-  * carries an owner token (pid + nonce) and release verifies
-  * ownership before deleting — a mistaken takeover can no longer
-  * cascade into deleting the new holder's lock. A takeover that races
-  * a live-but-stalled holder degrades exactly to the pre-lock
-  * lock-free protocol, for which the rename commit remains the
-  * correctness backstop: content-fingerprinted keys make every
-  * competing build byte-equivalent, so the served stage is correct in
-  * all interleavings, and the final marker `require` refuses to serve
-  * a destination that holds no finished stage. StagingSpec races two
-  * real JVMs on one key and two threads across the stale bound to pin
-  * the contract.
-  *
-  * If the rename fails because a concurrent builder won the race, the
-  * loser discards its temp root and serves the winner's stage — both
-  * builders computed the same content-fingerprinted artifact, so either
-  * result is correct. Same-JVM duplicate builds are still elided by the
-  * caller's `synchronized`; this helper adds only the cross-process
-  * commit discipline.
-  *
-  * At cluster scale the same protocol holds on any store with atomic
-  * directory rename (HDFS, POSIX NFS); object stores without it would
-  * swap this for a manifest-pointer commit — the rename is isolated
-  * here precisely so that swap is one function. */
+  * '''Commit.''' A stage is finished when its root holds a `_SUCCESS`
+  * marker. A missing stage is built under a private temp root
+  * (`<root>.tmp-<nonce>`) that no reader probes, the marker is written
+  * inside it after every component, and one `rename(tmp, root)` —
+  * atomic on POSIX and HDFS — publishes it, so readers see nothing or
+  * the finished stage. Builders of one stage serialize on a per-root
+  * monitor within a JVM and on a lock file (`<root>.lock`) across
+  * processes; the lock is heartbeat-kept while its holder lives and
+  * taken over once its mtime is older than `graft.staging.lock.stale.ms`
+  * (default 10 min). When a takeover races a live holder, both build the
+  * same bytes (same key), the rename commit decides which is served,
+  * and a root without a marker is never served. On a store without
+  * atomic directory rename, the commit is the one function to swap for
+  * a manifest-pointer commit. */
 object Staging {
 
-  /** Absolute form of a staged-artifact root, for embedding in oracle
-    * SQL. The DuckDB oracle harness runs from a DIFFERENT working
-    * directory than the builder, so a relative `target/...` glob in the
-    * oracle text resolves to nothing there (the round-14 regression:
-    * 16 entries erred on exactly this). Every oracle-root variable must
-    * store this form, never the raw relative staging path. */
+  /** A stage: `name` is `<family>/<artifact>`, `inputs` the paths of the
+    * tables (files or directories) it is built from, `params` whatever
+    * else tells it apart from a stage of the same name and inputs. */
+  final case class Key(name: String, inputs: Seq[String], params: Any*) {
+    require(name.matches("[a-z0-9_]+/[a-z0-9_]+"), s"stage name $name is not <family>/<artifact>")
+  }
+
+  /** The root of `key`'s stage, whether or not it is built yet. */
+  def root(spark: SparkSession, key: Key): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val inputs = key.inputs.map(p => s"$p=${contentKey(conf, p)}")
+    val Array(family, artifact) = key.name.split('/')
+    val id = Bucketed.md5hex(
+      (Seq(key.name, codeFingerprint) ++ inputs ++ key.params.map(String.valueOf)).mkString("\n"))
+    s"target/$family/graft_${artifact}_${id.take(8)}"
+  }
+
+  /** The root of `key`'s stage, built first by `build(tmpRoot)` (which
+    * writes every component under the given temp root) unless it is
+    * already finished. */
+  def stage(spark: SparkSession, key: Key)(build: String => Unit): String =
+    ensureConf(spark.sparkContext.hadoopConfiguration, root(spark, key))(build)
+
+  /** Absolute form of a stage root, for embedding in oracle SQL: the
+    * oracle harness runs from another working directory, where the
+    * relative root resolves to nothing. */
   def abs(path: String): String = new java.io.File(path).getAbsolutePath
 
-  /** One lock object per stage path — same-JVM build serialization is
-    * PER STAGE, not global (round-10 advice: callers' object-level
-    * `synchronized` serialized builders of unrelated stages behind one
-    * monitor). Never pruned: bounded by the number of distinct stage
-    * paths a session touches, each entry a bare Object. */
+  /** Content key of a table: MD5 of its files' sorted
+    * (name, length, mtime) triples. */
+  private def contentKey(conf: org.apache.hadoop.conf.Configuration, table: String): String = {
+    val p = new Path(table)
+    val fs = p.getFileSystem(conf)
+    val files =
+      if (!fs.exists(p)) Seq.empty
+      else if (fs.getFileStatus(p).isFile) Seq(fs.getFileStatus(p))
+      else fs.listStatus(p).toSeq.sortBy(_.getPath.getName)
+    Bucketed.md5hex(files.map(st =>
+      s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}").mkString("|"))
+  }
+
+  /** MD5 over the compiled classes of this code source, in path order. */
+  private lazy val codeFingerprint: String = {
+    val src = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val md = MessageDigest.getInstance("MD5")
+    if (Files.isDirectory(src)) {
+      val walk = Files.walk(src)
+      try walk.filter(_.toString.endsWith(".class")).sorted().forEach { p =>
+        md.update(src.relativize(p).toString.getBytes(UTF_8))
+        md.update(Files.readAllBytes(p))
+      } finally walk.close()
+    } else md.update(Files.readAllBytes(src))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** One monitor per stage root: builders of the same stage in one JVM
+    * serialize, builders of different stages run concurrently. */
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Idempotently ensure the finished stage at `out`: if its root
-    * `_SUCCESS` marker is absent, run `build(tmpRoot)` (which must
-    * write every component under the given temp root) and commit via
-    * atomic rename. Same-JVM callers of the SAME stage serialize here
-    * (duplicate-build elision — callers need no `synchronized` of their
-    * own); different stages build concurrently. Returns `out`. */
-  def ensure(spark: SparkSession, out: String)(build: String => Unit): String =
-    ensureConf(spark.sparkContext.hadoopConfiguration, out)(build)
-
-  /** Spark-free form (the helper only ever needs a Hadoop
-    * configuration) — what the two-JVM race probe drives. */
-  def ensureConf(conf: org.apache.hadoop.conf.Configuration, out: String)(
+  /** Commit the stage at `out` unless it is finished; returns `out`.
+    * Spark-free, so the two-JVM race probe can drive it directly. */
+  private[graft] def ensureConf(conf: org.apache.hadoop.conf.Configuration, out: String)(
       build: String => Unit): String =
     locks.computeIfAbsent(out, _ => new Object).synchronized {
       ensureLocked(conf, out)(build)
     }
 
-  /** Serialize competing PROCESSES of one stage behind a
-    * create-if-absent lock file (single-writer create on HDFS;
-    * check-then-create on the local FS — NOT atomic there, which is
-    * one more reason the rename commit stays the correctness
-    * backstop). Liveness: a waiter that sees the lock's mtime frozen
-    * past the staleness bound deletes it and retries — a crashed
-    * holder cannot block the stage forever.
-    *
-    * Round-16 hardening (r15 advice): the holder HEARTBEATS the lock —
-    * a daemon thread advances its mtime every staleMs/4 — so a LIVE
-    * build of any duration (staged trainings can exceed the stale
-    * bound at stress tiers) never looks crashed to a waiter; staleness
-    * now means "holder stopped heartbeating", not "build ran long".
-    * And the lock carries an OWNER TOKEN (pid + nonce): the
-    * finally-release deletes the lock only if the token on disk is
-    * still its own, so a waiter that (mis)took over from a stalled-
-    * but-live holder keeps ITS lock when the original holder finishes
-    * — no delete cascade. A takeover racing a live holder still
-    * degrades to the lock-free rename protocol, for which the
-    * content-keyed rename commit remains correct in all
-    * interleavings. */
+  /** Run `body` holding `<out>.lock` against other processes. The lock
+    * file is created if absent (a single-writer create on HDFS;
+    * check-then-create on the local FS, which is why the rename commit
+    * stays the correctness backstop). The holder advances the lock's
+    * mtime every staleMs/4 from a daemon thread, so a live build of any
+    * length never looks crashed; a waiter that sees the mtime frozen
+    * past staleMs deletes the lock and retries. The lock holds an owner
+    * token (pid + nonce), and release deletes it only if the token is
+    * still its own, so a holder never deletes a lock taken over from it. */
   private[graft] def withProcessLock[T](fs: org.apache.hadoop.fs.FileSystem,
       out: String)(body: => T): T = {
     val lock = new Path(s"$out.lock")
@@ -129,7 +136,7 @@ object Staging {
       try {
         Option(lock.getParent).foreach(fs.mkdirs(_))
         val os = fs.create(lock, false)
-        os.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        os.write(token.getBytes(UTF_8))
         os.close()
         acquired = true
       } catch {
@@ -141,14 +148,9 @@ object Staging {
           if (stale) fs.delete(lock, false) else Thread.sleep(50L)
       }
     }
-    // heartbeat: keep the held lock's mtime advancing while the build
-    // runs; stops on interrupt or when the lock file is GONE (taken
-    // over and deleted — nothing left to keep alive). Any OTHER
-    // IOException is treated as transient and the loop continues
-    // (r16 advice: a single hiccup from fs.setTimes must not silently
-    // freeze the mtime of a still-running long build — a waiter would
-    // then declare it stale and take over, reverting to the pre-lock
-    // race for that build).
+    // heartbeat until interrupted or the lock file is gone (taken over);
+    // any other IOException is transient — one failed setTimes must not
+    // freeze the mtime of a running build
     val hb = new Thread(() => {
       try {
         var live = true
@@ -166,7 +168,6 @@ object Staging {
     hb.start()
     try body finally {
       hb.interrupt()
-      // ownership check before release: delete only OUR lock
       try {
         val mine =
           try {
@@ -174,8 +175,7 @@ object Staging {
             val buf = new Array[Byte](256)
             val n = math.max(0, in.read(buf))
             in.close()
-            new String(buf, 0, n,
-              java.nio.charset.StandardCharsets.UTF_8) == token
+            new String(buf, 0, n, UTF_8) == token
           } catch { case _: java.io.FileNotFoundException => false }
         if (mine) fs.delete(lock, false)
       } catch { case _: java.io.IOException => () }
@@ -188,43 +188,28 @@ object Staging {
     val fs = root.getFileSystem(conf)
     val ok = new Path(out, "_SUCCESS")
     if (!fs.exists(ok)) withProcessLock(fs, out) {
-      // the lock serializes competing processes around the whole
-      // check-build-commit sequence; a waiter that acquires it after a
-      // winner committed sees the marker HERE and serves the winner's
-      // stage without building
+      // a waiter that acquires the lock after a winner committed sees
+      // the marker here and serves the winner's stage
       if (!fs.exists(ok)) {
-        // markerless residue at the root (a crashed build) is never
-        // served by anyone — clear it so the commit rename finds no
-        // destination (Hadoop's local rename would otherwise NEST the
-        // temp root inside an existing directory instead of replacing
-        // it). Under the lock no live process can commit between this
-        // check and the delete; only a stale-lock takeover racing a
-        // live holder re-opens the window, and the rename commit below
-        // remains that path's correctness backstop.
+        // markerless residue (a crashed build) is never served: clear it
+        // so the rename finds no destination (Hadoop's local rename would
+        // otherwise nest the temp root inside an existing directory)
         if (fs.exists(root)) fs.delete(root, true)
-        // nanoTime + thread id: unique enough for concurrent builders of
-        // the same stage without polluting the content-keyed namespace
         val tmp = new Path(
           s"$out.tmp-${java.lang.Thread.currentThread.getId}-${System.nanoTime}")
         try {
           build(tmp.toString)
           fs.create(new Path(tmp, "_SUCCESS")).close()
           Option(root.getParent).foreach(fs.mkdirs(_))
-          if (!fs.exists(ok)) {
-            if (!fs.rename(tmp, root)) {
-              // rename refused: either a takeover-raced process
-              // committed first (serve its stage) or a real failure
-              // (surface it)
-              require(fs.exists(ok),
-                s"stage commit failed and no finished stage exists at $out")
-            }
+          if (!fs.exists(ok) && !fs.rename(tmp, root)) {
+            // a takeover-raced process committed first (serve its
+            // stage) or the rename really failed (surface it)
+            require(fs.exists(ok),
+              s"stage commit failed and no finished stage exists at $out")
           }
         } finally {
           if (fs.exists(tmp)) fs.delete(tmp, true)
         }
-        // serve nothing unverified: whichever branch ran, the
-        // destination must hold the finished-stage marker before any
-        // caller reads it
         require(fs.exists(ok), s"no finished stage marker at $out after commit")
       }
     }

@@ -120,8 +120,7 @@ object StreamTwins {
         // the corpus index comes from the write-once fingerprinted
         // parquet stage — the streaming deployment's build-once/probe-
         // many economics; a repeated invocation pays only the probe
-        val idx = IngestGateStream.indexStaged(s,
-          s"$dir/mod3/${Layout.contentKey(s, s"$dir/documents.parquet")}",
+        val idx = IngestGateStream.indexStaged(s, Seq(s"$dir/documents.parquet"), "mod3",
           n = 3, tau = 0.7)(docs.filter(col("doc_id") % 3 =!= 0))
         IngestGateStream.matches(idx,
           docs.filter(col("doc_id") % 3 === 0)

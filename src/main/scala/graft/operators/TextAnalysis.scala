@@ -240,9 +240,7 @@ object TextAnalysis {
       "ISO-8859-1")
 
   def mojibakeDocuments(spark: SparkSession, dir: String): String = synchronized {
-    val out = "target/mojibake/graft_documents_" +
-      Bucketed.md5hex(s"$dir/${Layout.contentKey(spark, s"$dir/documents.parquet")}").take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, Staging.Key("mojibake/documents", Seq(s"$dir/documents.parquet"))) { tmp =>
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("source"),
           mojibakeCorruptPlanted(col("text")).as("text"))

@@ -30,6 +30,10 @@ import graft.sources.Tables
   */
 object TextIndex {
 
+  /** A stage built from `dir`'s documents table. */
+  private def docsKey(name: String, dir: String): Staging.Key =
+    Staging.Key(name, Seq(s"$dir/documents.parquet"))
+
   /** (term, doc_id, tf) postings from a (doc_id, text) corpus — the
     * inverted-index rows, one per distinct term per doc. */
   def postings(docs: DataFrame): DataFrame =
@@ -162,7 +166,6 @@ object TextIndex {
   private def rankedBm25(ranked: DataFrame): DataFrame =
     ranked.withColumn("rank",
         row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(lit(0))
           .orderBy(col("score").desc, col("doc_id"))).cast("int"))
       .select("doc_id", "rank", "n_terms", "tf_sum", "dl")
       .orderBy("rank")
@@ -246,13 +249,9 @@ object TextIndex {
     * by atomic rename ([[Staging]]), content-keyed like every staged
     * artifact. */
   def bm25Index(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val out = "target/text/graft_bm25_" + Bucketed.md5hex(
-      s"$dir/b$TermBuckets/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, docsKey("text/bm25", dir)) { tmp =>
       writeIndexSegment(Tables.documents(spark, dir), tmp)
     }
-    out
   }
 
   /** One index segment under `tmp`: `meta/` (n_docs, Σdl — one row) +
@@ -290,15 +289,11 @@ object TextIndex {
     * (baseRoot, deltaRoot). */
   def bm25DeltaIndex(spark: org.apache.spark.sql.SparkSession, dir: String)
       : (String, String) = {
-    val key = s"$dir/split10/b$TermBuckets/" +
-      Layout.contentKey(spark, s"$dir/documents.parquet")
-    val baseRoot = "target/text/graft_bm25b_" + Bucketed.md5hex(key).take(8)
-    Staging.ensure(spark, baseRoot) { tmp =>
+    val baseRoot = Staging.stage(spark, docsKey("text/bm25b", dir)) { tmp =>
       writeIndexSegment(
         Tables.documents(spark, dir).filter(col("doc_id") % 10 =!= 0), tmp)
     }
-    val deltaRoot = "target/text/graft_bm25d_" + Bucketed.md5hex(s"$key/delta").take(8)
-    Staging.ensure(spark, deltaRoot) { tmp =>
+    val deltaRoot = Staging.stage(spark, docsKey("text/bm25d", dir)) { tmp =>
       writeIndexSegment(
         Tables.documents(spark, dir).filter(col("doc_id") % 10 === 0), tmp)
     }
@@ -338,10 +333,7 @@ object TextIndex {
     * stays bytes-per-retraction and the index is never rewritten. */
   def bm25TombstonesStaged(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val out = "target/text/graft_bm25t_" + Bucketed.md5hex(
-      s"$dir/ts5/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, docsKey("text/bm25t", dir)) { tmp =>
       val toks = TextAnalysis.tokens(col("text"))
       Tables.documents(spark, dir)
         .filter(col("doc_id") % 10 === 5)
@@ -413,10 +405,7 @@ object TextIndex {
       dir: String): String = {
     val idx = bm25Index(spark, dir)
     val ts = bm25TombstonesStaged(spark, dir)
-    val out = "target/text/graft_bm25dc_" + Bucketed.md5hex(
-      s"$dir/delcompact/b$TermBuckets/" +
-        Layout.contentKey(spark, s"$dir/documents.parquet")).take(8)
-    Staging.ensure(spark, out) { tmp =>
+    Staging.stage(spark, docsKey("text/bm25dc", dir)) { tmp =>
       val tsIds = spark.read.parquet(s"$ts/ids")
       spark.read.parquet(s"$idx/postings")
         .join(broadcast(tsIds.select("doc_id")), Seq("doc_id"), "left_anti")
@@ -431,7 +420,6 @@ object TextIndex {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/meta")
     }
-    out
   }
 
   /** Root of the staged compacted index the last q171 probe served

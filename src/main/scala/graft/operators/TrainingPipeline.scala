@@ -66,31 +66,32 @@ object TrainingPipeline {
         .select("doc_id"),
       Seq("doc_id"))
 
-  /** Root paths of the three fingerprinted stage materializations for
-    * (`dir`, `p`) — keyed on the SOURCE table's content fingerprint plus
-    * every stage parameter (shingle n, Jaccard tau, gate p), so a source
-    * regenerated under the same path or a changed knob invalidates the
-    * stages instead of silently serving stale survivors. */
+  /** Keys of the three stages for (`dir`, `p`): the source table plus
+    * the gate p, so a source regenerated under the same path or a
+    * changed gate invalidates the stages instead of silently serving
+    * stale survivors. */
+  private def stageKeys(dir: String, p: Double): (Staging.Key, Staging.Key, Staging.Key) = {
+    def key(name: String) = Staging.Key(name, Seq(s"$dir/documents.parquet"), p)
+    (key("pipeline_stages/after_exact"), key("pipeline_stages/after_near"),
+      key("pipeline_stages/corpus"))
+  }
+
+  /** Root paths of the three stages for (`dir`, `p`). */
   private[graft] def stageRoots(spark: SparkSession, dir: String,
       p: Double): (String, String, String) = {
-    val id = Bucketed.md5hex(
-      s"$dir/n3_tau0.7/p$p/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
-    (s"target/pipeline_stages/graft_after_exact_$id",
-      s"target/pipeline_stages/graft_after_near_$id",
-      s"target/pipeline_stages/graft_corpus_$id")
+    val (e, n, c) = stageKeys(dir, p)
+    (Staging.root(spark, e), Staging.root(spark, n), Staging.root(spark, c))
   }
 
   /** Write-once materialization: build + write `df` only when no
-    * finished stage exists, committed by atomic rename ([[Staging]] —
-    * a concurrent process never reads a half-written stage), then hand
-    * every consumer the plain parquet scan (pruned/pushed-down like
-    * any table read). */
-  private[graft] def materialized(spark: SparkSession, out: String)
-      (df: => DataFrame): DataFrame = {
-    Staging.ensure(spark, out)(tmp => df.write.mode("overwrite").parquet(tmp))
-    spark.read.parquet(out)
-  }
+    * finished stage exists, then hand every consumer the plain parquet
+    * scan (pruned/pushed-down like any table read). */
+  private def materialized(spark: SparkSession, key: Staging.Key)
+      (df: => DataFrame): DataFrame =
+    spark.read.parquet(Staging.stage(spark, key)(tmp => df.write.mode("overwrite").parquet(tmp)))
+
+  private def clustersKey(dir: String) =
+    Staging.Key("pipeline_stages/clusters", Seq(s"$dir/documents.parquet"))
 
   /** Fingerprinted root of the RAW-corpus near-dup cluster stage for
     * `dir` — q28 prefix-filter pairs over the documents table as-is
@@ -102,9 +103,7 @@ object TrainingPipeline {
     * entries (18.9 s + 13.8 s at sf0.1) spending their time on work a
     * prior run had already proven. */
   private[graft] def clustersRoot(spark: SparkSession, dir: String): String =
-    "target/pipeline_stages/graft_clusters_" + Bucketed.md5hex(
-      s"$dir/raw_n3_tau0.7/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
+    Staging.root(spark, clustersKey(dir))
 
   /** The (doc_id, cluster_id) near-dup cluster frame over `dir`'s raw
     * documents table, as a write-once fingerprinted parquet stage: the
@@ -115,7 +114,7 @@ object TrainingPipeline {
     * q98/q100's oracles — which gate that composition — are unchanged. */
   def nearDupClustersStaged(spark: SparkSession, dir: String): DataFrame =
     synchronized {
-      materialized(spark, clustersRoot(spark, dir)) {
+      materialized(spark, clustersKey(dir)) {
         DupClusters.connectedComponents(
           Dedup.jaccardJoin(Tables.documents(spark, dir), n = 3, tau = 0.7)
             .select(col("doc_a").as("u"), col("doc_b").as("v")))
@@ -129,13 +128,13 @@ object TrainingPipeline {
     * with unchanged inputs rebuilds nothing. */
   def stagedCuration(spark: SparkSession, dir: String,
       p: Double = 0.10): (DataFrame, DataFrame, DataFrame) = synchronized {
-    val (exactPath, nearPath, corpusPath) = stageRoots(spark, dir, p)
+    val (exactKey, nearKey, corpusKey) = stageKeys(dir, p)
     val docs = Tables.documents(spark, dir)
-    val afterExact = materialized(spark, exactPath)(
+    val afterExact = materialized(spark, exactKey)(
       docs.join(exactSurvivors(docs), Seq("doc_id")))
-    val afterNear = materialized(spark, nearPath)(
+    val afterNear = materialized(spark, nearKey)(
       afterExact.join(nearDupDropped(afterExact), Seq("doc_id"), "left_anti"))
-    val corpus = materialized(spark, corpusPath)(lengthGated(afterNear, p))
+    val corpus = materialized(spark, corpusKey)(lengthGated(afterNear, p))
     (afterExact, afterNear, corpus)
   }
 

@@ -326,11 +326,16 @@ object Unigram {
 
   // ---- staged artifact ----
 
+  private def docsKey(name: String, dir: String, params: Any*): Staging.Key =
+    Staging.Key(name, Seq(s"$dir/documents.parquet"), params: _*)
+
+  private def uniKey(dir: String, vocabSize: Int) = docsKey("unigram/uni", dir, vocabSize)
+
+  private def uniByteKey(dir: String, vocabSize: Int) = docsKey("unigram/unib", dir, vocabSize)
+
   private[graft] def unigramRoot(spark: SparkSession, dir: String,
       vocabSize: Int): String =
-    "target/unigram/graft_uni_" + Bucketed.md5hex(
-      s"$dir/v$vocabSize/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
+    Staging.root(spark, uniKey(dir, vocabSize))
 
   /** Write-once staged unigram tokenizer: `pieces/` (id, piece, logp,
     * logp_nano) + `segments/` (word, freq, syms) under a content-keyed
@@ -339,8 +344,7 @@ object Unigram {
     * staging economics). */
   def learnStaged(spark: SparkSession, dir: String,
       vocabSize: Int = VocabSize): (DataFrame, DataFrame) = {
-    val out = unigramRoot(spark, dir, vocabSize)
-    Staging.ensure(spark, out) { tmp =>
+    val out = Staging.stage(spark, uniKey(dir, vocabSize)) { tmp =>
       val wf = Bpe.wordTable(Tables.documents(spark, dir))
       val (pieces, segs) = learnLocal(wf, vocabSize)
       spark.createDataFrame(pieces).write.mode("overwrite")
@@ -370,14 +374,11 @@ object Unigram {
     * (shared by [[learnStagedBytes]] and the q150 oracle). */
   private[graft] def unigramByteRoot(spark: SparkSession, dir: String,
       vocabSize: Int): String =
-    "target/unigram/graft_unib_" + Bucketed.md5hex(
-      s"$dir/v$vocabSize/bytes/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
+    Staging.root(spark, uniByteKey(dir, vocabSize))
 
   def learnStagedBytes(spark: SparkSession, dir: String,
       vocabSize: Int = VocabSize): (DataFrame, DataFrame) = {
-    val out = unigramByteRoot(spark, dir, vocabSize)
-    Staging.ensure(spark, out) { tmp =>
+    val out = Staging.stage(spark, uniByteKey(dir, vocabSize)) { tmp =>
       val wf = Bpe.wordTable(Tables.documents(spark, dir))
       val (pieces, segs) =
         learnLocalWith(wf, vocabSize, byteMap, Bpe.ByteEndOfWord)
@@ -411,11 +412,8 @@ object Unigram {
   private[graft] def twinPiecesStaged(spark: SparkSession, dir: String,
       vocabSize: Int = VocabSize,
       mapWord: String => String = identity,
-      keySuffix: String = ""): String = {
-    val out = "target/unigram/graft_unitwin_" + Bucketed.md5hex(
-      s"$dir/v$vocabSize$keySuffix/${Layout.contentKey(spark, s"$dir/documents.parquet")}")
-      .take(8)
-    Staging.ensure(spark, out) { tmp =>
+      keySuffix: String = ""): String =
+    Staging.stage(spark, docsKey("unigram/unitwin", dir, vocabSize, keySuffix)) { tmp =>
       val wf = Bpe.wordTable(Tables.documents(spark, dir))
         .map { case (w, f) => (mapWord(w), f) }
       val (ranked, _) = graft.UnigramReference.learn(wf, vocabSize)
@@ -424,8 +422,6 @@ object Unigram {
         }).toDF("id", "piece", "logp_nano")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/pieces")
     }
-    out
-  }
 
   /** The shared twin-oracle SQL (staged twin read back in id order). */
   private def twinOracleSql(root: Option[String]): Option[String] =

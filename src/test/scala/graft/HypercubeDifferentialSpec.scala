@@ -88,6 +88,32 @@ class HypercubeDifferentialSpec extends AnyFunSuite {
     assert(scan.rdd.getNumPartitions === math.ceil(57600 * 16.0 / chunk).toInt)
   }
 
+  test("EtlMain --stage-times runs the default path's plan: no range-partitioned exchange") {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("stage_times_sentinel")) drained.countDown()
+        else plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = Files.createTempDirectory("etlmain-staged").resolve("cube")
+      Console.withOut(new java.io.ByteArrayOutputStream())(
+        EtlMain.run(spark, folder, out.toString, singleFile = true, stageTimes = true))
+      // listener events arrive in order: once the sentinel is seen, every
+      // plan of the run has been recorded
+      spark.range(1).toDF("stage_times_sentinel").collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    val executed = plans.asScala.toSeq
+    assert(executed.exists(_.contains("HashAggregate")), s"the cube's plan was not seen: $executed")
+    assert(!executed.exists(_.contains("rangepartitioning")),
+      s"--stage-times ran a range-partitioned sort:\n${executed.mkString("\n\n")}")
+  }
+
   test("fromFolder(...).collect() returns the rows in key order") {
     SparkTestSession.withConf("spark.sql.shuffle.partitions" -> "7") {
       val keys = packed().collect().map(r => Seq(0, 1, 2, 3, 4).map(r.getInt)).toSeq

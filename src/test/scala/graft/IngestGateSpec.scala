@@ -46,8 +46,8 @@ class IngestGateSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter(col("doc_id") % 3 =!= 0)
     val batch = docs.filter(col("doc_id") % 3 === 0).withColumn("ts", lit(t0))
-    val key = s"$sf/mod3/${graft.operators.Layout.contentKey(spark, s"$sf/documents.parquet")}"
-    val staged = IngestGateStream.indexStaged(spark, key, n = 3, tau = 0.7)(corpus)
+    val inputs = Seq(s"$sf/documents.parquet")
+    val staged = IngestGateStream.indexStaged(spark, inputs, "mod3", n = 3, tau = 0.7)(corpus)
     val live = IngestGateStream.buildIndex(corpus, n = 3, tau = 0.7)
     try {
       val got = asSet(IngestGateStream.matches(staged, batch, n = 3, tau = 0.7, "ts")
@@ -59,8 +59,8 @@ class IngestGateSpec extends AnyFunSuite {
       assert(got === expect)
       assert(got.nonEmpty)
       // re-invocation reads the finished stage: every index file untouched
-      val root = "target/ingest_gate/graft_ig_" +
-        graft.operators.Bucketed.md5hex(s"$key/3/0.7").take(8)
+      val root = graft.operators.Staging.root(spark,
+        IngestGateStream.indexKey(inputs, "mod3", n = 3, tau = 0.7))
       val p = new org.apache.hadoop.fs.Path(root)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def states() = {
@@ -74,7 +74,7 @@ class IngestGateSpec extends AnyFunSuite {
       }
       val before = states()
       assert(before.nonEmpty)
-      assert(IngestGateStream.indexStaged(spark, key, n = 3, tau = 0.7)(
+      assert(IngestGateStream.indexStaged(spark, inputs, "mod3", n = 3, tau = 0.7)(
         sys.error("build must not run on a finished stage")).prefix.count() > 0)
       assert(states() === before)
     } finally { live.unpersist(); spark.sharedState.cacheManager.clearCache() }

@@ -163,6 +163,17 @@ class RelationalSpec extends AnyFunSuite {
     assert(math.abs(s30.size / n - 0.3) < 0.07)
   }
 
+  test("localize refuses a frame larger than its cap and names the small-group contract") {
+    import graft.operators.Relational
+    val big = spark.range(Relational.LocalizeCap + 1L).toDF("x")
+    val e = intercept[IllegalArgumentException](Relational.localize(big))
+    assert(e.getMessage.contains(s"more than ${Relational.LocalizeCap} rows"))
+    assert(e.getMessage.contains("Curation.quantileFilter"))
+    assert(e.getMessage.contains("graft_quantile_gate"))
+    assert(e.getMessage.contains("few distinct values"))
+    assert(Relational.localize(big.limit(3)).count() === 3)
+  }
+
   test("every oracle key exists in queries") {
     val qs = SparkEntry.queries.keySet
     SparkEntry.oracleSql.keys.foreach(k => assert(qs.contains(k)))

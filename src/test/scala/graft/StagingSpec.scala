@@ -131,6 +131,61 @@ class StagingSpec extends AnyFunSuite {
     Files.delete(lock)
   }
 
+  private lazy val spark = SparkTestSession.spark
+
+  /** A one-file input table under a fresh temp directory. */
+  private def table(content: String): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("staging-key").resolve("t.parquet")
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve("part-0"), content)
+    dir
+  }
+
+  test("a stage root is target/<family>/graft_<artifact>_<8 hex>") {
+    val in = table("a").toString
+    val root = Staging.root(spark, Staging.Key("ann/ivf", Seq(in), 256, 3))
+    assert(root.matches("target/ann/graft_ivf_[0-9a-f]{8}"), root)
+    intercept[IllegalArgumentException](Staging.Key("ivf", Seq(in)))
+  }
+
+  test("the same inputs and parameters give the same root") {
+    val in = table("a").toString
+    def root() = Staging.root(spark, Staging.Key("ann/ivf", Seq(in), 256, 3))
+    assert(root() === root())
+  }
+
+  test("a changed parameter or rewritten input content gives a new root") {
+    val in = table("a")
+    def root(centroids: Int) =
+      Staging.root(spark, Staging.Key("ann/ivf", Seq(in.toString), centroids, 3))
+    val before = root(256)
+    assert(root(64) !== before)
+    // rewrite the input under the same path: new length and mtime
+    val part = in.resolve("part-0")
+    Files.writeString(part, "bb")
+    Files.setLastModifiedTime(part, java.nio.file.attribute.FileTime.fromMillis(
+      Files.getLastModifiedTime(part).toMillis + 5000L))
+    assert(root(256) !== before)
+  }
+
+  test("stage commits under the root and a second call rebuilds nothing") {
+    val in = table(java.util.UUID.randomUUID().toString).toString
+    val key = Staging.Key("staging_spec/probe", Seq(in))
+    var builds = 0
+    def once() = Staging.stage(spark, key) { tmp =>
+      builds += 1
+      Files.createDirectories(Paths.get(tmp))
+      Files.writeString(Paths.get(tmp, "component.txt"), "s")
+    }
+    val out = once()
+    try {
+      assert(out === Staging.root(spark, key))
+      assert(Files.exists(Paths.get(out, "_SUCCESS")))
+      assert(once() === out)
+      assert(builds === 1)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+  }
+
   test("second ensure of a committed stage rebuilds nothing and takes no lock") {
     val out = Files.createTempDirectory("staging-idem").resolve("stage_z")
       .toString
