@@ -9,7 +9,7 @@ import graft.sources.{FixedWidthBinary, FixedWidthBinaryV2}
   * [-t threads …]` (reference `ETL.java:272-294`) becomes
   *
   * {{{
-  *   runMain graft.EtlMain <data_folder> <output_dir> [--partitioned]
+  *   runMain graft.EtlMain <data_folder> <output_dir> [--partitioned] [--stage-times]
   * }}}
   *
   * reading the fixed-name inputs `clients.csv`, `contracts.csv`,
@@ -20,6 +20,7 @@ import graft.sources.{FixedWidthBinary, FixedWidthBinaryV2}
   * Spark's job (`$SPARK_GRAFT_CPUS` sizes the local session; on a real
   * cluster, executor config). `--partitioned` writes one file per
   * partition instead of the reference's single file (the 100 TB path).
+  * Any other argument prints the usage and exits with status 2.
   *
   * Per-stage timing: the reference times its 6 stages and, under
   * `-l 1`, emits one compact CSV line
@@ -42,19 +43,29 @@ import graft.sources.{FixedWidthBinary, FixedWidthBinaryV2}
   * human-readable two-bucket line is unchanged.
   */
 object EtlMain {
+  /** A parsed command line. */
+  final case class Args(dataFolder: String, outDir: String, singleFile: Boolean, stageTimes: Boolean)
+
+  private val Flags = Set("--partitioned", "--stage-times")
+
+  /** Exactly two positional arguments plus any of the known flags, else None. */
+  def parseArgs(args: Seq[String]): Option[Args] = {
+    val (flags, positional) = args.partition(_.startsWith("-"))
+    positional match {
+      case Seq(dataFolder, outDir) if flags.forall(Flags) =>
+        Some(Args(dataFolder, outDir, !flags.contains("--partitioned"), flags.contains("--stage-times")))
+      case _ => None
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
+    val a = parseArgs(args.toSeq).getOrElse {
       System.err.println(
         "usage: EtlMain <data_folder> <output_dir> [--partitioned] [--stage-times]")
       sys.exit(2)
     }
-    val dataFolder = args(0)
-    val outDir = args(1)
-    val singleFile = !args.contains("--partitioned")
-    val stageTimes = args.contains("--stage-times")
-
     val spark: SparkSession = GraftSession.local("graft-etl")
-    run(spark, dataFolder, outDir, singleFile, stageTimes)
+    run(spark, a.dataFolder, a.outDir, a.singleFile, a.stageTimes)
     spark.stop()
   }
 
@@ -69,17 +80,16 @@ object EtlMain {
       val tPlan = System.nanoTime()
       ReferenceHypercube.writeCsv(cube, outDir, singleFile)
       val tDone = System.nanoTime()
-      // "plan+stats", not "plan": fromFolder's packed-key branch RUNS the
-      // dim-statistics aggregate (a real Spark job over the dims) before
-      // returning, so the first bucket is planning plus that job — calling
-      // it bare "plan" would misattribute execution work to the planner
+      // "plan+stats", not "plan": fromFolder RUNS the dim-statistics
+      // aggregate (a real Spark job over the dims) before returning, so
+      // the first bucket is planning plus that job — calling it bare
+      // "plan" would misattribute execution work to the planner
       println(f"plan+stats: ${(tPlan - t0) / 1e9}%.3f s  execute+write: ${(tDone - tPlan) / 1e9}%.3f s")
     }
   }
 
-  /** The `-l 1` twin: the default path's plan — `hypercube` with the
-    * same [[ReferenceHypercube.smallDims]] broadcast gate as `fromFolder`,
-    * then `writeCsv` — over pre-materialized dims, with per-stage wall
+  /** The `-l 1` twin: the default path's plan — `hypercube`, then
+    * `writeCsv` — over pre-materialized dims, with per-stage wall
     * times measured across eager materialization boundaries. Both paths
     * write the same CSV (HypercubeDifferentialSpec). */
   private def runStaged(spark: SparkSession, dataFolder: String,
@@ -99,8 +109,7 @@ object EtlMain {
         .localCheckpoint(true))
     val cube = timed(2)(
       ReferenceHypercube.hypercube(cl, co,
-        ReferenceHypercube.invoices(spark, s"$dataFolder/invoices.bin"),
-        broadcastDim = ReferenceHypercube.smallDims(spark, dataFolder))
+        ReferenceHypercube.invoices(spark, s"$dataFolder/invoices.bin"))
         .localCheckpoint(true))
     // t3/t4 = 0: the fused hash aggregate computed both exact
     // distincts inside t2 — see the object doc

@@ -32,25 +32,19 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       // zstd compresses the int-heavy shuffle rows of the aggregation
       // pipelines ~2× tighter than lz4 at negligible CPU cost — less
-      // shuffle I/O locally, less network at cluster scale. Overridable
-      // for A/B runs (the refscale experiments): codec choice trades
-      // exchange CPU against bytes moved, and the right side of that
-      // trade flips between a laptop page cache and a cluster network.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "zstd"))
+      // shuffle I/O locally, less network at cluster scale.
+      .config("spark.io.compression.codec", "zstd")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
   /** Session for the driver-facing mains: `local[$SPARK_GRAFT_CPUS]`.
-    * Shuffle partitions default to 3× the core count: multiple waves of
+    * Shuffle partitions are 3× the core count: multiple waves of
     * smaller tasks let the scheduler route around cores stolen by host
     * co-tenants (with exactly one wave, a single slowed task drags the
     * whole stage), and AQE coalesces the excess on small exchanges. */
   def local(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.toInt)
-      .getOrElse(cpus * 3)
-    val s = builder(s"local[$cpus]", shufflePartitions = parts)
+    val s = builder(s"local[$cpus]", shufflePartitions = cpus * 3)
       .appName(appName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -120,35 +120,6 @@ object RefScale {
       ReferenceHypercube.invoices(spark, s"$dir/invoices.bin")
         .write.format("noop").mode("overwrite").save()
     }
-    // stage-by-stage budget breakdown (each stage includes its inputs)
-    if (sys.env.contains("SPARK_GRAFT_REFSCALE_STAGES")) {
-      import org.apache.spark.sql.functions._
-      val cl = ReferenceHypercube.clients(spark, s"$dir/clients.csv")
-      val ct = ReferenceHypercube.contracts(spark, s"$dir/contracts.csv")
-      val inv = ReferenceHypercube.invoices(spark, s"$dir/invoices.bin")
-      val dim = ReferenceHypercube.contractDim(cl, ct)
-      val dimSide = broadcast(dim)
-      val dims = Seq(col("geo"), col("type"), col("misc"), col("nature"), col("time"))
-      val joined = inv.join(dimSide, col("contract") === dimSide("contract_id"))
-        .select(dims ++ Seq(col("contract"), col("client"),
-          col("consumption"), col("amount").as("amt")): _*)
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      time("scan+join+project")(noop(joined))
-      // NOTE: this shuffles the GENERIC 5-dim keys; the full run at this
-      // data size takes the packedPlan branch, which repartitions on
-      // (packed g, time) longs — so this line bounds the unpacked
-      // shuffle's cost, it does not decompose the packed run exactly
-      time("...+repartition (generic dims; full run packs keys)")(
-        noop(joined.repartition(dims: _*)))
-      val cube = ReferenceHypercube.fromFolder(spark, dir)
-      time("...+chained aggs+sort (full, noop)")(noop(cube))
-      time("full incl. CSV write")(
-        ReferenceHypercube.writeCsv(ReferenceHypercube.fromFolder(spark, dir),
-          s"$dir/out", singleFile = false))
-      spark.stop()
-      return
-    }
     // warm-up (file cache + JIT), then the timed end-to-end run incl. CSV write
     time("full cube (noop, warm-up)") {
       ReferenceHypercube.fromFolder(spark, dir)

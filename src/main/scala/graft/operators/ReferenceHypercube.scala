@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.IOUtils
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,23 +23,21 @@ import graft.sources.FixedWidthBinary
   *
   * Where the reference hand-builds a perfect-hash dense aggregation array
   * (`ETL.java:35,109,153`), thread-local partials and coarse merge locks
-  * (`ETL.java:130-132,181-192`), the Spark plan gets the same shape for
-  * free: two broadcast hash joins (clients then the denormalized contract
-  * dim are both tiny relative to the fact), then
-  * partial-HashAggregate → shuffle → final-HashAggregate with `Expand`
-  * for the two exact distincts. At 100 TB the fact side streams through
-  * executors with only the small dimension broadcast replicated; the one
-  * shuffle is on the 5-dim group key whose cardinality is bounded at
-  * 3,121,200 groups (`ETL.java:33-35`), so the final aggregate is tiny
-  * regardless of fact size.
+  * (`ETL.java:130-132,181-192`), the Spark plan is one join of the fact
+  * against the denormalized contract dim, one hash exchange on the group
+  * key and three chained in-partition aggregate levels that make both
+  * distinct counts exact without an `Expand` ([[hypercube]]). Like the
+  * reference, it takes no plan options: one statistics pass over the dim
+  * decides the join strategy and the key packing.
   *
   * Semantics choices (SURVEY.md §7.4):
   *   - SQL inner-join semantics: a dangling FK drops the row (the
   *     reference would silently mis-bucket it, `ETL.java:106-108,153`);
   *     on valid data — FKs are `not null ≥ 1` per `README.md:14-37` —
   *     the results are identical.
-  *   - amount is summed as float32 inputs accumulated in double, same
-  *     precision contract as the reference (`ETL.java:126,150,38`).
+  *   - amount is summed in its input type: the binary fact's float32
+  *     amounts accumulate in double, the reference's precision contract
+  *     (`ETL.java:126,150,38`); a DECIMAL amount column sums exactly.
   */
 object ReferenceHypercube {
 
@@ -87,24 +86,14 @@ object ReferenceHypercube {
         col("k.nature").as("nature"), col("c.type").as("type"),
         col("c.geo").as("geo"), col("c.misc").as("misc"))
 
-  /** Amount-precision modes (SURVEY.md §7.2 M3): the reference
-    * accumulates float32 amounts in double (`ETL.java:126,150,38`) —
-    * fast, but low-order bits depend on addition order; SQL-exact mode
-    * follows the declared schema `numeric(10,2)` (`README.md:31`) with
-    * exact decimal sums, bit-stable under any partitioning. */
-  sealed trait AmountMode
-  /** Reference-exact: float32 inputs accumulated in double. */
-  case object ReferenceExact extends AmountMode
-  /** SQL-exact: `DECIMAL(10,2)` inputs, exact decimal accumulation. */
-  case object SqlExact extends AmountMode
-
   /** J2 + A1–A6 + P3 + O1: the hypercube of the three inputs.
-    * Broadcast-join the fact against the denormalized dim first, then ONE
-    * hash repartition on the five output dimensions, then three chained
+    * Join the fact against the denormalized dim, then ONE hash
+    * repartition on the five output dimensions, then three chained
     * aggregation levels that all run in-partition —
-    * `HashPartitioning(geo,type,misc,nature,time)` satisfies the `ClusteredDistribution` of every level because each
-    * grouping key is a superset of the partitioning expressions, so
-    * Catalyst inserts no further exchange:
+    * `HashPartitioning(geo,type,misc,nature,time)` satisfies the
+    * `ClusteredDistribution` of every level because each grouping key is
+    * a superset of the partitioning expressions, so Catalyst inserts no
+    * further exchange:
     *
     *  1. (dims, contract, client): collapses the invoice stream to one
     *     row per contract×time (client rides along — it is functionally
@@ -115,46 +104,47 @@ object ReferenceHypercube {
     *     client-unique within each group), `sum` = distinct contracts.
     *
     * The exact distinct counts thus cost no Expand and no extra exchange
-    * at any scale, and the executor-side hash maps stay bounded by the
-    * per-partition slice of (contract × time). Empty groups never
-    * materialize: a hash aggregate only creates touched groups (the
-    * reference needs its `!= 0` filter only because its dense array
-    * pre-materializes all 3.1 M slots, `ETL.java:265`).
+    * at any scale. Empty groups never materialize: a hash aggregate only
+    * creates touched groups (the reference needs its `!= 0` filter only because
+    * its dense array pre-materializes all 3.1 M slots, `ETL.java:265`).
+    * The amount is summed in its input type (float → double, DECIMAL
+    * exact).
+    *
+    * Plan selection — one statistics row over the dim ([[dimStats]]: row
+    * count, key mins and maxes, non-null count) decides both choices:
+    *   - broadcast: the dim is hinted as the broadcast side when its exact
+    *     size, rows × `EstimationUtils.getSizePerRow`, is within
+    *     `spark.sql.autoBroadcastJoinThreshold` — Spark's own rule, fed the
+    *     exact row count instead of the CSV scans' row-product estimate
+    *     (which would plan a sort-merge join and a full fact shuffle);
+    *     otherwise the join stays shuffled;
+    *   - packing: [[packedPlan]] when the dim keys are non-null,
+    *     non-negative and fit the packed longs; [[chainedPlan]] otherwise
+    *     (and for an empty dim).
     *
     * Output contract — ordered partitions: the cube comes out split into
     * partitions that are each sorted by (geo, type, misc, nature, time)
     * and hold disjoint, ascending key ranges, so reading the partitions
     * in index order (`collect()`, the part files of [[writeCsv]]) yields
     * the reference's total order (`ETL.java:259-264`). The packed plan
-    * gets there with no sampling pass ([[packedPlan]]); the generic
-    * fallback uses a range-partitioned `orderBy`, which has the same
-    * partition-order property. */
-  def hypercube(clients: DataFrame, contracts: DataFrame, invoices: DataFrame,
-      amountMode: AmountMode = ReferenceExact,
-      broadcastDim: Boolean = false): DataFrame = {
+    * gets there with no sampling pass; the chained plan uses a
+    * range-partitioned `orderBy`, which has the same partition-order
+    * property. */
+  def hypercube(clients: DataFrame, contracts: DataFrame, invoices: DataFrame): DataFrame = {
     val dim = contractDim(clients, contracts)
-    val amountIn = amountMode match {
-      case ReferenceExact => col("amount")
-      case SqlExact => col("amount").cast(DecimalType(10, 2))
-    }
-    // Catalyst's static size estimate for a join of two raw CSV scans is
-    // the row-count product — absurdly large — so without help the
-    // planner picks a sort-merge join and AQE only discovers the dim is
-    // broadcastable AFTER materializing a full fact shuffle on contract
-    // (measured: that wasted exchange+sort dominated the reference-scale
-    // run). Callers that can bound the dim input size (fromFolder gates
-    // on file bytes) pass broadcastDim=true; unbounded dims keep the
-    // unhinted shuffled path.
-    val dimSide = if (broadcastDim) broadcast(dim) else dim
+    val stats = dimStatsCached(dim)
+    val dimBytes = EstimationUtils.getSizePerRow(dim.queryExecution.analyzed.output) * stats.getLong(12)
+    val dimSide =
+      if (dimBytes <= dim.sparkSession.sessionState.conf.autoBroadcastJoinThreshold) broadcast(dim)
+      else dim
     val joined = invoices
       .join(dimSide, col("contract") === dimSide("contract_id"))
       .select(col("geo"), col("type"), col("misc"), col("nature"), col("time"),
-        col("contract"), col("client"), col("consumption"), amountIn.as("amt"))
-    val packed = if (broadcastDim) packedPlan(dim, joined) else None
-    packed.getOrElse(chainedPlan(joined))
+        col("contract"), col("client"), col("consumption"), col("amount").as("amt"))
+    packedPlan(stats, joined).getOrElse(chainedPlan(joined))
   }
 
-  /** Generic three-level chained aggregation (see [[hypercube]] doc).
+  /** Generic three-level chained aggregation (see [[hypercube]]).
     * Works for any key types/values, including NULL dimensions. */
   private def chainedPlan(joined: DataFrame): DataFrame = {
     val dims = Seq(col("geo"), col("type"), col("misc"), col("nature"), col("time"))
@@ -191,9 +181,9 @@ object ReferenceHypercube {
     * min/max for another and mis-size the packed key bit widths. Plans
     * with no resolvable input files are not cached at all. */
   private val dimStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
+    new java.util.concurrent.ConcurrentHashMap[String, Row]()
 
-  private def dimStatsCached(dim: DataFrame): org.apache.spark.sql.Row = {
+  private def dimStatsCached(dim: DataFrame): Row = {
     val files = dim.inputFiles
     if (files.isEmpty) dimStats(dim)
     else try {
@@ -216,8 +206,10 @@ object ReferenceHypercube {
     }
   }
 
-  /** The one-off statistics aggregate over the dim table. */
-  private def dimStats(dim: DataFrame): org.apache.spark.sql.Row =
+  /** The one-off statistics aggregate over the dim table: maxes (0–5)
+    * and mins (6–11) of geo, type, misc, nature, client and contract_id,
+    * the row count (12) and the non-null key count (13). */
+  private def dimStats(dim: DataFrame): Row =
     dim.agg(
       max("geo"), max("type"), max("misc"), max("nature"),
       max("client"), max("contract_id"),
@@ -237,11 +229,11 @@ object ReferenceHypercube {
     *   - `cc` = client‖contract; the level-2 client key is `cc >>`
     *     the contract bit width.
     *
-    * The bit widths come from a one-off aggregate over the (broadcastable,
-    * hence tiny) dim table — the same cheap statistics pass any
-    * cost-based planner runs. Returns None (→ generic fallback) when the
-    * dim has NULL or negative keys or the packed widths overflow a long;
-    * `time` stays unpacked, so fact-side values are unconstrained.
+    * The bit widths come from the dim statistics row `s` ([[dimStats]]) —
+    * the same cheap pass over the dims any cost-based planner runs.
+    * Returns None (→ [[chainedPlan]]) when the dim is empty, has NULL or
+    * negative keys, or the packed widths overflow a long; `time` stays
+    * unpacked, so fact-side values are unconstrained.
     *
     * Ordering without sampling: the same statistics bound every `g` to
     * `[lo, hi]` (the packed mins and maxes), so `pid = (g - lo) div w`
@@ -253,8 +245,7 @@ object ReferenceHypercube {
     * one parallel sort. A global `orderBy` would instead run the three
     * aggregate levels a second time, for the range partitioner's
     * sample. */
-  private def packedPlan(dim: DataFrame, joined: DataFrame): Option[DataFrame] = {
-    val s = dimStatsCached(dim)
+  private def packedPlan(s: Row, joined: DataFrame): Option[DataFrame] = {
     val n = s.getLong(12)
     if (n == 0 || s.getLong(13) != 6 * n) return None // empty dim or NULL keys
     val maxes = (0 to 5).map(i => s.get(i) match {
@@ -323,35 +314,13 @@ object ReferenceHypercube {
         col("nclients"), col("ncontrats"), col("ninvoices")))
   }
 
-  /** CSV bytes up to which the denormalized contract dim is hinted as a
-    * broadcast build side: 256 MB of dim CSV ≈ 8 M contracts ≈ a few
-    * hundred MB hashed — comfortably replicable on any realistic
-    * executor. Beyond it the join stays unhinted (shuffled, AQE-planned),
-    * so a dim that outgrows memory can never OOM the executors. */
-  private val BroadcastDimMaxCsvBytes = 256L * 1024 * 1024
-
-  /** Whether `dataFolder`'s dimension CSVs are small enough to broadcast
-    * (at most [[BroadcastDimMaxCsvBytes]]): a filesystem stat, no Spark
-    * job. The `broadcastDim` that [[fromFolder]] and `EtlMain
-    * --stage-times` pass to [[hypercube]]. */
-  private[graft] def smallDims(spark: SparkSession, dataFolder: String): Boolean =
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      Seq(s"$dataFolder/clients.csv", s"$dataFolder/contracts.csv").map { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(conf).getContentSummary(path).getLength
-      }.sum <= BroadcastDimMaxCsvBytes
-    } catch { case _: java.io.IOException => false }
-
   /** End-to-end over a reference-layout data folder (`clients.csv`,
-    * `contracts.csv`, `invoices.bin` — reference `ETL.java:292-294`),
-    * with the dim broadcast gated by [[smallDims]]. */
+    * `contracts.csv`, `invoices.bin` — reference `ETL.java:292-294`). */
   def fromFolder(spark: SparkSession, dataFolder: String): DataFrame =
     hypercube(
       clients(spark, s"$dataFolder/clients.csv"),
       contracts(spark, s"$dataFolder/contracts.csv"),
-      invoices(spark, s"$dataFolder/invoices.bin"),
-      broadcastDim = smallDims(spark, dataFolder))
+      invoices(spark, s"$dataFolder/invoices.bin"))
 
   /** Folder of the reference's `data-sample` (`clients.csv`,
     * `contracts.csv`, `invoices.bin`, `invoices.csv`), which the golden

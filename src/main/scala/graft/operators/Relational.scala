@@ -492,8 +492,7 @@ object Relational {
         ReferenceHypercube.hypercube(
           ReferenceHypercube.clients(s, s"$folder/clients.csv"),
           ReferenceHypercube.contracts(s, s"$folder/contracts.csv"),
-          s.read.parquet(s"$root/fact"),
-          ReferenceHypercube.ReferenceExact, broadcastDim = true)
+          s.read.parquet(s"$root/fact"))
           // decimal-exact sum rendered as double for engine-portable hashing
           .withColumn("amount", col("amount").cast("double"))
       },
@@ -548,7 +547,7 @@ object Relational {
         ReferenceHypercube.hypercube(
           ReferenceHypercube.clients(s, s"$folder/clients.csv"),
           ReferenceHypercube.contracts(s, s"$folder/contracts.csv"),
-          inv, ReferenceHypercube.ReferenceExact, broadcastDim = true)
+          inv)
           // decimal-exact sum rendered as double for engine-portable hashing
           .withColumn("amount", col("amount").cast("double"))
       },

@@ -11,12 +11,12 @@ import org.apache.spark.sql.types._
   * fact file read in parallel chunks (reference `ETL.java:114-152`,
   * layout documented in `README.md:66`): `int32 id, int32 contract,
   * int8 time, float32 amount, int16 consumption, 1 pad byte`, all
-  * big-endian. Spark already has the distributed analogue of the chunked
-  * parallel scan: `SparkContext.binaryRecords` plans record-aligned input
-  * splits across executors (`FixedLengthBinaryInputFormat`), so the only
-  * custom code needed is the per-record `ByteBuffer` decode — the
-  * reference's chunk/lock dance (`ETL.java:139-141`) disappears into
-  * Spark's task scheduler.
+  * big-endian. The distributed analogue of that chunked parallel scan is
+  * the DataSource V2 reader [[FixedWidthBinaryV2]]: it plans
+  * record-aligned splits with Spark's file-source sizing rule and decodes
+  * each record straight into a reused row, so the reference's chunk/lock
+  * dance (`ETL.java:139-141`) disappears into Spark's task scheduler.
+  * This object holds the layout DSL and the entry points.
   *
   * Layouts are declarative: a `Seq[Field]` of typed fields with optional
   * `Pad`/`Skip` holes, so any fixed-width format (not just the

@@ -37,8 +37,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage: `spark.read.format(classOf[FixedWidthBinaryV2].getName)
   * .option("layout", "skip:4,i32:contract,i8:time,f32:amount,i16:consumption,skip:1")
-  * .load(path)`. An explicit `.option("targetSplitBytes", n)` replaces the
-  * split rule with `n` bytes (rounded down to whole records).
+  * .load(path)`.
   */
 class FixedWidthBinaryV2 extends TableProvider {
   import FixedWidthBinaryV2._
@@ -152,8 +151,8 @@ object FixedWidthBinaryV2 {
     st
   }
 
-  /** Bytes per split a scan of `path` (records of `recLen` bytes) plans
-    * when no `targetSplitBytes` option is given: Spark's own file-source
+  /** Bytes per split a scan of `path` (records of `recLen` bytes) plans:
+    * Spark's own file-source
     * rule (`FilePartition.maxSplitBytes`), `min(files.maxPartitionBytes,
     * max(files.openCostInBytes, (bytes + openCost) / parallelism))` with
     * parallelism = `files.minPartitionNum`, else the leaf-node default
@@ -178,24 +177,21 @@ object FixedWidthBinaryV2 {
     override def capabilities(): java.util.Set[TableCapability] =
       java.util.EnumSet.of(TableCapability.BATCH_READ)
     override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-      new FwbScanBuilder(this, o)
+      new FwbScanBuilder(this)
   }
 
-  private final class FwbScanBuilder(table: FwbTable, options: CaseInsensitiveStringMap)
+  private final class FwbScanBuilder(table: FwbTable)
       extends ScanBuilder with SupportsPushDownRequiredColumns {
     private var required: StructType = table.schema()
     override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-    override def build(): Scan = {
-      val explicit = Option(options.get("targetSplitBytes")).map(b => math.max(1L, b.toLong))
-      new FwbScan(table, required, explicit)
-    }
+    override def build(): Scan = new FwbScan(table, required)
   }
 
   private final case class FwbPartition(path: String, startByte: Long, numRecords: Long)
       extends InputPartition
 
-  private final class FwbScan(table: FwbTable, required: StructType,
-      targetSplitBytes: Option[Long]) extends Scan with Batch with SupportsReportStatistics {
+  private final class FwbScan(table: FwbTable, required: StructType)
+      extends Scan with Batch with SupportsReportStatistics {
     private val recLen = recordLength(table.layout)
     private lazy val fileLen: Long = fileStatus(SparkSession.active, table.path).getLen
     private def totalRecords: Long = fileLen / recLen // trailing partial record dropped
@@ -211,13 +207,12 @@ object FixedWidthBinaryV2 {
 
     override def planInputPartitions(): Array[InputPartition] = {
       val total = totalRecords
-      val recsPerSplit = math.max(1L, targetSplitBytes.getOrElse(
-        splitBytes(SparkSession.active, table.path, recLen)) / recLen)
+      val recsPerSplit = splitBytes(SparkSession.active, table.path, recLen) / recLen
       val nSplits64 = (total + recsPerSplit - 1) / recsPerSplit
-      // a silent .toInt wrap (huge file + tiny targetSplitBytes) would
+      // a silent .toInt wrap (huge file + tiny maxPartitionBytes) would
       // plan a negative/empty split range and read NOTHING — fail loudly
-      require(nSplits64 <= Int.MaxValue,
-        s"$nSplits64 splits of $recsPerSplit records exceed Int range; raise targetSplitBytes")
+      require(nSplits64 <= Int.MaxValue, s"$nSplits64 splits of $recsPerSplit records " +
+        "exceed Int range; raise spark.sql.files.maxPartitionBytes")
       val nSplits = nSplits64.toInt
       (0 until nSplits).map { i =>
         val startRec = i * recsPerSplit

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{FixedWidthBinary => FWB, FixedWidthBinaryV2}
 
 /** DataSource V2 fixed-width binary source: decode exactness, split
-  * planning (Spark's rule by default, `targetSplitBytes` when given),
+  * planning (Spark's file-source rule),
   * column-pruning pushdown, reported statistics, trailing partial-record
   * handling. */
 class FixedWidthBinaryV2Spec extends AnyFunSuite {
@@ -49,14 +49,14 @@ class FixedWidthBinaryV2Spec extends AnyFunSuite {
     assert(df.collect().map(_.getInt(0)).sorted.toSeq === (0 until 10).map(_ * 2))
   }
 
-  test("splits follow targetSplitBytes and remain record-aligned") {
-    val df = spark.read.format(classOf[FixedWidthBinaryV2].getName)
-      .option("layout", FixedWidthBinaryV2.layoutString(layout))
-      .option("targetSplitBytes", "24") // 2 records per split -> 5 splits
-      .load(path)
-    assert(df.rdd.getNumPartitions === 5)
-    assert(df.count() === 10)
-    assert(df.select("a").collect().map(_.getInt(0)).sorted.toSeq === (0 until 10))
+  test("splits follow files.maxPartitionBytes and remain record-aligned") {
+    // 2 records per split -> 5 splits
+    SparkTestSession.withConf("spark.sql.files.maxPartitionBytes" -> "24") {
+      val df = FWB.read(spark, path, layout)
+      assert(df.rdd.getNumPartitions === 5)
+      assert(df.count() === 10)
+      assert(df.select("a").collect().map(_.getInt(0)).sorted.toSeq === (0 until 10))
+    }
   }
 
   test("default splits follow Spark's file-source rule: at least one per core, " +

@@ -1,12 +1,16 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ReferenceHypercube
@@ -15,11 +19,12 @@ import graft.sources.FixedWidthBinaryV2
 /** Binary decode → hypercube → CSV against the plain-Scala `ETL.java`
   * twin ([[EtlTwin]]), on a folder of the reference sample's shape
   * generated by [[RefScale]] — no external fixture, so this gates the
-  * path on every host. Covers both plans (packed, and the generic
-  * fallback `broadcastDim = false` takes), both sink modes and one and
-  * seven shuffle partitions: every CSV must equal the twin's line for
+  * path on every host. Covers the three plans the dim statistics select
+  * (packed over a broadcast join, packed over a shuffled join, and the
+  * chained fallback for keys that do not pack), both sink modes and one
+  * and seven shuffle partitions: every CSV must equal the twin's line for
   * line. */
-class HypercubeDifferentialSpec extends AnyFunSuite {
+class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
   private lazy val folder: String = {
@@ -29,12 +34,29 @@ class HypercubeDifferentialSpec extends AnyFunSuite {
   }
   private lazy val expected: Vector[String] = EtlTwin.csvLines(folder)
 
+  /** Added to every client's geo in [[shifted]]: negative keys, which
+    * the packed plan rejects. */
+  private val GeoShift = -1000
+
+  /** A copy of [[folder]] with every geo shifted by [[GeoShift]]. */
+  private lazy val shifted: String = {
+    val dir = Files.createTempDirectory("hypercube-shifted")
+    Seq("contracts.csv", "invoices.bin").foreach(f => Files.copy(Paths.get(folder, f), dir.resolve(f)))
+    val clients = Files.readAllLines(Paths.get(folder, "clients.csv")).asScala.toSeq // id,type,geo,misc
+    Files.write(dir.resolve("clients.csv"), (clients.head +: clients.tail.map { l =>
+      val f = l.split(',')
+      f(2) = (f(2).toInt + GeoShift).toString
+      f.mkString(",")
+    }).asJava)
+    dir.toString
+  }
+  /** The twin's lines with geo (the first field) shifted by [[GeoShift]]. */
+  private lazy val shiftedExpected: Vector[String] = expected.head +: expected.tail.map { l =>
+    val (geo, rest) = l.splitAt(l.indexOf(','))
+    s"${geo.toInt + GeoShift}$rest"
+  }
+
   private def packed(): DataFrame = ReferenceHypercube.fromFolder(spark, folder)
-  private def chained(): DataFrame = ReferenceHypercube.hypercube(
-    ReferenceHypercube.clients(spark, s"$folder/clients.csv"),
-    ReferenceHypercube.contracts(spark, s"$folder/contracts.csv"),
-    ReferenceHypercube.invoices(spark, s"$folder/invoices.bin"),
-    broadcastDim = false)
 
   /** Part files of a written cube in partition-index order, as lines. */
   private def partLines(out: Path): Seq[Vector[String]] =
@@ -43,32 +65,69 @@ class HypercubeDifferentialSpec extends AnyFunSuite {
       .sortBy(_.getFileName.toString) // zero-padded partition index
       .map(p => Files.readAllLines(p, StandardCharsets.US_ASCII).asScala.toVector)
 
+  /** The executed plans of the queries `body` runs, in order. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("executed_plans_sentinel")) drained.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order: once the sentinel is seen, every
+      // plan of `body` has been recorded
+      spark.range(1).toDF("executed_plans_sentinel").collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
   test("the generated folder has the sample's shape and a non-trivial cube") {
     assert(ReferenceHypercube.invoices(spark, s"$folder/invoices.bin").count() === 57600L)
     assert(expected.head === EtlTwin.Header)
     assert(expected.size > 10000)
   }
 
+  /** One plan selection: its input folder, the twin's CSV for it, the
+    * SQL settings it runs under, and whether it broadcasts the dim and
+    * sorts globally (the chained plan's range-partitioned `orderBy`). */
+  private final class Arm(val dir: () => String, val lines: () => Vector[String],
+      val conf: Seq[(String, String)], val broadcast: Boolean, val globalSort: Boolean)
+
+  private val arms = Seq(
+    "packed" -> new Arm(() => folder, () => expected, Nil, broadcast = true, globalSort = false),
+    "shuffled-join packed" -> new Arm(() => folder, () => expected,
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"), broadcast = false, globalSort = false),
+    "chained" -> new Arm(() => shifted, () => shiftedExpected, Nil, broadcast = true, globalSort = true))
+
   for {
     parts <- Seq(1, 7)
-    (plan, cube, globalSort) <- Seq(("packed", packed _, false), ("chained", chained _, true))
+    (plan, arm) <- arms
     singleFile <- Seq(true, false)
   } test(s"$plan plan, $parts shuffle partitions, singleFile = $singleFile: " +
       "the CSV equals the ETL.java twin") {
-    SparkTestSession.withConf("spark.sql.shuffle.partitions" -> parts.toString) {
-      val c = cube()
-      // the packed plan orders partitions without a global sort; the
-      // fallback keeps its range-partitioned orderBy
-      assert(c.queryExecution.logical.collect { case s: Sort => s.global } === Seq(globalSort))
+    SparkTestSession.withConf(arm.conf :+ ("spark.sql.shuffle.partitions" -> parts.toString): _*) {
+      val c = ReferenceHypercube.fromFolder(spark, arm.dir())
       val out = Files.createTempDirectory("hypercube-out").resolve("cube")
-      ReferenceHypercube.writeCsv(c, out.toString, singleFile)
+      val executed = executedPlans(ReferenceHypercube.writeCsv(c, out.toString, singleFile))
+      val joins = executed.flatMap(p => collect(p) { case j: BroadcastHashJoinExec => j })
+      assert(joins.nonEmpty === arm.broadcast, executed.mkString("\n\n"))
+      // the packed plan orders partitions without a global sort; the
+      // chained plan keeps its range-partitioned orderBy
+      assert(c.queryExecution.logical.collect { case s: Sort => s.global } === Seq(arm.globalSort))
+      val sorts = executed.flatMap(p => collect(p) { case s: SortExec => s.global })
+      assert(sorts.contains(true) === arm.globalSort, executed.mkString("\n\n"))
       val files = partLines(out)
       if (singleFile) {
         assert(files.size === 1)
-        assert(files.head === expected)
+        assert(files.head === arm.lines())
       } else {
         assert(files.forall(_.headOption.contains(EtlTwin.Header)))
-        assert(files.flatMap(_.tail) === expected.tail)
+        assert(files.flatMap(_.tail) === arm.lines().tail)
       }
     }
   }
@@ -89,29 +148,25 @@ class HypercubeDifferentialSpec extends AnyFunSuite {
   }
 
   test("EtlMain --stage-times runs the default path's plan: no range-partitioned exchange") {
-    import org.apache.spark.sql.execution.QueryExecution
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.output.map(_.name) == Seq("stage_times_sentinel")) drained.countDown()
-        else plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val out = Files.createTempDirectory("etlmain-staged").resolve("cube")
-      Console.withOut(new java.io.ByteArrayOutputStream())(
-        EtlMain.run(spark, folder, out.toString, singleFile = true, stageTimes = true))
-      // listener events arrive in order: once the sentinel is seen, every
-      // plan of the run has been recorded
-      spark.range(1).toDF("stage_times_sentinel").collect()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally spark.listenerManager.unregister(listener)
-    val executed = plans.asScala.toSeq
+    val out = Files.createTempDirectory("etlmain-staged").resolve("cube")
+    val executed = executedPlans(Console.withOut(new java.io.ByteArrayOutputStream())(
+      EtlMain.run(spark, folder, out.toString, singleFile = true, stageTimes = true))).map(_.toString)
     assert(executed.exists(_.contains("HashAggregate")), s"the cube's plan was not seen: $executed")
     assert(!executed.exists(_.contains("rangepartitioning")),
       s"--stage-times ran a range-partitioned sort:\n${executed.mkString("\n\n")}")
+  }
+
+  test("EtlMain accepts two positional arguments and its two flags, and rejects anything else") {
+    import EtlMain.{parseArgs, Args}
+    assert(parseArgs(Seq("in", "out")) === Some(Args("in", "out", singleFile = true, stageTimes = false)))
+    assert(parseArgs(Seq("in", "out", "--partitioned", "--stage-times")) ===
+      Some(Args("in", "out", singleFile = false, stageTimes = true)))
+    assert(parseArgs(Seq("--stage-times", "in", "out")) ===
+      Some(Args("in", "out", singleFile = true, stageTimes = true)))
+    assert(parseArgs(Seq("in", "out", "--stage-time")) === None) // typo
+    assert(parseArgs(Seq("in", "out", "extra")) === None)
+    assert(parseArgs(Seq("in", "out", "-t", "8")) === None) // the reference's thread knob
+    assert(parseArgs(Seq("in")) === None)
   }
 
   test("fromFolder(...).collect() returns the rows in key order") {

@@ -59,8 +59,7 @@ class SinkSpec extends AnyFunSuite {
     val empty = ReferenceHypercube.hypercube(
       ReferenceHypercube.clients(spark, s"$generated/clients.csv"),
       ReferenceHypercube.contracts(spark, s"$generated/contracts.csv"),
-      ReferenceHypercube.invoices(spark, s"$generated/invoices.bin").limit(0),
-      broadcastDim = true)
+      ReferenceHypercube.invoices(spark, s"$generated/invoices.bin").limit(0))
     ReferenceHypercube.writeCsv(empty, out.toString, singleFile = true)
     assert(partFiles(out).size === 1)
     assert(Files.readAllLines(partFiles(out).head).asScala.toSeq === Seq(EtlTwin.Header))
@@ -90,18 +89,18 @@ class SinkSpec extends AnyFunSuite {
     assert(rendered === Seq(".50", "-.50", ".00", "1.50", "-12.35", ".00"))
   }
 
-  test("SQL-exact amount mode (M3): decimal sums agree with double mode to the cent") {
+  test("a DECIMAL(10,2) amount input sums exactly") {
+    import org.apache.spark.sql.functions.{col, sum}
     import org.apache.spark.sql.types.DecimalType
     val sample = ReferenceHypercube.referenceSample()
-    val mk = (m: ReferenceHypercube.AmountMode) => ReferenceHypercube.hypercube(
+    val invoices = ReferenceHypercube.invoices(spark, s"$sample/invoices.bin")
+    val mk = (inv: org.apache.spark.sql.DataFrame) => ReferenceHypercube.hypercube(
       ReferenceHypercube.clients(spark, s"$sample/clients.csv"),
-      ReferenceHypercube.contracts(spark, s"$sample/contracts.csv"),
-      ReferenceHypercube.invoices(spark, s"$sample/invoices.bin"), m)
-    val dec = mk(ReferenceHypercube.SqlExact)
-    assert(dec.schema("amount").dataType.isInstanceOf[DecimalType]) // exact mode surfaces decimals
-    val decTotal = dec.agg(org.apache.spark.sql.functions.sum("amount")).head().getDecimal(0)
-    val dblTotal = mk(ReferenceHypercube.ReferenceExact)
-      .agg(org.apache.spark.sql.functions.sum("amount")).head().getDouble(0)
+      ReferenceHypercube.contracts(spark, s"$sample/contracts.csv"), inv)
+    val dec = mk(invoices.withColumn("amount", col("amount").cast(DecimalType(10, 2))))
+    assert(dec.schema("amount").dataType.isInstanceOf[DecimalType]) // a decimal input sums as decimal
+    val decTotal = dec.agg(sum("amount")).head().getDecimal(0)
+    val dblTotal = mk(invoices).agg(sum("amount")).head().getDouble(0)
     // float32 decode rounds to cents either way on this data; totals agree closely
     assert(math.abs(decTotal.doubleValue - dblTotal) < 1.0)
     assert(dec.count() === 34271L) // same groups in both modes
