@@ -30,13 +30,13 @@ import graft.sources.{FixedWidthBinary, FixedWidthBinaryV2}
   * execution model: t0 = clients load (materialized), t1 = contracts
   * load (materialized; the client⋈contract dimension join itself
   * FUSES into t2's single job, unlike the reference's eager stage-1
-  * join), t2 = the fused join+scan+hypercube aggregate INCLUDING both
-  * exact distincts — one whole-stage-codegen'd job is precisely the
-  * architectural difference vs the reference's four passes — t3 = t4 = 0 by
-  * construction (the distinct-count stages have no separate existence
-  * in a fused hash aggregate; zeros keep the CSV schema-compatible
-  * with the reference's sweep tooling while saying exactly that),
-  * t5 = the ordered CSV write. The pools/threads/chunk prefix carries
+  * join), t2 = the scan+join+hypercube aggregate INCLUDING both exact
+  * distincts — one job whose sorted streaming pass counts the distinct
+  * clients and contracts while it sums, where the reference runs
+  * separate passes — t3 = t4 = 0 by construction (the distinct-count
+  * stages have no separate existence in that pass; zeros keep the CSV
+  * schema-compatible with the reference's sweep tooling while saying
+  * exactly that), t5 = the ordered CSV write. The pools/threads/chunk prefix carries
   * (1, defaultParallelism, the bytes per split the `invoices.bin` scan
   * plans — [[graft.sources.FixedWidthBinaryV2.splitBytes]]) — the Spark
   * equivalents of the reference's knobs. Without the flag the default
@@ -111,8 +111,8 @@ object EtlMain {
       ReferenceHypercube.hypercube(cl, co,
         ReferenceHypercube.invoices(spark, s"$dataFolder/invoices.bin"))
         .localCheckpoint(true))
-    // t3/t4 = 0: the fused hash aggregate computed both exact
-    // distincts inside t2 — see the object doc
+    // t3/t4 = 0: the aggregate pass computed both exact distincts
+    // inside t2 — see the object doc
     timed(5)(ReferenceHypercube.writeCsv(cube, outDir, singleFile))
     val pools = 1
     val threads = spark.sparkContext.defaultParallelism

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.IOUtils
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,9 +24,10 @@ import graft.sources.FixedWidthBinary
   * Where the reference hand-builds a perfect-hash dense aggregation array
   * (`ETL.java:35,109,153`), thread-local partials and coarse merge locks
   * (`ETL.java:130-132,181-192`), the Spark plan is one join of the fact
-  * against the denormalized contract dim, one hash exchange on the group
-  * key and three chained in-partition aggregate levels that make both
-  * distinct counts exact without an `Expand` ([[hypercube]]). Like the
+  * against the denormalized contract dim, one exchange by a monotone
+  * bucket of the packed group key, one in-partition sort and one
+  * streaming pass that makes both distinct counts exact as change
+  * counts, without an `Expand` or a hash map ([[hypercube]]). Like the
   * reference, it takes no plan options: one statistics pass over the dim
   * decides the join strategy and the key packing.
   *
@@ -87,28 +88,24 @@ object ReferenceHypercube {
         col("c.geo").as("geo"), col("c.misc").as("misc"))
 
   /** J2 + A1–A6 + P3 + O1: the hypercube of the three inputs.
-    * Join the fact against the denormalized dim, then ONE hash
-    * repartition on the five output dimensions, then three chained
-    * aggregation levels that all run in-partition —
-    * `HashPartitioning(geo,type,misc,nature,time)` satisfies the
-    * `ClusteredDistribution` of every level because each grouping key is
-    * a superset of the partitioning expressions, so Catalyst inserts no
-    * further exchange:
+    * Join the fact against the denormalized dim, then aggregate with one
+    * of two plans:
     *
-    *  1. (dims, contract, client): collapses the invoice stream to one
-    *     row per contract×time (client rides along — it is functionally
-    *     determined by contract, adding no cardinality);
-    *  2. (dims, client): `count(*)` = contracts of that client in the
-    *     group — exact, no `countDistinct`;
-    *  3. (dims): `count(*)` = distinct clients (level 2 made rows
-    *     client-unique within each group), `sum` = distinct contracts.
+    *  - [[packedPlan]], whenever the dim keys pack into longs: ONE
+    *    exchange of the joined fact by a monotone bucket of the packed
+    *    group key, a sort of each partition by (group, time,
+    *    client‖contract), and one streaming pass that folds each
+    *    (group, time) run into its cube row. Sorted keys make both exact
+    *    distinct counts change counts — no `Expand`, no hash map;
+    *  - [[chainedPlan]] otherwise: one hash exchange on the five output
+    *    dimensions and three chained in-partition aggregate levels
+    *    ((dims, contract, client), then (dims, client), then (dims)), whose
+    *    `count(*)`s make both distinct counts exact without an `Expand`.
     *
-    * The exact distinct counts thus cost no Expand and no extra exchange
-    * at any scale. Empty groups never materialize: a hash aggregate only
-    * creates touched groups (the reference needs its `!= 0` filter only because
-    * its dense array pre-materializes all 3.1 M slots, `ETL.java:265`).
-    * The amount is summed in its input type (float → double, DECIMAL
-    * exact).
+    * Empty groups never materialize (the reference needs its `!= 0`
+    * filter only because its dense array pre-materializes all 3.1 M
+    * slots, `ETL.java:265`). The amount is summed with `SUM`'s types
+    * (float → double, DECIMAL exact).
     *
     * Plan selection — one statistics row over the dim ([[dimStats]]: row
     * count, key mins and maxes, non-null count) decides both choices:
@@ -145,7 +142,19 @@ object ReferenceHypercube {
   }
 
   /** Generic three-level chained aggregation (see [[hypercube]]).
-    * Works for any key types/values, including NULL dimensions. */
+    * Works for any key types/values, including NULL dimensions:
+    *
+    *  1. (dims, contract, client): collapses the invoice stream to one
+    *     row per contract×time (client rides along — it is functionally
+    *     determined by contract, adding no cardinality);
+    *  2. (dims, client): `count(*)` = contracts of that client in the
+    *     group — exact, no `countDistinct`;
+    *  3. (dims): `count(*)` = distinct clients (level 2 made rows
+    *     client-unique within each group), `sum` = distinct contracts.
+    *
+    * `HashPartitioning(dims)` satisfies the `ClusteredDistribution` of
+    * every level, so Catalyst inserts no further exchange before the
+    * range-partitioned `orderBy`. */
   private def chainedPlan(joined: DataFrame): DataFrame = {
     val dims = Seq(col("geo"), col("type"), col("misc"), col("nature"), col("time"))
     joined
@@ -219,32 +228,39 @@ object ReferenceHypercube {
       count(col("geo")) + count(col("type")) + count(col("misc")) +
         count(col("nature")) + count(col("client")) + count(col("contract_id"))).head()
 
-  /** Bit-packed variant of [[chainedPlan]] — same three levels, but the
-    * grouping keys are packed into single longs so each hash-aggregate
-    * pass hashes/compares 2–3 numeric fields instead of 5–7 (measured
-    * ~2× on the aggregation stages, which dominate at reference scale):
+  /** Bit-packed sort-stream variant of [[chainedPlan]]. The grouping keys
+    * are packed into single longs:
     *
     *   - `g`  = geo‖type‖misc‖nature, power-of-two strides (pure
     *     shifts/ors — no overflow, order-preserving, bijective);
-    *   - `cc` = client‖contract; the level-2 client key is `cc >>`
-    *     the contract bit width.
+    *   - `cc` = client‖contract, so `cc >>>` the contract bit width is
+    *     the client, and ordering by `cc` orders by client first.
     *
     * The bit widths come from the dim statistics row `s` ([[dimStats]]) —
     * the same cheap pass over the dims any cost-based planner runs.
     * Returns None (→ [[chainedPlan]]) when the dim is empty, has NULL or
-    * negative keys, or the packed widths overflow a long; `time` stays
-    * unpacked, so fact-side values are unconstrained.
+    * negative keys, the packed widths overflow a long, or `time` or
+    * `consumption` is not integral or the amount not float, double or
+    * DECIMAL ([[CubeStream]]); `time` stays unpacked, so fact-side values
+    * are unconstrained.
+    *
+    * One exchange, one sort and one pass: the joined fact is shuffled
+    * by a monotone bucket of `g` (below), each partition is sorted by
+    * (g, time, cc), and one `mapPartitions` pass ([[CubeStream]]) folds
+    * every (g, time) run into its cube row. With the keys sorted, both
+    * distinct counts are change counts — contracts are the changes of
+    * `cc`, clients the changes of `cc >>> bContract` — as in the
+    * reference's sorted distinct passes, so no hash map is built.
     *
     * Ordering without sampling: the same statistics bound every `g` to
     * `[lo, hi]` (the packed mins and maxes), so `pid = (g - lo) div w`
     * with `w = (hi - lo) / parts + 1` is a monotone bucket of `g` in
     * `[0, parts)`, `parts` = `spark.sql.shuffle.partitions` — long
-    * arithmetic on values below 2^62, no overflow. Shuffling the cube by
-    * `pid` (`repartitionById`) and sorting each partition by (g, time)
-    * yields ordered partitions (see [[hypercube]]) in one exchange and
-    * one parallel sort. A global `orderBy` would instead run the three
-    * aggregate levels a second time, for the range partitioner's
-    * sample. */
+    * arithmetic on values below 2^62, no overflow. Partition `i` thus
+    * holds the `i`-th key range, sorted: the ordered partitions of
+    * [[hypercube]] come straight out of the pass. The buckets are equal
+    * width in `g`, so skew in `g` is skew in the fact's partitions, and
+    * AQE does not split a `repartitionById` partition. */
   private def packedPlan(s: Row, joined: DataFrame): Option[DataFrame] = {
     val n = s.getLong(12)
     if (n == 0 || s.getLong(13) != 6 * n) return None // empty dim or NULL keys
@@ -267,6 +283,15 @@ object ReferenceHypercube {
     val typeT = joined.schema("type").dataType
     val miscT = joined.schema("misc").dataType
     val natureT = joined.schema("nature").dataType
+    val timeT = joined.schema("time").dataType
+    val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+    if (!integral(timeT) || !integral(joined.schema("consumption").dataType)) return None
+    // SUM's result type: a float sums in double, widened per row
+    val amountT = joined.schema("amt").dataType match {
+      case FloatType | DoubleType => DoubleType
+      case d: DecimalType => DecimalType(math.min(DecimalType.MAX_PRECISION, d.precision + 10), d.scale)
+      case _ => return None
+    }
     def pk(c: String) = col(c).cast("long")
     val g = shiftleft(pk("geo"), bType + bMisc + bNature)
       .bitwiseOR(shiftleft(pk("type"), bMisc + bNature))
@@ -278,33 +303,23 @@ object ReferenceHypercube {
       geo << (bType + bMisc + bNature) | tpe << (bMisc + bNature) | misc << bNature | nature
     val lo = pack(mins(0), mins(1), mins(2), mins(3))
     val hi = pack(maxes(0), maxes(1), maxes(2), maxes(3))
-    val parts = joined.sparkSession.sessionState.conf.numShufflePartitions
+    val conf = joined.sparkSession.sessionState.conf
+    val parts = conf.numShufflePartitions
     val pid = call_function("div", col("g") - lit(lo), lit((hi - lo) / parts + 1)).cast("int")
+    val cube = StructType(Seq(
+      StructField("g", LongType, nullable = false),
+      StructField("time", timeT),
+      StructField("consumption", LongType),
+      StructField("amount", amountT),
+      StructField("nclients", LongType, nullable = false),
+      StructField("ncontrats", LongType, nullable = false),
+      StructField("ninvoices", LongType, nullable = false)))
     Some(joined
-      .select(g.as("g"), col("time"), cc.as("cc"), col("consumption"), col("amt"))
-      .repartition(col("g"), col("time"))
-      .groupBy("g", "time", "cc")
-      .agg(
-        count(lit(1)).as("pre_ninv"),
-        sum("consumption").as("pre_cons"),
-        sum("amt").as("pre_amt"))
-      .select(col("g"), col("time"), shiftright(col("cc"), bContract).as("ck"),
-        col("pre_ninv"), col("pre_cons"), col("pre_amt"))
-      .groupBy("g", "time", "ck")
-      .agg(
-        count(lit(1)).as("pre_ncontr"),
-        sum("pre_ninv").as("pre_ninv"),
-        sum("pre_cons").as("pre_cons"),
-        sum("pre_amt").as("pre_amt"))
-      .groupBy("g", "time")
-      .agg(
-        sum("pre_cons").as("consumption"),
-        sum("pre_amt").as("amount"),
-        count(lit(1)).as("nclients"),
-        sum("pre_ncontr").as("ncontrats"),
-        sum("pre_ninv").as("ninvoices"))
+      .select(g.as("g"), col("time"), cc.as("cc"), pk("consumption").as("consumption"),
+        (if (amountT == DoubleType) col("amt").cast(DoubleType) else col("amt")).as("amt"))
       .repartitionById(parts, pid)
-      .sortWithinPartitions("g", "time") // order-preserving packing ⇒ same order as the 5 dims
+      .sortWithinPartitions("g", "time", "cc") // order-preserving packing ⇒ same order as the 5 dims
+      .mapPartitions(new CubeStream(bContract, amountT, conf.ansiEnabled))(Encoders.row(cube))
       .select(
         shiftright(col("g"), bType + bMisc + bNature).cast(geoT).as("geo"),
         shiftright(col("g"), bMisc + bNature).bitwiseAND(lit(mask(bType))).cast(typeT).as("type"),
@@ -312,6 +327,69 @@ object ReferenceHypercube {
         col("g").bitwiseAND(lit(mask(bNature))).cast(natureT).as("nature"),
         col("time"), col("consumption"), col("amount"),
         col("nclients"), col("ncontrats"), col("ninvoices")))
+  }
+
+  /** The pass of [[packedPlan]] over one partition of (g, time, cc,
+    * consumption, amt) rows sorted by (g, time, cc): one cube row
+    * (g, time, consumption, amount, nclients, ncontrats, ninvoices) per
+    * (g, time) run, with SQL `SUM` semantics — NULL measures are
+    * skipped and an all-NULL run sums to NULL; the long sum overflows
+    * as `SUM` does under the session's ANSI setting (throws, or wraps);
+    * a `DECIMAL(p, s)` amount sums exactly and, like `SUM`'s
+    * `DECIMAL(min(38, p + 10), s)` result, throws (ANSI) or gives NULL
+    * when the total does not fit `amountT`. A NULL `time` is a key like
+    * any other: it sorts first and forms its own run. */
+  private final class CubeStream(bContract: Int, amountT: DataType, ansi: Boolean)
+      extends (Iterator[Row] => Iterator[Row]) with Serializable {
+    private val decimal = amountT.isInstanceOf[DecimalType]
+    private val precision = amountT match {
+      case d: DecimalType => d.precision
+      case _ => 0
+    }
+
+    def apply(rows: Iterator[Row]): Iterator[Row] = new Iterator[Row] {
+      private val in = rows.buffered
+      def hasNext: Boolean = in.hasNext
+      def next(): Row = {
+        val g = in.head.getLong(0)
+        val time = in.head.get(1)
+        var cons = 0L
+        var dbl = 0.0
+        var dec: java.math.BigDecimal = null
+        var anyCons, anyAmt = false
+        var nclients, ncontrats, ninvoices = 0L
+        var lastCc, lastClient = -1L // cc >= 0
+        while (in.hasNext && in.head.getLong(0) == g && in.head.get(1) == time) {
+          val r = in.next()
+          ninvoices += 1
+          val cc = r.getLong(2)
+          if (cc != lastCc) {
+            ncontrats += 1
+            lastCc = cc
+            if ((cc >>> bContract) != lastClient) {
+              nclients += 1
+              lastClient = cc >>> bContract
+            }
+          }
+          if (!r.isNullAt(3)) {
+            cons = if (ansi) Math.addExact(cons, r.getLong(3)) else cons + r.getLong(3)
+            anyCons = true
+          }
+          if (!r.isNullAt(4)) {
+            if (!decimal) dbl += r.getDouble(4)
+            else dec = if (dec == null) r.getDecimal(4) else dec.add(r.getDecimal(4))
+            anyAmt = true
+          }
+        }
+        val amount =
+          if (!anyAmt) null
+          else if (!decimal) dbl
+          else if (dec.precision <= precision) dec
+          else if (ansi) throw new ArithmeticException(s"sum $dec overflows $amountT")
+          else null
+        Row(g, time, if (anyCons) cons else null, amount, nclients, ncontrats, ninvoices)
+      }
+    }
   }
 
   /** End-to-end over a reference-layout data folder (`clients.csv`,
@@ -371,9 +449,23 @@ object ReferenceHypercube {
     * half-up to 2 decimals, no leading zero before the point (`.50`,
     * `-.50`, `.00` — `DecimalFormat("#.00")` drops it), locale-stable
     * (the reference's `DecimalFormat` would print `,` under a French
-    * default locale; we always print `.`). */
-  private[graft] def refAmountFormat(c: Column): Column =
-    regexp_replace(format_string("%.2f", round(c, 2)), "^(-?)0\\.", "$1.")
+    * default locale; we always print `.`).
+    *
+    * The rounded amount's magnitude is rendered as a `DECIMAL(38,2)`
+    * string with its leading `0` trimmed, after a `-` for a negative
+    * amount: no `String.format` and no regex per row, and the string is
+    * built once. That equals `format_string("%.2f", …)` whenever
+    * `|round(x, 2)| < 1e12`: the rounded double is then the nearest one
+    * to its 2-decimal value `X` and its ulp is below 0.0002, so any
+    * digit string of it rounds half-up to `X` again. NaN, the
+    * infinities and larger magnitudes, where `String.format`'s digits
+    * decide, take the `format_string` path. */
+  private[graft] def refAmountFormat(c: Column): Column = {
+    val r = round(c, 2)
+    when(abs(r) < 1e12,
+      concat(when(r < 0, "-").otherwise(""), ltrim(abs(r).cast(DecimalType(38, 2)).cast(StringType), "0")))
+      .otherwise(regexp_replace(format_string("%.2f", r), "^(-?)0\\.", "$1."))
+  }
 
   /** S4: CSV sink with the reference's header, row order and amount
     * rendering (reference `ETL.java:254-270`) for a cube with ordered

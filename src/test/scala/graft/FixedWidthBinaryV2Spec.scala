@@ -1,7 +1,6 @@
 package graft
 
 import java.io.{DataOutputStream, FileOutputStream}
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ import graft.sources.{FixedWidthBinary => FWB, FixedWidthBinaryV2}
   * planning (Spark's file-source rule),
   * column-pruning pushdown, reported statistics, trailing partial-record
   * handling. */
-class FixedWidthBinaryV2Spec extends AnyFunSuite {
+class FixedWidthBinaryV2Spec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private val layout: Seq[FWB.Field] =
@@ -19,7 +18,7 @@ class FixedWidthBinaryV2Spec extends AnyFunSuite {
 
   /** 10 records (a=i, b=i*2, c="r<i>" NUL-padded) plus 5 garbage bytes. */
   private lazy val path: String = {
-    val f = Files.createTempDirectory("fwb").resolve("t.bin").toFile
+    val f = tempDir("fwb").resolve("t.bin").toFile
     val out = new DataOutputStream(new FileOutputStream(f))
     (0 until 10).foreach { i =>
       out.writeInt(i)
@@ -64,7 +63,7 @@ class FixedWidthBinaryV2Spec extends AnyFunSuite {
     val cores = spark.sparkContext.defaultParallelism
     val openCost = 1200
     val n = 250 * cores // 3,000 bytes a core: the file outgrows openCost × cores
-    val f = Files.createTempDirectory("fwb-rule").resolve("t.bin").toFile
+    val f = tempDir("fwb-rule").resolve("t.bin").toFile
     val out = new DataOutputStream(new FileOutputStream(f))
     (0 until n).foreach { i => out.writeInt(i); out.writeShort(0); out.writeShort(i); out.writeInt(0) }
     out.close()

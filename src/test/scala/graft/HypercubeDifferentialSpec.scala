@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,11 +26,12 @@ import graft.sources.FixedWidthBinaryV2
   * chained fallback for keys that do not pack), both sink modes and one
   * and seven shuffle partitions: every CSV must equal the twin's line for
   * line. */
-class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
+    with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   private lazy val folder: String = {
-    val dir = Files.createTempDirectory("hypercube-sample").toString
+    val dir = tempDir("hypercube-sample").toString
     RefScale.generate(dir, RefScale.Sample)
     dir
   }
@@ -40,7 +43,7 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
 
   /** A copy of [[folder]] with every geo shifted by [[GeoShift]]. */
   private lazy val shifted: String = {
-    val dir = Files.createTempDirectory("hypercube-shifted")
+    val dir = tempDir("hypercube-shifted")
     Seq("contracts.csv", "invoices.bin").foreach(f => Files.copy(Paths.get(folder, f), dir.resolve(f)))
     val clients = Files.readAllLines(Paths.get(folder, "clients.csv")).asScala.toSeq // id,type,geo,misc
     Files.write(dir.resolve("clients.csv"), (clients.head +: clients.tail.map { l =>
@@ -112,7 +115,7 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
       "the CSV equals the ETL.java twin") {
     SparkTestSession.withConf(arm.conf :+ ("spark.sql.shuffle.partitions" -> parts.toString): _*) {
       val c = ReferenceHypercube.fromFolder(spark, arm.dir())
-      val out = Files.createTempDirectory("hypercube-out").resolve("cube")
+      val out = tempDir("hypercube-out").resolve("cube")
       val executed = executedPlans(ReferenceHypercube.writeCsv(c, out.toString, singleFile))
       val joins = executed.flatMap(p => collect(p) { case j: BroadcastHashJoinExec => j })
       assert(joins.nonEmpty === arm.broadcast, executed.mkString("\n\n"))
@@ -132,10 +135,25 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
     }
   }
 
+  test("the packed plan is one exchange, one in-partition sort and one pass: " +
+      "no aggregate operator and no global sort") {
+    for (parts <- Seq(1, 7))
+      SparkTestSession.withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        val c = packed()
+        val out = tempDir("hypercube-plan").resolve("cube")
+        val executed = executedPlans(ReferenceHypercube.writeCsv(c, out.toString))
+        val all = executed.mkString("\n\n")
+        assert(executed.flatMap(p => collect(p) { case e: ShuffleExchangeExec => e }).size === 1, all)
+        assert(executed.flatMap(p => collect(p) { case a: BaseAggregateExec => a }).isEmpty, all)
+        assert(executed.flatMap(p => collect(p) { case s: SortExec => s.global }) === Seq(false), all)
+        assert(executed.flatMap(p => collect(p) { case m: MapPartitionsExec => m }).size === 1, all)
+      }
+  }
+
   test("EtlMain, default and --stage-times, writes the twin's CSV; the timing " +
       "line's chunk is the split size the fact scan planned") {
     val outs = Seq(false, true).map { staged =>
-      val out = Files.createTempDirectory("etlmain-out").resolve("cube")
+      val out = tempDir("etlmain-out").resolve("cube")
       val printed = new java.io.ByteArrayOutputStream()
       Console.withOut(printed)(EtlMain.run(spark, folder, out.toString, singleFile = true, staged))
       (out, printed.toString.trim)
@@ -148,10 +166,10 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
   }
 
   test("EtlMain --stage-times runs the default path's plan: no range-partitioned exchange") {
-    val out = Files.createTempDirectory("etlmain-staged").resolve("cube")
+    val out = tempDir("etlmain-staged").resolve("cube")
     val executed = executedPlans(Console.withOut(new java.io.ByteArrayOutputStream())(
       EtlMain.run(spark, folder, out.toString, singleFile = true, stageTimes = true))).map(_.toString)
-    assert(executed.exists(_.contains("HashAggregate")), s"the cube's plan was not seen: $executed")
+    assert(executed.exists(_.contains("MapPartitions")), s"the cube's plan was not seen: $executed")
     assert(!executed.exists(_.contains("rangepartitioning")),
       s"--stage-times ran a range-partitioned sort:\n${executed.mkString("\n\n")}")
   }

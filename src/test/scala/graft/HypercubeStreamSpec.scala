@@ -1,0 +1,103 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.ReferenceHypercube
+
+/** The packed plan's sort-stream pass against plain Spark SQL: on small
+  * frames built for its edge cases, `hypercube` must return exactly the
+  * rows of `GROUP BY (geo, type, misc, nature, time)` with `SUM`,
+  * `COUNT(DISTINCT …)` and `COUNT(*)`, ordered by the five keys. */
+class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
+  private lazy val spark = SparkTestSession.spark
+  import SparkTestSession.withConf
+
+  /** The hypercube as one SQL aggregate (the engine's own operators). */
+  private def grouped(clients: DataFrame, contracts: DataFrame, invoices: DataFrame): DataFrame = {
+    val dims = Seq("geo", "type", "misc", "nature", "time").map(col)
+    invoices.join(contracts.withColumnRenamed("id", "contract_id"), col("contract") === col("contract_id"))
+      .join(clients, col("client") === col("id"))
+      .groupBy(dims: _*)
+      .agg(sum("consumption").as("consumption"), sum("amount").as("amount"),
+        countDistinct("client").as("nclients"), countDistinct("contract").as("ncontrats"),
+        count(lit(1)).as("ninvoices"))
+      .orderBy(dims: _*)
+  }
+
+  /** `hypercube` over the frames, checked to run the stream. */
+  private def streamed(clients: DataFrame, contracts: DataFrame, invoices: DataFrame): DataFrame = {
+    val cube = ReferenceHypercube.hypercube(clients, contracts, invoices)
+    assert(cube.queryExecution.optimizedPlan.collect { case m: MapPartitions => m }.size === 1,
+      cube.queryExecution.optimizedPlan)
+    cube
+  }
+
+  private def assertSameRows(clients: DataFrame, contracts: DataFrame, invoices: DataFrame): Unit =
+    assert(streamed(clients, contracts, invoices).collect().toSeq ===
+      grouped(clients, contracts, invoices).collect().toSeq)
+
+  private lazy val clients = {
+    import spark.implicits._
+    Seq((1, 1, 5, 2), (2, 1, 5, 2), (3, 2, 7, 1)).toDF("id", "type", "geo", "misc")
+  }
+  // client 1 holds two contracts of nature 3, so they fall in one group
+  private lazy val contracts = {
+    import spark.implicits._
+    Seq((1, 1, 3), (2, 1, 3), (3, 2, 3), (4, 3, 1), (5, 2, 4)).toDF("id", "client", "nature")
+  }
+  /** (contract, time, amount, consumption), every measure nullable. The
+    * amounts are exact binary fractions, so every summation order gives
+    * the same double. */
+  private lazy val invoices = {
+    import spark.implicits._
+    Seq[(Int, Option[Int], Option[Float], Option[Int])](
+      (1, Some(4), Some(1.5f), Some(10)), (2, Some(4), Some(2.25f), Some(20)),
+      (3, Some(4), Some(0.5f), None), (1, Some(4), Some(1.0f), Some(5)),
+      (1, None, Some(3.0f), Some(1)), (2, None, None, Some(2)), // NULL time: its own group
+      (4, Some(1), None, None), (4, Some(1), None, None), // all-NULL measures
+      (4, None, Some(1.0f), Some(1)), (5, Some(36), Some(-0.75f), Some(-7))
+    ).toDF("contract", "time", "amount", "consumption")
+  }
+
+  test("NULL times, NULL measures and two contracts of one client in a group " +
+      "equal the SQL GROUP BY at 1, 4 and 64 shuffle partitions") {
+    for (parts <- Seq(1, 4, 64)) // 64 buckets over three g values: most are empty
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        assertSameRows(clients, contracts, invoices)
+        val rows = streamed(clients, contracts, invoices).collect().toSeq.map(_.toSeq)
+        assert(rows.head === Seq(5, 1, 2, 3, null, 3L, 3.0, 1L, 2L, 2L)) // NULL time sorts first
+        assert(rows(1) === Seq(5, 1, 2, 3, 4, 35L, 5.25, 2L, 3L, 4L))
+        assert(rows.contains(Seq(7, 2, 1, 1, 1, null, null, 1L, 1L, 2L)))
+      }
+  }
+
+  test("a DECIMAL(10,2) amount on the generated folder sums exactly to DECIMAL(20,2)") {
+    val dir = tempDir("hypercube-stream").toString
+    RefScale.generate(dir, RefScale.Sample)
+    val cl = ReferenceHypercube.clients(spark, s"$dir/clients.csv")
+    val co = ReferenceHypercube.contracts(spark, s"$dir/contracts.csv")
+    val inv = ReferenceHypercube.invoices(spark, s"$dir/invoices.bin")
+      .withColumn("amount", col("amount").cast(DecimalType(10, 2)))
+    assert(streamed(cl, co, inv).schema("amount").dataType === DecimalType(20, 2))
+    withConf("spark.sql.shuffle.partitions" -> "7")(assertSameRows(cl, co, inv))
+  }
+
+  test("a consumption sum that overflows a long throws as SUM does, and wraps " +
+      "as SUM does without ANSI") {
+    import spark.implicits._
+    val big = Seq((1, 4, 1.0f, Long.MaxValue / 2 + 1), (2, 4, 1.0f, Long.MaxValue / 2 + 1))
+      .toDF("contract", "time", "amount", "consumption")
+    def arithmetic(body: => Unit): Boolean = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
+    }
+    assert(arithmetic(grouped(clients, contracts, big).collect()))
+    assert(arithmetic(streamed(clients, contracts, big).collect()))
+    withConf("spark.sql.ansi.enabled" -> "false")(assertSameRows(clients, contracts, big))
+  }
+}

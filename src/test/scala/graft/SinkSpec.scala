@@ -12,7 +12,7 @@ import graft.sources.FixedWidthBinary
 
 /** S4 sink round-trip (reference output contract, `ETL.java:254-270` /
   * FIXTURES.md §1) and binary-source decode unit tests. */
-class SinkSpec extends AnyFunSuite {
+class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("writeCsv round-trip matches the reference output contract") {
@@ -43,7 +43,7 @@ class SinkSpec extends AnyFunSuite {
 
   /** A generated folder of the reference sample's shape. */
   private lazy val generated: String = {
-    val dir = Files.createTempDirectory("sink-sample").toString
+    val dir = tempDir("sink-sample").toString
     RefScale.generate(dir, RefScale.Sample)
     dir
   }
@@ -55,7 +55,7 @@ class SinkSpec extends AnyFunSuite {
     entries(dir).filter(_.getFileName.toString.startsWith("part-"))
 
   test("writeCsv(singleFile = true) of an empty cube writes a header-only single file") {
-    val out = Files.createTempDirectory("sink-empty").resolve("cube")
+    val out = tempDir("sink-empty").resolve("cube")
     val empty = ReferenceHypercube.hypercube(
       ReferenceHypercube.clients(spark, s"$generated/clients.csv"),
       ReferenceHypercube.contracts(spark, s"$generated/contracts.csv"),
@@ -67,7 +67,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("writeCsv(singleFile = true) replaces an existing outPath and leaves no " +
       "temporary part directory") {
-    val out = Files.createTempDirectory("sink-overwrite").resolve("cube")
+    val out = tempDir("sink-overwrite").resolve("cube")
     val cube = ReferenceHypercube.fromFolder(spark, generated)
     ReferenceHypercube.writeCsv(cube, out.toString, singleFile = false) // several headed parts
     assert(partFiles(out).size > 1)
@@ -87,6 +87,47 @@ class SinkSpec extends AnyFunSuite {
     // on exact .345 — but Math.round(100*x)/100 in the reference is HALF_UP; we follow
     // Spark round() = HALF_UP), .00
     assert(rendered === Seq(".50", "-.50", ".00", "1.50", "-12.35", ".00"))
+  }
+
+  test("refAmountFormat is byte-identical to the format_string renderer on every input") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.DecimalType
+    import spark.implicits._
+    // the renderer this one replaced: String.format, then a regex
+    def oracle(c: Column): Column = regexp_replace(format_string("%.2f", round(c, 2)), "^(-?)0\\.", "$1.")
+    // each frame twice: as a local relation (the optimizer evaluates the
+    // projection interpreted) and shuffled (generated code, as in writeCsv)
+    def bothWays(x: org.apache.spark.sql.DataFrame)(f: org.apache.spark.sql.DataFrame => Unit): Unit =
+      Seq(x, x.repartition(3)).foreach(f)
+    def mismatches(x: org.apache.spark.sql.DataFrame): Seq[String] =
+      x.select(col("x").cast("string"), ReferenceHypercube.refAmountFormat(col("x")), oracle(col("x")))
+        .collect().toSeq.collect { case r if r.getString(1) != r.getString(2) => r.mkString(" | ") }
+    val rnd = new scala.util.Random(20261018L)
+    def sign(): Int = if (rnd.nextBoolean()) -1 else 1
+    val edges = Seq(0.0, -0.0, 0.005, -0.005, 0.015, -0.015, 1.005, 2.675, -12.345,
+      0.004, -0.004, 1e15 + 0.125, -(1e15 + 0.125), 1e12 - 0.005, 1e12, Double.MaxValue,
+      -Double.MaxValue, Double.MinPositiveValue, -Double.MinPositiveValue,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val spread = Seq.fill(3000)(sign() * rnd.nextDouble() * math.pow(10, rnd.nextInt(44) - 5))
+    val halfway = Seq.fill(1000)(sign() * (rnd.nextLong(1L << (1 + rnd.nextInt(52))) + 0.5) / 100)
+    val doubles = (edges ++ spread ++ halfway).toDF("x")
+    bothWays(doubles)(d => assert(mismatches(d) === Nil))
+    // format_string hands Spark's Decimal to String.format, which rejects
+    // it, so for a DECIMAL the oracle is the same format of the Java value
+    for ((p, s) <- Seq((10, 2), (20, 10))) {
+      val unscaled = Seq.fill(2000)(BigInt(sign() * rnd.nextLong(Long.MaxValue)) * BigInt(rnd.nextLong(Long.MaxValue)))
+        .map(u => u % BigInt(10).pow(rnd.nextInt(p) + 1)) ++
+        Seq(0, 5, -5, 15, 4, -4).map(d => BigInt(d) * BigInt(10).pow(math.max(s - 3, 0)))
+      val values = unscaled.map(u => new java.math.BigDecimal(u.bigInteger, s))
+      val expected = values.map(v => v.toPlainString -> String.format(java.util.Locale.ROOT, "%.2f",
+        v.setScale(2, java.math.RoundingMode.HALF_UP)).replaceFirst("^(-?)0\\.", "$1.")).sorted
+      bothWays(values.toDF("x").select(col("x").cast(DecimalType(p, s)).as("x"))) { d =>
+        val rendered = d.select(col("x").cast("string"), ReferenceHypercube.refAmountFormat(col("x")))
+          .as[(String, String)].collect().toSeq.sorted
+        assert(rendered === expected, s"DECIMAL($p,$s)")
+      }
+    }
   }
 
   test("a DECIMAL(10,2) amount input sums exactly") {
