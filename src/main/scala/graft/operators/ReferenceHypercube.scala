@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
+import scala.util.DynamicVariable
+
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.IOUtils
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
@@ -400,16 +402,29 @@ object ReferenceHypercube {
       contracts(spark, s"$dataFolder/contracts.csv"),
       invoices(spark, s"$dataFolder/invoices.bin"))
 
+  private val referenceDirVar = new DynamicVariable(new java.io.File(sys.env.getOrElse(
+    "SPARK_GRAFT_REFERENCE_DIR", s"${sys.props("user.home")}/reference/data-sample")).getAbsolutePath)
+
   /** Folder of the reference's `data-sample` (`clients.csv`,
     * `contracts.csv`, `invoices.bin`, `invoices.csv`), which the golden
-    * tests and the q10/q11/q63 entries read: the one setting
-    * `SPARK_GRAFT_REFERENCE_DIR`, by default `~/reference/data-sample`.
-    * Absolute, because the oracle SQL embeds it and DuckDB runs from
-    * another working directory. Not checked — [[referenceSample]] is. */
-  val referenceDir: String = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REFERENCE_DIR",
-    s"${sys.props("user.home")}/reference/data-sample")).getAbsolutePath
+    * tests and the q10/q11/q63 entries read. It is one setting,
+    * `SPARK_GRAFT_REFERENCE_DIR`, by default `~/reference/data-sample`;
+    * the folder is not part of the repository. Within
+    * [[withReferenceDir]] the current thread (and threads it starts)
+    * reads another folder of the same layout instead; only the catalog
+    * smoke and plan specs use that override, on hosts without the
+    * sample. Absolute, because the oracle SQL embeds it and DuckDB runs
+    * from another working directory. Not checked — [[referenceSample]]
+    * is. */
+  def referenceDir: String = referenceDirVar.value
 
-  /** [[referenceDir]], failing with one clear message when it is missing. */
+  /** Runs `body` with [[referenceDir]] set to `dir` (made absolute):
+    * the test-only scoped override of the one setting. */
+  private[graft] def withReferenceDir[T](dir: String)(body: => T): T =
+    referenceDirVar.withValue(new java.io.File(dir).getAbsolutePath)(body)
+
+  /** [[referenceDir]], failing with one clear message when it is
+    * missing, so every reader of the sample names the setting to fix. */
   def referenceSample(): String = {
     if (!new java.io.File(referenceDir).isDirectory)
       throw new java.io.FileNotFoundException(

@@ -10,15 +10,17 @@ import graft.sources.FixedWidthBinary
   * ([[ReferenceHypercube.referenceDir]]), values from
   * FIXTURES.md §1 (independently computed simulation of the reference
   * semantics over invoices.bin's 58,176 records). */
-class ReferenceParitySpec extends AnyFunSuite {
+class ReferenceParitySpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
-  /** Each test fails with "reference sample missing at …" when the
-    * folder `SPARK_GRAFT_REFERENCE_DIR` names does not exist. */
+  /** Each test is cancelled with "reference sample missing at …" when
+    * the folder `SPARK_GRAFT_REFERENCE_DIR` names does not exist: the
+    * goldens belong to that one file. */
   private lazy val sample = ReferenceHypercube.referenceSample()
 
   private lazy val cube = ReferenceHypercube.fromFolder(spark, sample).cache()
 
   test("binary source decodes exactly 58,176 records") {
+    ReferenceLayout.assumeSample()
     val inv = FixedWidthBinary.invoices(spark, s"$sample/invoices.bin")
     assert(inv.count() === 58176L)
     val r = inv.agg(
@@ -31,6 +33,7 @@ class ReferenceParitySpec extends AnyFunSuite {
 
   test("staged binary decode (the q10/q11 oracle root) matches the " +
     "live reader record for record") {
+    ReferenceLayout.assumeSample()
     // the round-14 staged-fingerprint oracle feeds BOTH engines from
     // this parquet — a silent staging bug would make the hash compare
     // vacuous, so the stage is pinned against the live decode here:
@@ -56,10 +59,12 @@ class ReferenceParitySpec extends AnyFunSuite {
   }
 
   test("hypercube: 34,271 non-empty groups") {
+    ReferenceLayout.assumeSample()
     assert(cube.count() === 34271L)
   }
 
   test("CSV-twin hypercube (q63) conserves the CSV fact count and its invariants") {
+    ReferenceLayout.assumeSample()
     // the CSV lacks the bin's 576-record stale prefix, so totals differ
     // from the bin goldens by exactly that prefix's contribution; the
     // conservation and per-group FD invariants hold identically
@@ -71,6 +76,7 @@ class ReferenceParitySpec extends AnyFunSuite {
   }
 
   test("hypercube: measure totals match the goldens") {
+    ReferenceLayout.assumeSample()
     val r = cube.agg(
       sum("ninvoices").as("ni"),
       sum("consumption").as("sc"),
@@ -81,6 +87,7 @@ class ReferenceParitySpec extends AnyFunSuite {
   }
 
   test("hypercube: first 3 groups in output order match the goldens") {
+    ReferenceLayout.assumeSample()
     // (geo,type,misc,nature,time → ninv,cons,amt,ncli,ncon), FIXTURES.md §1
     val rows = cube.limit(3).collect()
     val expected = Seq(
@@ -102,6 +109,7 @@ class ReferenceParitySpec extends AnyFunSuite {
   }
 
   test("hypercube: per-group invariants nclients <= ncontrats <= ninvoices") {
+    ReferenceLayout.assumeSample()
     val bad = cube.filter(
       col("nclients") > col("ncontrats") || col("ncontrats") > col("ninvoices")).count()
     assert(bad === 0L)
@@ -114,8 +122,9 @@ class ReferenceParitySpec extends AnyFunSuite {
 
   test("--stage-times (the reference's -l 1 twin) writes a byte-identical " +
       "hypercube CSV and a schema-compatible timing line") {
-    val outA = java.nio.file.Files.createTempDirectory("etl-default").toString
-    val outB = java.nio.file.Files.createTempDirectory("etl-staged").toString
+    ReferenceLayout.assumeSample()
+    val outA = tempDir("etl-default").toString
+    val outB = tempDir("etl-staged").toString
     EtlMain.run(spark, sample, outA, singleFile = true)
     EtlMain.run(spark, sample, outB, singleFile = true, stageTimes = true)
     def csvOf(dir: String): String = {

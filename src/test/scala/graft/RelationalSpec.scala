@@ -4,16 +4,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke + sanity per catalog query on the sf0.001 tier. The driver's
   * DuckDB oracle at sf0.01 is the deep correctness gate; these catch
-  * regressions fast. */
-class RelationalSpec extends AnyFunSuite {
+  * regressions fast. The entries that read the reference sample
+  * (q10/q11/q63) run over a generated folder of its layout on hosts
+  * without it. */
+class RelationalSpec extends AnyFunSuite with ReferenceLayout.OnSampleLayout {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   SparkEntry.catalog.foreach { q =>
     test(s"${q.name} returns rows and a stable schema") {
-      val df = q.run(spark, sf)
-      assert(df.columns.distinct.length === df.columns.length, "duplicate column names")
-      assert(df.count() > 0, s"${q.name} returned no rows")
+      onSampleLayout {
+        val df = q.run(spark, sf)
+        assert(df.columns.distinct.length === df.columns.length, "duplicate column names")
+        assert(df.count() > 0, s"${q.name} returned no rows")
+      }
     }
   }
 

@@ -16,6 +16,7 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("writeCsv round-trip matches the reference output contract") {
+    ReferenceLayout.assumeSample()
     val out = "target/test-out/cube_csv"
     val cube = ReferenceHypercube.fromFolder(spark, ReferenceHypercube.referenceSample())
     ReferenceHypercube.writeCsv(cube, out, singleFile = true)
@@ -131,6 +132,7 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   }
 
   test("a DECIMAL(10,2) amount input sums exactly") {
+    ReferenceLayout.assumeSample()
     import org.apache.spark.sql.functions.{col, sum}
     import org.apache.spark.sql.types.DecimalType
     val sample = ReferenceHypercube.referenceSample()
