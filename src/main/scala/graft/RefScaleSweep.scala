@@ -12,7 +12,7 @@ import graft.operators.ReferenceHypercube
   * rising to ~11.8 M rows/s at 7 threads on 2012 hardware).
   *
   * Runs the full end-to-end pipeline (CSV+binary scans → broadcast join
-  * → packed 3-level aggregation → ordered CSV write) at `local[c]` for
+  * → packed sort-stream aggregation → ordered CSV write) at `local[c]` for
   * each core count, sequentially in ONE JVM so every point shares the
   * same JIT-warm code. Per point: one warm-up run, then 3 timed runs,
   * median reported (the single-point `RefScale` main uses 5 runs; the

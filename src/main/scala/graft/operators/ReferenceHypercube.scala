@@ -89,48 +89,57 @@ object ReferenceHypercube {
         col("k.nature").as("nature"), col("c.type").as("type"),
         col("c.geo").as("geo"), col("c.misc").as("misc"))
 
-  /** J2 + A1–A6 + P3 + O1: the hypercube of the three inputs.
-    * Join the fact against the denormalized dim, then aggregate with one
-    * of two plans:
-    *
-    *  - [[packedPlan]], whenever the dim keys pack into longs: ONE
-    *    exchange of the joined fact by a monotone bucket of the packed
-    *    group key, a sort of each partition by (group, time,
-    *    client‖contract), and one streaming pass that folds each
-    *    (group, time) run into its cube row. Sorted keys make both exact
-    *    distinct counts change counts — no `Expand`, no hash map;
-    *  - [[chainedPlan]] otherwise: one hash exchange on the five output
-    *    dimensions and three chained in-partition aggregate levels
-    *    ((dims, contract, client), then (dims, client), then (dims)), whose
-    *    `count(*)`s make both distinct counts exact without an `Expand`.
+  /** J2 + A1–A6 + P3 + O1: the hypercube of the three inputs, as one
+    * plan ([[packedPlan]]): the fact is joined against the denormalized
+    * dim, shuffled ONCE by a monotone bucket of the packed group key,
+    * each partition is sorted by (group, time, client‖contract), and one
+    * streaming pass folds each (group, time) run into its cube row.
+    * Sorted keys make both exact distinct counts change counts — no
+    * `Expand`, no hash map.
     *
     * Empty groups never materialize (the reference needs its `!= 0`
     * filter only because its dense array pre-materializes all 3.1 M
     * slots, `ETL.java:265`). The amount is summed with `SUM`'s types
-    * (float → double, DECIMAL exact).
+    * (float → double, DECIMAL(p, s) exact → DECIMAL(min(38, p + 10), s)).
     *
-    * Plan selection — one statistics row over the dim ([[dimStats]]: row
-    * count, key mins and maxes, non-null count) decides both choices:
+    * Accepted inputs — bounded dimensions, as the reference's dense
+    * array assumes (`ETL.java:33-35`): integral geo, type, misc, nature,
+    * client and contract keys, of any sign and with NULLs, whose spans
+    * pack into two longs (geo‖type‖misc‖nature and client‖contract, 62
+    * bits each); integral `time` and `consumption`; a float, double or
+    * DECIMAL amount. Anything else throws an `IllegalArgumentException`
+    * that names the column.
+    *
+    * One statistics row over the dim ([[dimStats]]: key mins and maxes,
+    * row count, non-null counts) makes both plan decisions:
     *   - broadcast: the dim is hinted as the broadcast side when its exact
     *     size, rows × `EstimationUtils.getSizePerRow`, is within
     *     `spark.sql.autoBroadcastJoinThreshold` — Spark's own rule, fed the
     *     exact row count instead of the CSV scans' row-product estimate
     *     (which would plan a sort-merge join and a full fact shuffle);
     *     otherwise the join stays shuffled;
-    *   - packing: [[packedPlan]] when the dim keys are non-null,
-    *     non-negative and fit the packed longs; [[chainedPlan]] otherwise
-    *     (and for an empty dim).
+    *   - packing: the bit width of each key ([[packedPlan]]).
     *
     * Output contract — ordered partitions: the cube comes out split into
-    * partitions that are each sorted by (geo, type, misc, nature, time)
-    * and hold disjoint, ascending key ranges, so reading the partitions
-    * in index order (`collect()`, the part files of [[writeCsv]]) yields
-    * the reference's total order (`ETL.java:259-264`). The packed plan
-    * gets there with no sampling pass; the chained plan uses a
-    * range-partitioned `orderBy`, which has the same partition-order
-    * property. */
+    * partitions that are each sorted by (geo, type, misc, nature, time),
+    * NULLs first, and hold disjoint, ascending key ranges, so reading the
+    * partitions in index order (`collect()`, the part files of
+    * [[writeCsv]]) yields the reference's total order
+    * (`ETL.java:259-264`), with no sampling pass. The cube's column types
+    * follow from the input types alone; a dim column is nullable in the
+    * cube exactly when it holds a NULL. */
   def hypercube(clients: DataFrame, contracts: DataFrame, invoices: DataFrame): DataFrame = {
     val dim = contractDim(clients, contracts)
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    (Keys.map(dim.schema(_)) ++ Seq("time", "consumption").map(invoices.schema(_))).foreach(f =>
+      require(integral(f.dataType), s"hypercube column ${f.name} is ${f.dataType.sql}, not integral"))
+    // SUM's result type: a float sums in double, widened per row
+    val amountT = invoices.schema("amount").dataType match {
+      case FloatType | DoubleType => DoubleType
+      case d: DecimalType => DecimalType(math.min(DecimalType.MAX_PRECISION, d.precision + 10), d.scale)
+      case t => throw new IllegalArgumentException(
+        s"hypercube column amount is ${t.sql}, not FLOAT, DOUBLE or DECIMAL")
+    }
     val stats = dimStatsCached(dim)
     val dimBytes = EstimationUtils.getSizePerRow(dim.queryExecution.analyzed.output) * stats.getLong(12)
     val dimSide =
@@ -139,48 +148,12 @@ object ReferenceHypercube {
     val joined = invoices
       .join(dimSide, col("contract") === dimSide("contract_id"))
       .select(col("geo"), col("type"), col("misc"), col("nature"), col("time"),
-        col("contract"), col("client"), col("consumption"), col("amount").as("amt"))
-    packedPlan(stats, joined).getOrElse(chainedPlan(joined))
+        col("client"), col("contract_id"), col("consumption"), col("amount").as("amt"))
+    packedPlan(stats, joined, amountT)
   }
 
-  /** Generic three-level chained aggregation (see [[hypercube]]).
-    * Works for any key types/values, including NULL dimensions:
-    *
-    *  1. (dims, contract, client): collapses the invoice stream to one
-    *     row per contract×time (client rides along — it is functionally
-    *     determined by contract, adding no cardinality);
-    *  2. (dims, client): `count(*)` = contracts of that client in the
-    *     group — exact, no `countDistinct`;
-    *  3. (dims): `count(*)` = distinct clients (level 2 made rows
-    *     client-unique within each group), `sum` = distinct contracts.
-    *
-    * `HashPartitioning(dims)` satisfies the `ClusteredDistribution` of
-    * every level, so Catalyst inserts no further exchange before the
-    * range-partitioned `orderBy`. */
-  private def chainedPlan(joined: DataFrame): DataFrame = {
-    val dims = Seq(col("geo"), col("type"), col("misc"), col("nature"), col("time"))
-    joined
-      .repartition(dims: _*)
-      .groupBy(dims :+ col("contract") :+ col("client"): _*)
-      .agg(
-        count(lit(1)).as("pre_ninv"),
-        sum("consumption").as("pre_cons"),
-        sum("amt").as("pre_amt"))
-      .groupBy(dims :+ col("client"): _*)
-      .agg(
-        count(lit(1)).as("pre_ncontr"),
-        sum("pre_ninv").as("pre_ninv"),
-        sum("pre_cons").as("pre_cons"),
-        sum("pre_amt").as("pre_amt"))
-      .groupBy(dims: _*)
-      .agg(
-        sum("pre_cons").as("consumption"),
-        sum("pre_amt").as("amount"),
-        count(lit(1)).as("nclients"),
-        sum("pre_ncontr").as("ncontrats"),
-        sum("pre_ninv").as("ninvoices"))
-      .orderBy(dims: _*)
-  }
+  /** The dim's key columns, in the order of the statistics row. */
+  private val Keys = Seq("geo", "type", "misc", "nature", "client", "contract_id")
 
   /** Driver-side memo of the dim-statistics row — the stats job is
     * deterministic for a given input, and callers (bench loops, retries)
@@ -217,34 +190,31 @@ object ReferenceHypercube {
     }
   }
 
-  /** The one-off statistics aggregate over the dim table: maxes (0–5)
-    * and mins (6–11) of geo, type, misc, nature, client and contract_id,
-    * the row count (12) and the non-null key count (13). */
-  private def dimStats(dim: DataFrame): Row =
-    dim.agg(
-      max("geo"), max("type"), max("misc"), max("nature"),
-      max("client"), max("contract_id"),
-      min("geo"), min("type"), min("misc"), min("nature"),
-      min("client"), min("contract_id"),
-      count(lit(1)),
-      count(col("geo")) + count(col("type")) + count(col("misc")) +
-        count(col("nature")) + count(col("client")) + count(col("contract_id"))).head()
+  /** The one-off statistics aggregate over the dim table, per [[Keys]]
+    * column: maxes (0–5), mins (6–11), then the row count (12) and the
+    * non-null counts (13–18). */
+  private def dimStats(dim: DataFrame): Row = {
+    val keys = Keys.map(col)
+    dim.agg(max(keys.head), keys.tail.map(max) ++ keys.map(min) ++ (count(lit(1)) +: keys.map(count)): _*)
+      .head()
+  }
 
-  /** Bit-packed sort-stream variant of [[chainedPlan]]. The grouping keys
-    * are packed into single longs:
+  /** The plan of [[hypercube]]. The grouping keys are packed into single
+    * longs:
     *
     *   - `g`  = geo‖type‖misc‖nature, power-of-two strides (pure
     *     shifts/ors — no overflow, order-preserving, bijective);
     *   - `cc` = client‖contract, so `cc >>>` the contract bit width is
     *     the client, and ordering by `cc` orders by client first.
     *
-    * The bit widths come from the dim statistics row `s` ([[dimStats]]) —
-    * the same cheap pass over the dims any cost-based planner runs.
-    * Returns None (→ [[chainedPlan]]) when the dim is empty, has NULL or
-    * negative keys, the packed widths overflow a long, or `time` or
-    * `consumption` is not integral or the amount not float, double or
-    * DECIMAL ([[CubeStream]]); `time` stays unpacked, so fact-side values
-    * are unconstrained.
+    * Each key is packed as its slot: 1 + its offset from the key's
+    * minimum, with slot 0 for NULL — so NULL sorts first, as
+    * `NULLS FIRST` does, and is a group of its own. On the reference's
+    * domain (keys ≥ 1, `README.md:14-37`) a key's slot is its value. The
+    * minimums, spans and NULLs come from the dim statistics row `s`
+    * ([[dimStats]]) — the same cheap pass over the dims any cost-based
+    * planner runs; an empty dim's NULL min and max read as 0. `time`
+    * stays unpacked, so fact-side values are unconstrained.
     *
     * One exchange, one sort and one pass: the joined fact is shuffled
     * by a monotone bucket of `g` (below), each partition is sorted by
@@ -255,80 +225,59 @@ object ReferenceHypercube {
     * reference's sorted distinct passes, so no hash map is built.
     *
     * Ordering without sampling: the same statistics bound every `g` to
-    * `[lo, hi]` (the packed mins and maxes), so `pid = (g - lo) div w`
-    * with `w = (hi - lo) / parts + 1` is a monotone bucket of `g` in
-    * `[0, parts)`, `parts` = `spark.sql.shuffle.partitions` — long
-    * arithmetic on values below 2^62, no overflow. Partition `i` thus
-    * holds the `i`-th key range, sorted: the ordered partitions of
-    * [[hypercube]] come straight out of the pass. The buckets are equal
-    * width in `g`, so skew in `g` is skew in the fact's partitions, and
-    * AQE does not split a `repartitionById` partition. */
-  private def packedPlan(s: Row, joined: DataFrame): Option[DataFrame] = {
-    val n = s.getLong(12)
-    if (n == 0 || s.getLong(13) != 6 * n) return None // empty dim or NULL keys
-    val maxes = (0 to 5).map(i => s.get(i) match {
-      case i32: Int => i32.toLong
-      case i64: Long => i64
-      case _ => return None
-    })
-    val mins = (6 to 11).map(i => s.get(i) match {
-      case i32: Int => i32.toLong
-      case i64: Long => i64
-      case _ => return None
-    })
-    if (mins.exists(_ < 0)) return None
-    def bits(maxVal: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(maxVal | 1L)
-    val Seq(bGeo, bType, bMisc, bNature, bClient, bContract) = maxes.map(bits)
-    if (bGeo + bType + bMisc + bNature > 62 || bClient + bContract > 62) return None
+    * `[lo, hi]` (the packed lowest and highest slots), so
+    * `pid = (g - lo) div w` with `w = (hi - lo) / parts + 1` is a
+    * monotone bucket of `g` in `[0, parts)`,
+    * `parts` = `spark.sql.shuffle.partitions` — long arithmetic on values
+    * below 2^62, no overflow. Partition `i` thus holds the `i`-th key
+    * range, sorted: the ordered partitions of [[hypercube]] come straight
+    * out of the pass. The buckets are equal width in `g`, so skew in `g`
+    * is skew in the fact's partitions, and AQE does not split a
+    * `repartitionById` partition. */
+  private def packedPlan(s: Row, joined: DataFrame, amountT: DataType): DataFrame = {
+    def long(i: Int): Long = if (s.isNullAt(i)) 0L else s.get(i).asInstanceOf[Number].longValue
+    val nulls = Keys.indices.map(i => s.getLong(13 + i) < s.getLong(12))
+    val mins = Keys.indices.map(i => long(6 + i))
+    val spans = Keys.indices.map(i => BigInt(long(i)) - mins(i) + 1) // the highest slot
+    val bits = spans.map(_.bitLength)
+    for (ks <- Seq(0 to 3, 4 to 5))
+      require(ks.map(bits).sum <= 62, s"hypercube columns ${ks.map(Keys).mkString(", ")} span " +
+        s"${ks.map(spans).mkString(", ")}: ${ks.map(bits).sum} bits, over the 62 of a packed key")
+    val Seq(_, bType, bMisc, bNature, _, bContract) = bits
+    val shifts = Seq(bType + bMisc + bNature, bMisc + bNature, bNature, 0)
 
-    val geoT = joined.schema("geo").dataType
-    val typeT = joined.schema("type").dataType
-    val miscT = joined.schema("misc").dataType
-    val natureT = joined.schema("nature").dataType
-    val timeT = joined.schema("time").dataType
-    val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
-    if (!integral(timeT) || !integral(joined.schema("consumption").dataType)) return None
-    // SUM's result type: a float sums in double, widened per row
-    val amountT = joined.schema("amt").dataType match {
-      case FloatType | DoubleType => DoubleType
-      case d: DecimalType => DecimalType(math.min(DecimalType.MAX_PRECISION, d.precision + 10), d.scale)
-      case _ => return None
+    def slot(i: Int): Column = {
+      val slot = col(Keys(i)).cast("long") - lit(mins(i)) + 1
+      if (nulls(i)) coalesce(slot, lit(0L)) else slot
     }
-    def pk(c: String) = col(c).cast("long")
-    val g = shiftleft(pk("geo"), bType + bMisc + bNature)
-      .bitwiseOR(shiftleft(pk("type"), bMisc + bNature))
-      .bitwiseOR(shiftleft(pk("misc"), bNature))
-      .bitwiseOR(pk("nature"))
-    val cc = shiftleft(pk("client"), bContract).bitwiseOR(pk("contract"))
-    def mask(b: Int): Long = (1L << b) - 1
-    def pack(geo: Long, tpe: Long, misc: Long, nature: Long): Long =
-      geo << (bType + bMisc + bNature) | tpe << (bMisc + bNature) | misc << bNature | nature
-    val lo = pack(mins(0), mins(1), mins(2), mins(3))
-    val hi = pack(maxes(0), maxes(1), maxes(2), maxes(3))
+    def unslot(i: Int, slot: Column): Column = {
+      val value = slot - 1 + lit(mins(i))
+      (if (nulls(i)) when(slot > 0, value) else value).cast(joined.schema(Keys(i)).dataType).as(Keys(i))
+    }
+    val g = (0 to 3).map(i => shiftleft(slot(i), shifts(i))).reduce(_ bitwiseOR _)
+    val cc = shiftleft(slot(4), bContract).bitwiseOR(slot(5))
+    def pack(slots: Int => Long): Long = (0 to 3).map(i => slots(i) << shifts(i)).reduce(_ | _)
+    val lo = pack(i => if (nulls(i)) 0L else 1L)
+    val hi = pack(spans(_).toLong)
     val conf = joined.sparkSession.sessionState.conf
     val parts = conf.numShufflePartitions
-    val pid = call_function("div", col("g") - lit(lo), lit((hi - lo) / parts + 1)).cast("int")
     val cube = StructType(Seq(
       StructField("g", LongType, nullable = false),
-      StructField("time", timeT),
+      StructField("time", joined.schema("time").dataType),
       StructField("consumption", LongType),
       StructField("amount", amountT),
       StructField("nclients", LongType, nullable = false),
       StructField("ncontrats", LongType, nullable = false),
       StructField("ninvoices", LongType, nullable = false)))
-    Some(joined
-      .select(g.as("g"), col("time"), cc.as("cc"), pk("consumption").as("consumption"),
+    joined
+      .select(g.as("g"), col("time"), cc.as("cc"), col("consumption").cast("long").as("consumption"),
         (if (amountT == DoubleType) col("amt").cast(DoubleType) else col("amt")).as("amt"))
-      .repartitionById(parts, pid)
+      .repartitionById(parts, call_function("div", col("g") - lit(lo), lit((hi - lo) / parts + 1)).cast("int"))
       .sortWithinPartitions("g", "time", "cc") // order-preserving packing ⇒ same order as the 5 dims
       .mapPartitions(new CubeStream(bContract, amountT, conf.ansiEnabled))(Encoders.row(cube))
-      .select(
-        shiftright(col("g"), bType + bMisc + bNature).cast(geoT).as("geo"),
-        shiftright(col("g"), bMisc + bNature).bitwiseAND(lit(mask(bType))).cast(typeT).as("type"),
-        shiftright(col("g"), bNature).bitwiseAND(lit(mask(bMisc))).cast(miscT).as("misc"),
-        col("g").bitwiseAND(lit(mask(bNature))).cast(natureT).as("nature"),
-        col("time"), col("consumption"), col("amount"),
-        col("nclients"), col("ncontrats"), col("ninvoices")))
+      .select((0 to 3).map(i => unslot(i,
+          shiftright(col("g"), shifts(i)).bitwiseAND(lit((1L << bits(i)) - 1)))) ++
+        Seq("time", "consumption", "amount", "nclients", "ncontrats", "ninvoices").map(col): _*)
   }
 
   /** The pass of [[packedPlan]] over one partition of (g, time, cc,
@@ -447,12 +396,16 @@ object ReferenceHypercube {
     * stays golden-gated on the `fromFolder`/EtlMain path. */
   @volatile private[graft] var binOracleRoot: Option[String] = None
 
+  /** The stage of [[invoicesStaged]]: keyed by [[referenceSample]]'s `invoices.bin`. */
+  private[graft] def invoicesStageKey: Staging.Key =
+    Staging.Key("reference/invbin", Seq(s"${referenceSample()}/invoices.bin"))
+
   /** Write-once staged decode of the reference's `invoices.bin`
     * (contract, time, amount DECIMAL(20,10), consumption). */
   private[graft] def invoicesStaged(spark: SparkSession): String = {
-    val bin = s"${referenceSample()}/invoices.bin"
-    Staging.stage(spark, Staging.Key("reference/invbin", Seq(bin))) { tmp =>
-      invoices(spark, bin)
+    val key = invoicesStageKey
+    Staging.stage(spark, key) { tmp =>
+      invoices(spark, key.inputs.head)
         .select(col("contract"), col("time"),
           col("amount").cast(DecimalType(20, 10)).as("amount"),
           col("consumption"))
@@ -466,20 +419,25 @@ object ReferenceHypercube {
     * (the reference's `DecimalFormat` would print `,` under a French
     * default locale; we always print `.`).
     *
-    * The rounded amount's magnitude is rendered as a `DECIMAL(38,2)`
-    * string with its leading `0` trimmed, after a `-` for a negative
-    * amount: no `String.format` and no regex per row, and the string is
-    * built once. That equals `format_string("%.2f", …)` whenever
-    * `|round(x, 2)| < 1e12`: the rounded double is then the nearest one
-    * to its 2-decimal value `X` and its ulp is below 0.0002, so any
-    * digit string of it rounds half-up to `X` again. NaN, the
-    * infinities and larger magnitudes, where `String.format`'s digits
-    * decide, take the `format_string` path. */
-  private[graft] def refAmountFormat(c: Column): Column = {
+    * The renderer is picked by the amount's type `t`. A DECIMAL (of up
+    * to 36 integer digits), and a double whose `|round(x, 2)| < 1e12`, is rendered as the rounded
+    * magnitude's `DECIMAL(38,2)` string with its leading `0` trimmed,
+    * after a `-` for a negative amount: no `String.format` and no regex
+    * per row, and the string is built once. For a DECIMAL that is
+    * exactly `String.format("%.2f", …)` of its half-up rounding. For
+    * such a double it equals `format_string("%.2f", …)`: the rounded
+    * double is the nearest one to its 2-decimal value `X` and its ulp is
+    * below 0.0002, so any digit string of it rounds half-up to `X`
+    * again. NaN, the infinities and larger doubles, where
+    * `String.format`'s digits decide, take the `format_string` path
+    * (which would reject a DECIMAL: it hands Spark's `Decimal` to
+    * `String.format`). */
+  private[graft] def refAmountFormat(c: Column, t: DataType): Column = {
     val r = round(c, 2)
-    when(abs(r) < 1e12,
-      concat(when(r < 0, "-").otherwise(""), ltrim(abs(r).cast(DecimalType(38, 2)).cast(StringType), "0")))
-      .otherwise(regexp_replace(format_string("%.2f", r), "^(-?)0\\.", "$1."))
+    val decimal =
+      concat(when(r < 0, "-").otherwise(""), ltrim(abs(r).cast(DecimalType(38, 2)).cast(StringType), "0"))
+    if (t.isInstanceOf[DecimalType]) decimal
+    else when(abs(r) < 1e12, decimal).otherwise(regexp_replace(format_string("%.2f", r), "^(-?)0\\.", "$1."))
   }
 
   /** S4: CSV sink with the reference's header, row order and amount
@@ -500,7 +458,7 @@ object ReferenceHypercube {
     * 3,121,200 rows, `ETL.java:33-35`), not by the fact's. An existing
     * `outPath` is replaced. */
   def writeCsv(cube: DataFrame, outPath: String, singleFile: Boolean = true): Unit = {
-    val formatted = cube.withColumn("amount", refAmountFormat(col("amount")))
+    val formatted = cube.withColumn("amount", refAmountFormat(col("amount"), cube.schema("amount").dataType))
     if (!singleFile) formatted.write.mode("overwrite").option("header", "true").csv(outPath)
     else {
       val out = new Path(outPath)

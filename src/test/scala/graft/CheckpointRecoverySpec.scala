@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +12,7 @@ import graft.streaming.Sessionize
   * round-trip every production streaming job depends on (a restart
   * happens on EVERY cluster eventually; state loss would silently split
   * or duplicate sessions). */
-class CheckpointRecoverySpec extends AnyFunSuite {
+class CheckpointRecoverySpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("flatMapGroupsWithState sessionizer survives a stop/restart from checkpoint") {
@@ -36,10 +34,10 @@ class CheckpointRecoverySpec extends AnyFunSuite {
       // every session end + gap so all sessions emit
       Sessionize.Event(99L, 7L, 9000 * sec))
 
-    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val ckpt = tempDir("graft-ckpt-").toString
     // the memory sink does not support checkpoint recovery; the parquet
     // file sink does (and is what a production job writes anyway)
-    val outDir = Files.createTempDirectory("graft-ckpt-out-").toString
+    val outDir = tempDir("graft-ckpt-out-").toString
     val stream = MemoryStream[Sessionize.Event]
 
     def startQuery() =
@@ -88,8 +86,8 @@ class CheckpointRecoverySpec extends AnyFunSuite {
       (ts(5), "alpha gamma"),
       (ts(45), "flush"))  // watermark driver: closes the first window
 
-    val ckpt = Files.createTempDirectory("graft-trend-ckpt-").toString
-    val outDir = Files.createTempDirectory("graft-trend-out-").toString
+    val ckpt = tempDir("graft-trend-ckpt-").toString
+    val outDir = tempDir("graft-trend-out-").toString
     val stream = MemoryStream[(java.sql.Timestamp, String)]
 
     def startQuery() =

@@ -21,11 +21,10 @@ import graft.sources.FixedWidthBinaryV2
 /** Binary decode → hypercube → CSV against the plain-Scala `ETL.java`
   * twin ([[EtlTwin]]), on a folder of the reference sample's shape
   * generated by [[RefScale]] — no external fixture, so this gates the
-  * path on every host. Covers the three plans the dim statistics select
-  * (packed over a broadcast join, packed over a shuffled join, and the
-  * chained fallback for keys that do not pack), both sink modes and one
-  * and seven shuffle partitions: every CSV must equal the twin's line for
-  * line. */
+  * path on every host. Covers the one plan over a broadcast join, over a
+  * shuffled join, and on a copy of the folder with negative geo keys,
+  * in both sink modes and at one and seven shuffle partitions: every CSV
+  * must equal the twin's line for line, and no plan sorts globally. */
 class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
     with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
@@ -38,7 +37,7 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
   private lazy val expected: Vector[String] = EtlTwin.csvLines(folder)
 
   /** Added to every client's geo in [[shifted]]: negative keys, which
-    * the packed plan rejects. */
+    * the plan packs as offsets from the minimum. */
   private val GeoShift = -1000
 
   /** A copy of [[folder]] with every geo shifted by [[GeoShift]]. */
@@ -95,17 +94,16 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
     assert(expected.size > 10000)
   }
 
-  /** One plan selection: its input folder, the twin's CSV for it, the
-    * SQL settings it runs under, and whether it broadcasts the dim and
-    * sorts globally (the chained plan's range-partitioned `orderBy`). */
+  /** One arm: its input folder, the twin's CSV for it, the SQL settings
+    * it runs under, and whether it broadcasts the dim. */
   private final class Arm(val dir: () => String, val lines: () => Vector[String],
-      val conf: Seq[(String, String)], val broadcast: Boolean, val globalSort: Boolean)
+      val conf: Seq[(String, String)], val broadcast: Boolean)
 
   private val arms = Seq(
-    "packed" -> new Arm(() => folder, () => expected, Nil, broadcast = true, globalSort = false),
+    "packed" -> new Arm(() => folder, () => expected, Nil, broadcast = true),
     "shuffled-join packed" -> new Arm(() => folder, () => expected,
-      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"), broadcast = false, globalSort = false),
-    "chained" -> new Arm(() => shifted, () => shiftedExpected, Nil, broadcast = true, globalSort = true))
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"), broadcast = false),
+    "negative-key" -> new Arm(() => shifted, () => shiftedExpected, Nil, broadcast = true))
 
   for {
     parts <- Seq(1, 7)
@@ -119,11 +117,10 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
       val executed = executedPlans(ReferenceHypercube.writeCsv(c, out.toString, singleFile))
       val joins = executed.flatMap(p => collect(p) { case j: BroadcastHashJoinExec => j })
       assert(joins.nonEmpty === arm.broadcast, executed.mkString("\n\n"))
-      // the packed plan orders partitions without a global sort; the
-      // chained plan keeps its range-partitioned orderBy
-      assert(c.queryExecution.logical.collect { case s: Sort => s.global } === Seq(arm.globalSort))
+      // the plan orders partitions without a global sort
+      assert(c.queryExecution.logical.collect { case s: Sort => s.global } === Seq(false))
       val sorts = executed.flatMap(p => collect(p) { case s: SortExec => s.global })
-      assert(sorts.contains(true) === arm.globalSort, executed.mkString("\n\n"))
+      assert(!sorts.contains(true), executed.mkString("\n\n"))
       val files = partLines(out)
       if (singleFile) {
         assert(files.size === 1)
@@ -137,9 +134,9 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
 
   test("the packed plan is one exchange, one in-partition sort and one pass: " +
       "no aggregate operator and no global sort") {
-    for (parts <- Seq(1, 7))
+    for (parts <- Seq(1, 7); dir <- Seq(folder, shifted))
       SparkTestSession.withConf("spark.sql.shuffle.partitions" -> parts.toString) {
-        val c = packed()
+        val c = ReferenceHypercube.fromFolder(spark, dir)
         val out = tempDir("hypercube-plan").resolve("cube")
         val executed = executedPlans(ReferenceHypercube.writeCsv(c, out.toString))
         val all = executed.mkString("\n\n")

@@ -8,10 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ReferenceHypercube
 
-/** The packed plan's sort-stream pass against plain Spark SQL: on small
-  * frames built for its edge cases, `hypercube` must return exactly the
-  * rows of `GROUP BY (geo, type, misc, nature, time)` with `SUM`,
-  * `COUNT(DISTINCT …)` and `COUNT(*)`, ordered by the five keys. */
+/** The hypercube's one plan, the sort-stream pass, against plain Spark
+  * SQL: on small frames built for its edge cases (NULL, negative and
+  * empty dims among them), `hypercube` must return exactly the rows of
+  * `GROUP BY (geo, type, misc, nature, time)` with `SUM`,
+  * `COUNT(DISTINCT …)` and `COUNT(*)`, ordered by the five keys, and
+  * must reject with the column's name the inputs it cannot pack. */
 class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
   import SparkTestSession.withConf
@@ -73,6 +75,53 @@ class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
         assert(rows(1) === Seq(5, 1, 2, 3, 4, 35L, 5.25, 2L, 3L, 4L))
         assert(rows.contains(Seq(7, 2, 1, 1, 1, null, null, 1L, 1L, 2L)))
       }
+  }
+
+  test("NULL and negative geo, type, misc, nature, client and contract keys " +
+      "equal the SQL GROUP BY at 1, 4 and 64 shuffle partitions") {
+    import spark.implicits._
+    val cl = Seq[(Int, Option[Int], Option[Int], Option[Int])](
+      (-7, Some(-3), Some(-5), Some(2)), (2, None, Some(5), Some(-1)),
+      (3, Some(2), None, None), (4, Some(-3), Some(-5), Some(2))).toDF("id", "type", "geo", "misc")
+    val co = Seq[(Int, Int, Option[Int])]((-2, -7, Some(-4)), (2, -7, Some(-4)), (3, 2, None),
+      (4, 3, Some(1)), (5, 4, Some(-4)), (6, 3, None)).toDF("id", "client", "nature")
+    val inv = Seq[(Int, Option[Int], Option[Float], Option[Int])](
+      (-2, Some(4), Some(1.5f), Some(10)), (2, Some(4), Some(2.25f), Some(20)),
+      (5, Some(4), Some(0.5f), Some(3)), (3, Some(1), Some(1.0f), None), (3, None, None, Some(2)),
+      (4, Some(-9), Some(-0.75f), Some(-7)), (6, Some(-9), Some(0.25f), Some(1)), (6, Some(2), None, Some(5))
+    ).toDF("contract", "time", "amount", "consumption")
+    for (parts <- Seq(1, 4, 64))
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        assertSameRows(cl, co, inv)
+        val rows = streamed(cl, co, inv).collect().toSeq.map(_.toSeq)
+        assert(rows.head.take(5) === Seq(null, 2, null, null, -9)) // NULLs sort first
+        // clients -7 and 4 share (geo, type, misc, nature, time)
+        assert(rows.contains(Seq(-5, -3, 2, -4, 4, 33L, 4.25, 2L, 3L, 3L)))
+      }
+  }
+
+  test("an empty dim gives an empty cube with the schema of a non-empty one") {
+    val decimal = invoices.withColumn("amount", col("amount").cast(DecimalType(10, 2)))
+    for (inv <- Seq(invoices, decimal)) {
+      val empty = ReferenceHypercube.hypercube(clients, contracts.limit(0), inv)
+      assert(empty.collect().isEmpty)
+      assert(empty.schema === streamed(clients, contracts, inv).schema)
+    }
+  }
+
+  test("keys that span more than 62 bits are rejected, naming the columns") {
+    import spark.implicits._
+    val wide = Seq((1, Int.MinValue, Int.MaxValue, 2), (2, Int.MaxValue, Int.MinValue, 2))
+      .toDF("id", "type", "geo", "misc")
+    val e = intercept[IllegalArgumentException](ReferenceHypercube.hypercube(wide, contracts, invoices))
+    assert(e.getMessage.contains("hypercube columns geo, type, misc, nature span 4294967296, " +
+      "4294967296, 1, 2: 69 bits, over the 62 of a packed key"), e.getMessage)
+  }
+
+  test("a DOUBLE consumption is rejected, naming the column") {
+    val e = intercept[IllegalArgumentException](ReferenceHypercube.hypercube(clients, contracts,
+      invoices.withColumn("consumption", col("consumption").cast("double"))))
+    assert(e.getMessage.contains("hypercube column consumption is DOUBLE, not integral"), e.getMessage)
   }
 
   test("a DECIMAL(10,2) amount on the generated folder sums exactly to DECIMAL(20,2)") {

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must fail the entry at dump time — the regression class where the
   * builder's local replay passes but the driver's DuckDB (different
   * cwd) errors can't ship silently again. */
-class OracleAuditSpec extends AnyFunSuite {
+class OracleAuditSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   test("relative read_parquet glob is flagged") {
     val sql = "SELECT * FROM read_parquet('target/ann/x_12ab34cd/lists/*/*.parquet')"
@@ -26,7 +26,7 @@ class OracleAuditSpec extends AnyFunSuite {
   }
 
   test("absolute glob over a real staged layout passes; all refs are checked") {
-    val root = Files.createTempDirectory("oracle-audit").toFile
+    val root = tempDir("oracle-audit").toFile
     val part = new java.io.File(root, "lists/7")
     part.mkdirs()
     Files.writeString(Paths.get(part.getPath, "part-0.parquet"), "x")

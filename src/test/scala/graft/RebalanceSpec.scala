@@ -12,7 +12,7 @@ import graft.sources.Tables
   * with the RDD-derived partition count on real file scans — asserted
   * here on every test table and both sf tiers, plus the non-file and
   * shuffle-shaped pass-through cases. */
-class RebalanceSpec extends AnyFunSuite {
+class RebalanceSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("estimate equals the RDD-derived split count on every test table") {
@@ -33,13 +33,12 @@ class RebalanceSpec extends AnyFunSuite {
   }
 
   test("partition-pruned scans estimate the PRUNED listing, exactly as the real scan") {
-    import java.nio.file.Files
     // hive-partitioned layout written dir-by-dir from spark.range with
     // EXPLICIT partition counts (range plans carry their slice count
     // through a shuffle-free write, so AQE cannot coalesce the file
     // counts away): p=0 holds 12 files, p=1 holds 1 — pruning to p=1
     // must shrink the estimate
-    val root = Files.createTempDirectory("graft_part_est").toString
+    val root = tempDir("graft_part_est").toString
     spark.range(0L, 12000L, 1L, 12)
       .selectExpr("id", "repeat('x', 200) as body")
       .write.mode("overwrite").parquet(s"$root/p=0")
@@ -60,13 +59,12 @@ class RebalanceSpec extends AnyFunSuite {
   }
 
   test("a filter above an outer join does not prune the null-supplying scan") {
-    import java.nio.file.Files
     // two hive-partitioned tables; the filter on the RIGHT (null-
     // supplying) side's partition column sits ABOVE the left join, so
     // the optimizer cannot push it into the right scan — the estimate
     // must not replay it as a partition filter either (round-8 advice:
     // doing so under-estimated vs the real unpruned scan)
-    val root = Files.createTempDirectory("graft_join_est").toString
+    val root = tempDir("graft_join_est").toString
     spark.range(0L, 6000L, 1L, 6).selectExpr("id", "id % 2 as lp")
       .write.partitionBy("lp").mode("overwrite").parquet(s"$root/left")
     spark.range(0L, 6000L, 1L, 6).selectExpr("id", "id % 2 as p")

@@ -5,9 +5,10 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
+import org.apache.commons.io.FileUtils
 import org.scalatest.{Assertions, Suite}
 
-import graft.operators.ReferenceHypercube
+import graft.operators.{ReferenceHypercube, Staging}
 
 /** The reference's `data-sample` folder ([[ReferenceHypercube.referenceDir]])
   * for tests: the golden specs cancel without it, and the catalog specs
@@ -47,12 +48,24 @@ object ReferenceLayout {
   }
 
   /** Runs `body` over the reference sample where it exists, else over a
-    * folder [[generate]]d once per suite. */
+    * folder [[generate]]d once per suite. At suite end the generated
+    * folder goes, and with it the stage of its decoded `invoices.bin`
+    * ([[ReferenceHypercube.invoicesStaged]]), which is keyed by that
+    * folder's path and so is never read again; the sample's stage stays. */
   trait OnSampleLayout extends SparkTestSession.TempDirs { this: Suite =>
-    private lazy val generated = generate(tempDir("reference-layout"))
+    @volatile private var made: Option[String] = None
+    private lazy val generated = {
+      made = Some(generate(tempDir("reference-layout")))
+      made.get
+    }
 
     def onSampleLayout[T](body: => T): T =
       if (sampleExists) body
       else ReferenceHypercube.withReferenceDir(generated)(body)
+
+    override def afterAll(): Unit =
+      try made.foreach(dir => ReferenceHypercube.withReferenceDir(dir)(FileUtils.deleteDirectory(
+        new File(Staging.root(SparkTestSession.spark, ReferenceHypercube.invoicesStageKey)))))
+      finally super.afterAll()
   }
 }

@@ -17,7 +17,7 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   test("writeCsv round-trip matches the reference output contract") {
     ReferenceLayout.assumeSample()
-    val out = "target/test-out/cube_csv"
+    val out = tempDir("sink-reference").resolve("cube_csv").toString
     val cube = ReferenceHypercube.fromFolder(spark, ReferenceHypercube.referenceSample())
     ReferenceHypercube.writeCsv(cube, out, singleFile = true)
 
@@ -80,9 +80,10 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   test("refAmountFormat matches DecimalFormat('#.00') for |x| < 1") {
     import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.DoubleType
     import spark.implicits._
     val rendered = Seq(0.5, -0.5, 0.0, 1.5, -12.345, 0.004)
-      .toDF("x").select(ReferenceHypercube.refAmountFormat(col("x")))
+      .toDF("x").select(ReferenceHypercube.refAmountFormat(col("x"), DoubleType))
       .as[String].collect().toSeq
     // java.text.DecimalFormat("#.00") renders: .50, -.50, .00, 1.50, -12.35 (HALF_EVEN
     // on exact .345 — but Math.round(100*x)/100 in the reference is HALF_UP; we follow
@@ -93,7 +94,7 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   test("refAmountFormat is byte-identical to the format_string renderer on every input") {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DecimalType
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
     import spark.implicits._
     // the renderer this one replaced: String.format, then a regex
     def oracle(c: Column): Column = regexp_replace(format_string("%.2f", round(c, 2)), "^(-?)0\\.", "$1.")
@@ -102,7 +103,7 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     def bothWays(x: org.apache.spark.sql.DataFrame)(f: org.apache.spark.sql.DataFrame => Unit): Unit =
       Seq(x, x.repartition(3)).foreach(f)
     def mismatches(x: org.apache.spark.sql.DataFrame): Seq[String] =
-      x.select(col("x").cast("string"), ReferenceHypercube.refAmountFormat(col("x")), oracle(col("x")))
+      x.select(col("x").cast("string"), ReferenceHypercube.refAmountFormat(col("x"), DoubleType), oracle(col("x")))
         .collect().toSeq.collect { case r if r.getString(1) != r.getString(2) => r.mkString(" | ") }
     val rnd = new scala.util.Random(20261018L)
     def sign(): Int = if (rnd.nextBoolean()) -1 else 1
@@ -115,16 +116,22 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     val doubles = (edges ++ spread ++ halfway).toDF("x")
     bothWays(doubles)(d => assert(mismatches(d) === Nil))
     // format_string hands Spark's Decimal to String.format, which rejects
-    // it, so for a DECIMAL the oracle is the same format of the Java value
-    for ((p, s) <- Seq((10, 2), (20, 10))) {
+    // it, so for a DECIMAL the oracle is the same format of the Java value;
+    // the wider types hold magnitudes of 1e12 and above, up to 1e28
+    for ((p, s) <- Seq((10, 2), (20, 10), (30, 2), (38, 10))) {
       val unscaled = Seq.fill(2000)(BigInt(sign() * rnd.nextLong(Long.MaxValue)) * BigInt(rnd.nextLong(Long.MaxValue)))
         .map(u => u % BigInt(10).pow(rnd.nextInt(p) + 1)) ++
         Seq(0, 5, -5, 15, 4, -4).map(d => BigInt(d) * BigInt(10).pow(math.max(s - 3, 0)))
-      val values = unscaled.map(u => new java.math.BigDecimal(u.bigInteger, s))
+      val large = if (p - s < 13) Nil else Seq("1e12", "-1e12", "999999999999.995", "-999999999999.995",
+        "1000000000000.005", "-1000000000000.005", "123456789012345.675", s"-${"9" * (p - s)}.${"9" * s}")
+        .map(new java.math.BigDecimal(_).setScale(s, java.math.RoundingMode.HALF_UP))
+      val values = unscaled.map(u => new java.math.BigDecimal(u.bigInteger, s)) ++ large
       val expected = values.map(v => v.toPlainString -> String.format(java.util.Locale.ROOT, "%.2f",
         v.setScale(2, java.math.RoundingMode.HALF_UP)).replaceFirst("^(-?)0\\.", "$1.")).sorted
-      bothWays(values.toDF("x").select(col("x").cast(DecimalType(p, s)).as("x"))) { d =>
-        val rendered = d.select(col("x").cast("string"), ReferenceHypercube.refAmountFormat(col("x")))
+      // through strings: an encoded BigDecimal is a DECIMAL(38,18), too narrow for (38,10)
+      bothWays(values.map(_.toPlainString).toDF("x").select(col("x").cast(DecimalType(p, s)).as("x"))) { d =>
+        val rendered = d.select(col("x").cast("string"),
+            ReferenceHypercube.refAmountFormat(col("x"), DecimalType(p, s)))
           .as[(String, String)].collect().toSeq.sorted
         assert(rendered === expected, s"DECIMAL($p,$s)")
       }
@@ -150,8 +157,7 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   }
 
   test("Chars fields strip trailing NUL padding only") {
-    val path = "target/test-out/chars.bin"
-    Files.createDirectories(Paths.get("target/test-out"))
+    val path = tempDir("sink-chars").resolve("chars.bin").toString
     val dos = new DataOutputStream(new FileOutputStream(path))
     // record: int32 id, 8-byte NUL-padded tag
     def rec(id: Int, tag: String): Unit = {

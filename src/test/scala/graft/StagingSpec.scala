@@ -12,7 +12,7 @@ import graft.operators.Staging
   * served, no deadlock, no divergent bytes. The race is real: two
   * forked JVMs drive [[Staging.ensureConf]] on one fresh key with a
   * deliberate mid-build delay so their build windows overlap. */
-class StagingSpec extends AnyFunSuite {
+class StagingSpec extends AnyFunSuite with SparkTestSession.TempDirs {
 
   private def fork(out: String, nonce: String): Process = {
     val java = Paths.get(sys.props("java.home"), "bin", "java").toString
@@ -29,7 +29,7 @@ class StagingSpec extends AnyFunSuite {
   }
 
   test("two processes racing one stage key both read one complete artifact") {
-    val out = Files.createTempDirectory("staging-race").resolve("stage_x")
+    val out = tempDir("staging-race").resolve("stage_x")
       .toString
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val a = fork(out, nonce)
@@ -57,7 +57,7 @@ class StagingSpec extends AnyFunSuite {
   }
 
   test("a crashed holder's stale lock is taken over, not waited on forever") {
-    val out = Files.createTempDirectory("staging-stale").resolve("stage_y")
+    val out = tempDir("staging-stale").resolve("stage_y")
       .toString
     // plant a lock file that no process owns, with an old mtime
     Files.createDirectories(Paths.get(out).getParent)
@@ -79,7 +79,7 @@ class StagingSpec extends AnyFunSuite {
 
   test("a live build LONGER than the stale bound keeps its lock via the " +
       "heartbeat — a waiter never steals it, builds never overlap") {
-    val out = Files.createTempDirectory("staging-hb").resolve("stage_hb")
+    val out = tempDir("staging-hb").resolve("stage_hb")
       .toString
     val conf = new org.apache.hadoop.conf.Configuration()
     val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
@@ -113,7 +113,7 @@ class StagingSpec extends AnyFunSuite {
 
   test("release verifies ownership: a holder never deletes a lock that " +
       "was taken over by someone else") {
-    val out = Files.createTempDirectory("staging-own").resolve("stage_own")
+    val out = tempDir("staging-own").resolve("stage_own")
       .toString
     val conf = new org.apache.hadoop.conf.Configuration()
     val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
@@ -135,7 +135,7 @@ class StagingSpec extends AnyFunSuite {
 
   /** A one-file input table under a fresh temp directory. */
   private def table(content: String): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("staging-key").resolve("t.parquet")
+    val dir = tempDir("staging-key").resolve("t.parquet")
     Files.createDirectories(dir)
     Files.writeString(dir.resolve("part-0"), content)
     dir
@@ -187,7 +187,7 @@ class StagingSpec extends AnyFunSuite {
   }
 
   test("second ensure of a committed stage rebuilds nothing and takes no lock") {
-    val out = Files.createTempDirectory("staging-idem").resolve("stage_z")
+    val out = tempDir("staging-idem").resolve("stage_z")
       .toString
     val conf = new org.apache.hadoop.conf.Configuration()
     var builds = 0

@@ -10,7 +10,7 @@ import graft.sources.Tables
   * full composition at sf0.01; these tests pin each stage's SEMANTIC
   * contract on a planted corpus where the expected output is derivable
   * by hand, plus set-algebra invariants on real data. */
-class TrainingPipelineSpec extends AnyFunSuite {
+class TrainingPipelineSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
   import spark.implicits._
@@ -28,7 +28,7 @@ class TrainingPipelineSpec extends AnyFunSuite {
 
   test("PipelineMain.run with opt-in stages: outputs, summary fields, and split hygiene") {
     import java.nio.file.Files
-    val out = Files.createTempDirectory("graft_pipeline_flags").toString
+    val out = tempDir("graft_pipeline_flags").toString
     val summary = PipelineMain.run(spark, sf, out, shardTokens = 2048L,
       segmentDedup = true, leakageSplit = true, bpe = true)
     // summary carries the opt-in fields and the stage counts are sane
