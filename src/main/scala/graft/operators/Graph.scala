@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.Query
@@ -39,9 +40,6 @@ import graft.sources.Tables
   */
 object Graph {
 
-  /** T power-iteration rounds of weighted PageRank over undirected
-    * weighted edges (src, dst, weight) — returns (node, rank).
-    * `edges` must already be symmetric (both directions present). */
   /** Shuffle-partition sizing for the iteration loop: one partition
     * per ~4M edge rows (~100 MB of (long,long,double) rows — guide
     * §2.2's partition-size band), clamped to [1, 65536]. Derived from
@@ -50,6 +48,9 @@ object Graph {
   private def loopPartitions(nEdges: Long): Int =
     math.max(1L, math.min(65536L, (nEdges + (4L << 20) - 1) / (4L << 20))).toInt
 
+  /** T power-iteration rounds of weighted PageRank over undirected
+    * weighted edges (src, dst, weight) — returns (node, rank).
+    * `edges` must already be symmetric (both directions present). */
   def pageRank(edges0: DataFrame, damping: Double, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
     // materialize the edge frame ONCE: it feeds both the out-weight
@@ -86,6 +87,8 @@ object Graph {
     val nodes = norm.select(col("src").as("node")).distinct()
       .localCheckpoint(eager = true)
     val n = nodes.count()
+    // norm and nodes are materialized, so the edge checkpoint is not read again
+    edges.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.unpersist() }
     // an empty graph would otherwise divide into an Infinity/NaN
     // teleport constant and return silently-poisoned ranks (round-10
     // advice); the symmetric-edges precondition above is what makes

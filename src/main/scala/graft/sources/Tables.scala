@@ -15,17 +15,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Adapt file-derived scan parallelism to the cluster's — for inputs
-    * feeding HEAVY per-row pipelines only. A table whose parquet layout
-    * yields fewer splits than the cluster has cores (the test tables are
-    * single-row-group files → exactly ONE split) pins every downstream
-    * map-side stage to one core; redistributing across
-    * `defaultParallelism` engages them all. The branch fires only when
-    * scan parallelism is below the core count, so the exchange moves at
-    * most a few scan-partitions' worth of bytes — and on a real cluster
-    * reading many-row-group files it does not fire at all. The explicit
-    * partition count keeps AQE from coalescing the exchange back down
-    * (AQE respects user-specified numPartitions).
+  /** Spread a thin file scan across the cluster's cores, for inputs
+    * feeding heavy per-row pipelines only. The rule: when the scan plans
+    * fewer splits than `defaultParallelism`, repartition to
+    * `defaultParallelism`; otherwise, and for any frame that is not a
+    * plain scan, return `df` unchanged. A single-row-group test table
+    * plans one split and would pin every downstream map-side stage to
+    * one core; on files with many row groups the branch does not fire.
+    * The explicit partition count keeps AQE from coalescing the exchange
+    * back down.
     *
     * Deliberately NOT applied in [[load]]: for cheap-per-row consumers
     * (plain partial aggregates, SRP plane dots) the measured A/B shows
@@ -34,123 +32,31 @@ object Tables {
     * expensive per-row derivation (MinHash/SimHash signature hashing:
     * ~200 hash evaluations per exploded shingle row) opt in.
     *
-    * Only scan-shaped plans (leaf + project/filter, no joins/aggregates/
-    * shuffles) are ever probed — shuffle-bearing inputs already own
-    * their parallelism (shuffle.partitions), so they pass through
-    * untouched. The probe itself is ACTION-FREE (round-8 fix): the split
-    * count is estimated from the scan relation's cached file listing by
-    * replaying Spark's own split math (`FilePartition.maxSplitBytes` +
-    * greedy bin packing — public code in
-    * `org.apache.spark.sql.execution.datasources.FilePartition`), where
-    * the previous `df.rdd.getNumPartitions` probe forced an RDD
-    * materialization of the scan lineage per call. A plan with any
-    * non-file leaf (in-memory DataFrame, stream source) yields no
-    * estimate and passes through unchanged. */
+    * The split count is Spark's own, read from the planned scan by
+    * [[scanSplits]]; no job runs. */
   def rebalanced(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-    def scanShaped(p: LogicalPlan): Boolean = p match {
-      case Project(_, c) => scanShaped(c)
-      case Filter(_, c) => scanShaped(c)
-      case leaf if leaf.children.isEmpty => true
-      case _ => false
-    }
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (!scanShaped(df.queryExecution.optimizedPlan)) df
-    else estimatedScanPartitions(df) match {
+    scanSplits(df) match {
       case Some(n) if n < target => df.repartition(target)
       case _ => df
     }
   }
 
-  /** Estimated file-scan partition count of a scan-shaped plan, from the
-    * relation's (already cached) file listing — no RDD, no job. Replays
-    * the v1 `FilePartition` arithmetic: `maxSplitBytes = min(
-    * maxPartitionBytes, max(openCostInBytes, (Σ(len + openCost)) /
-    * minPartitionNum))`, every file split into `maxSplitBytes` chunks
-    * (parquet is splittable), chunks sorted descending and greedily
-    * packed with `openCost` padding per chunk. None when any leaf is not
-    * a file relation. Exactness is asserted in `RebalanceSpec` against
-    * the RDD-derived count on the real test tables. */
-  private[graft] def estimatedScanPartitions(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, Expression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.network.util.JavaUtils
-    val spark = df.sparkSession
-    val plan = df.queryExecution.optimizedPlan
-    val leaves = plan.collectLeaves()
-    val logRels = leaves.collect { case lr: LogicalRelation => lr }
-    val fsRels = logRels.collect {
-      case lr if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        (lr, lr.relation.asInstanceOf[HadoopFsRelation])
+  /** The number of splits Spark plans for `df` when its physical plan is
+    * a chain of projections and filters over one file scan; None for any
+    * other shape (joins, aggregates, shuffles, in-memory or stream
+    * leaves). The count is the partition count of the scan's
+    * `FileScanRDD`, which Spark builds from the relation's cached,
+    * already-pruned file listing without running a job. */
+  private[graft] def scanSplits(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
+    def splits(p: SparkPlan): Option[Int] = p match {
+      case ProjectExec(_, child) => splits(child)
+      case FilterExec(_, child) => splits(child)
+      case scan: FileSourceScanExec => Some(scan.inputRDD.getNumPartitions)
+      case _ => None
     }
-    if (fsRels.size != leaves.size) None
-    else {
-      // Partition-pruning parity with the real scan: filters on a
-      // partitioned relation's partition columns prune whole directories
-      // at planning time, so estimating from the UNPRUNED listing would
-      // over-count splits and silently skip the repartition the probed
-      // plan actually needs. Replay the pruning: conjuncts of the plan's
-      // Filter conditions that reference ONLY partition columns are
-      // handed to the file index, exactly as PruneFileSourcePartitions
-      // does (same attribute ids — the scan-shaped chain preserves them).
-      def conjuncts(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case other => Seq(other)
-      }
-      // Only Filters in the DIRECT Filter/Project chain above a scan may
-      // prune it — the shape PruneFileSourcePartitions rewrites. A
-      // conjunct found elsewhere in the plan (e.g. above an outer join,
-      // referencing the null-supplying side's partition column) is NOT a
-      // pushable scan filter, and replaying it here would under-estimate
-      // the real scan (round-8 advice).
-      import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project => LProject}
-      def chainLeaf(p: LogicalPlan): Option[LogicalRelation] = p match {
-        case f: LFilter      => chainLeaf(f.child)
-        case pr: LProject    => chainLeaf(pr.child)
-        case lr: LogicalRelation => Some(lr)
-        case _ => None
-      }
-      val chainFilters: Seq[(LogicalRelation, Seq[Expression])] = plan.collect {
-        case f: LFilter => chainLeaf(f.child).map(_ -> conjuncts(f.condition))
-      }.flatten
-      def partitionFilters(lr: LogicalRelation, fs: HadoopFsRelation): Seq[Expression] = {
-        val partCols = fs.partitionSchema.fieldNames.toSet
-        val partAttrs = AttributeSet(lr.output.filter(a => partCols.contains(a.name)))
-        if (partCols.isEmpty) Nil
-        else chainFilters.collect { case (l, cs) if l eq lr => cs }.flatten
-          .filter(c =>
-            c.deterministic && c.references.nonEmpty && c.references.subsetOf(partAttrs))
-      }
-      def bytesConf(key: String, dflt: Long): Long =
-        spark.conf.getOption(key).map(JavaUtils.byteStringAsBytes).getOrElse(dflt)
-      val defaultMaxSplit = bytesConf("spark.sql.files.maxPartitionBytes", 128L << 20)
-      val openCost = bytesConf("spark.sql.files.openCostInBytes", 4L << 20)
-      val minPartitionNum = spark.conf.getOption("spark.sql.files.minPartitionNum")
-        .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-      val allSizes = fsRels.flatMap { case (lr, fs) =>
-        fs.location.listFiles(partitionFilters(lr, fs), Nil)
-          .flatMap(_.files.map(_.getLen))
-      }
-      // totalBytes counts every selected file (zero-length included,
-      // each padded with openCost) — Spark's own maxSplitBytes math —
-      // while only non-empty files emit split chunks
-      val totalBytes = allSizes.map(_ + openCost).sum
-      val sizes = allSizes.filter(_ > 0)
-      val maxSplit = math.min(defaultMaxSplit,
-        math.max(openCost, totalBytes / math.max(1, minPartitionNum)))
-      val chunks = sizes.flatMap(len =>
-        (0L until len by maxSplit).map(off => math.min(maxSplit, len - off)))
-        .sortBy(-_)
-      var n = 0
-      var cur = 0L
-      chunks.foreach { c =>
-        if (cur + c > maxSplit) { n += 1; cur = 0L }
-        cur += c + openCost
-      }
-      if (cur > 0L || n == 0) n += 1
-      Some(n)
-    }
+    splits(df.queryExecution.sparkPlan)
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =

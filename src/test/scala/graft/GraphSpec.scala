@@ -64,6 +64,21 @@ class GraphSpec extends AnyFunSuite {
     assert(got(1L) > got(2L))
   }
 
+  test("pageRank releases its edge checkpoint once the loop inputs are built") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val star = sym((1L to 6L).map(i => (0L, i, 1.0)))
+    // under 5 rounds no rank checkpoint is taken, so the result reads
+    // exactly two checkpoints: the normalized edges and the node set
+    val ranks = Graph.pageRank(star.toDF("src", "dst", "weight"), 0.85, 3)
+    val read = ranks.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    assert(read.size === 2)
+    // the edge checkpoint pageRank took first is no longer pinned
+    assert(sc.getPersistentRDDs.keySet -- before === read)
+  }
+
   test("sf0.001 purchase graph matches the plain-Scala reference at 1e-9") {
     val edges = Graph.purchaseEdges(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
