@@ -50,7 +50,10 @@ object Graph {
 
   /** T power-iteration rounds of weighted PageRank over undirected
     * weighted edges (src, dst, weight) — returns (node, rank).
-    * `edges` must already be symmetric (both directions present). */
+    * `edges` must already be symmetric (both directions present). Of
+    * the checkpoints it takes, only the two its result reads stay
+    * pinned: the others are released as soon as the checkpoints
+    * computed from them are materialized. */
   def pageRank(edges0: DataFrame, damping: Double, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
     // materialize the edge frame ONCE: it feeds both the out-weight
@@ -88,7 +91,7 @@ object Graph {
       .localCheckpoint(eager = true)
     val n = nodes.count()
     // norm and nodes are materialized, so the edge checkpoint is not read again
-    edges.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.unpersist() }
+    release(edges)
     // an empty graph would otherwise divide into an Infinity/NaN
     // teleport constant and return silently-poisoned ranks (round-10
     // advice); the symmetric-edges precondition above is what makes
@@ -96,6 +99,7 @@ object Graph {
     require(n > 0, "pageRank needs a non-empty edge frame")
     val teleport = (1.0 - damping) / n
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
+    var read = nodes // the checkpoint the current ranks are computed from
     for (i <- 1 to iters) {
       val contribs = norm.join(ranks, norm("src") === ranks("node"))
         .groupBy(col("dst").as("node"))
@@ -105,10 +109,20 @@ object Graph {
       ranks = contribs
         .select(col("node"), (lit(teleport) + lit(damping) * col("in_mass")).as("rank"))
       // truncate lineage so round t never re-plans rounds 1..t-1
-      if (i % 5 == 0 && i < iters) ranks = ranks.localCheckpoint(eager = true)
+      if (i % 5 == 0 && i < iters) {
+        ranks = ranks.localCheckpoint(eager = true)
+        // the new checkpoint is materialized, so the one it was computed
+        // from (the node set, then the previous ranks) is not read again
+        release(read)
+        read = ranks
+      }
     }
     ranks
   }
+
+  /** Unpersists the RDD behind a `localCheckpoint`ed frame. */
+  private def release(checkpoint: DataFrame): Unit =
+    checkpoint.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.unpersist() }
 
   /** The catalog graph: customer↔supplier purchase edges from
     * orders⋈lineitem, weight = number of lineitems, symmetrized.

@@ -68,15 +68,19 @@ class GraphSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.LogicalRDD
     import spark.implicits._
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val star = sym((1L to 6L).map(i => (0L, i, 1.0)))
     // under 5 rounds no rank checkpoint is taken, so the result reads
-    // exactly two checkpoints: the normalized edges and the node set
-    val ranks = Graph.pageRank(star.toDF("src", "dst", "weight"), 0.85, 3)
-    val read = ranks.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
-    assert(read.size === 2)
-    // the edge checkpoint pageRank took first is no longer pinned
-    assert(sc.getPersistentRDDs.keySet -- before === read)
+    // exactly two checkpoints: the normalized edges and the node set; at
+    // 15 rounds it reads the normalized edges and the round-10 ranks, and
+    // the node set and the round-5 ranks are released too
+    for (iters <- Seq(3, 15)) {
+      val before = sc.getPersistentRDDs.keySet
+      val ranks = Graph.pageRank(star.toDF("src", "dst", "weight"), 0.85, iters)
+      val read = ranks.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(read.size === 2)
+      // nothing pageRank checkpointed stays pinned but what its result reads
+      assert(sc.getPersistentRDDs.keySet -- before === read, s"$iters rounds")
+    }
   }
 
   test("sf0.001 purchase graph matches the plain-Scala reference at 1e-9") {

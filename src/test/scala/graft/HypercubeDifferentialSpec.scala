@@ -10,6 +10,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.WriteFilesExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -140,6 +142,13 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
         val out = tempDir("hypercube-plan").resolve("cube")
         val executed = executedPlans(ReferenceHypercube.writeCsv(c, out.toString))
         val all = executed.mkString("\n\n")
+        // the listeners see the cube's own plan, once, and no Spark writer
+        assert(executed.size === 1, all)
+        assert(executed.flatMap(p => collect(p) {
+          case w: DataWritingCommandExec => w
+          case w: WriteFilesExec => w
+        }).isEmpty, all)
+        assert(executed.flatMap(p => collect(p) { case j: BroadcastHashJoinExec => j }).nonEmpty, all)
         assert(executed.flatMap(p => collect(p) { case e: ShuffleExchangeExec => e }).size === 1, all)
         assert(executed.flatMap(p => collect(p) { case a: BaseAggregateExec => a }).isEmpty, all)
         assert(executed.flatMap(p => collect(p) { case s: SortExec => s.global }) === Seq(false), all)

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
 import org.apache.spark.sql.functions._
@@ -13,7 +17,9 @@ import graft.operators.ReferenceHypercube
   * empty dims among them), `hypercube` must return exactly the rows of
   * `GROUP BY (geo, type, misc, nature, time)` with `SUM`,
   * `COUNT(DISTINCT …)` and `COUNT(*)`, ordered by the five keys, and
-  * must reject with the column's name the inputs it cannot pack. */
+  * must reject with the column's name the inputs it cannot pack. On the
+  * same frames, `writeCsv` must write what Spark's CSV writer makes of
+  * the cube with its amount formatted by a column expression. */
 class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
   import SparkTestSession.withConf
@@ -77,19 +83,24 @@ class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
       }
   }
 
-  test("NULL and negative geo, type, misc, nature, client and contract keys " +
-      "equal the SQL GROUP BY at 1, 4 and 64 shuffle partitions") {
+  /** Clients, contracts and invoices with NULL and negative keys. */
+  private lazy val (nullClients, nullContracts, nullInvoices) = {
     import spark.implicits._
-    val cl = Seq[(Int, Option[Int], Option[Int], Option[Int])](
+    (Seq[(Int, Option[Int], Option[Int], Option[Int])](
       (-7, Some(-3), Some(-5), Some(2)), (2, None, Some(5), Some(-1)),
-      (3, Some(2), None, None), (4, Some(-3), Some(-5), Some(2))).toDF("id", "type", "geo", "misc")
-    val co = Seq[(Int, Int, Option[Int])]((-2, -7, Some(-4)), (2, -7, Some(-4)), (3, 2, None),
-      (4, 3, Some(1)), (5, 4, Some(-4)), (6, 3, None)).toDF("id", "client", "nature")
-    val inv = Seq[(Int, Option[Int], Option[Float], Option[Int])](
+      (3, Some(2), None, None), (4, Some(-3), Some(-5), Some(2))).toDF("id", "type", "geo", "misc"),
+    Seq[(Int, Int, Option[Int])]((-2, -7, Some(-4)), (2, -7, Some(-4)), (3, 2, None),
+      (4, 3, Some(1)), (5, 4, Some(-4)), (6, 3, None)).toDF("id", "client", "nature"),
+    Seq[(Int, Option[Int], Option[Float], Option[Int])](
       (-2, Some(4), Some(1.5f), Some(10)), (2, Some(4), Some(2.25f), Some(20)),
       (5, Some(4), Some(0.5f), Some(3)), (3, Some(1), Some(1.0f), None), (3, None, None, Some(2)),
       (4, Some(-9), Some(-0.75f), Some(-7)), (6, Some(-9), Some(0.25f), Some(1)), (6, Some(2), None, Some(5))
-    ).toDF("contract", "time", "amount", "consumption")
+    ).toDF("contract", "time", "amount", "consumption"))
+  }
+
+  test("NULL and negative geo, type, misc, nature, client and contract keys " +
+      "equal the SQL GROUP BY at 1, 4 and 64 shuffle partitions") {
+    val (cl, co, inv) = (nullClients, nullContracts, nullInvoices)
     for (parts <- Seq(1, 4, 64))
       withConf("spark.sql.shuffle.partitions" -> parts.toString) {
         assertSameRows(cl, co, inv)
@@ -97,6 +108,42 @@ class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
         assert(rows.head.take(5) === Seq(null, 2, null, null, -9)) // NULLs sort first
         // clients -7 and 4 share (geo, type, misc, nature, time)
         assert(rows.contains(Seq(-5, -3, 2, -4, 4, 33L, 4.25, 2L, 3L, 3L)))
+      }
+  }
+
+  /** The CSV lines (header first) Spark's CSV writer makes of `cube`
+    * with its amount formatted by the column expression `writeCsv` used
+    * before it rendered rows itself. A NULL amount stays NULL, an empty
+    * cell: that expression turned a NULL double into `nu` (the
+    * `format_string` branch, `String.format("%.2f", null)`). */
+  private def sparkCsv(cube: DataFrame): Vector[String] = {
+    val r = round(col("amount"), 2)
+    val decimal =
+      concat(when(r < 0, "-").otherwise(""), ltrim(abs(r).cast(DecimalType(38, 2)).cast("string"), "0"))
+    val amount = when(r.isNotNull,
+      if (cube.schema("amount").dataType.isInstanceOf[DecimalType]) decimal
+      else when(abs(r) < 1e12, decimal).otherwise(regexp_replace(format_string("%.2f", r), "^(-?)0\\.", "$1.")))
+    val out = tempDir("sink-oracle").resolve("csv")
+    cube.withColumn("amount", amount).write.option("header", "true").csv(out.toString)
+    val files = Files.list(out).iterator().asScala.toSeq.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).sorted // part-<index>-<job uuid>-c000.csv
+      .map(f => Files.readAllLines(out.resolve(f)).asScala.toVector)
+    (files.head.head +: files.flatMap(_.tail)).toVector
+  }
+
+  test("writeCsv writes the CSV Spark's writer makes of the formatted cube: NULL and " +
+      "negative keys, NULL amounts and a DECIMAL(10,2) amount, at 1, 4 and 64 shuffle partitions") {
+    def decimal(inv: DataFrame): DataFrame = inv.withColumn("amount", col("amount").cast(DecimalType(10, 2)))
+    val inputs = Seq((clients, contracts, invoices), (nullClients, nullContracts, nullInvoices))
+      .flatMap { case (cl, co, inv) => Seq((cl, co, inv), (cl, co, decimal(inv))) }
+    for (parts <- Seq(1, 4, 64); (cl, co, inv) <- inputs)
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        val cube = streamed(cl, co, inv)
+        val out = tempDir("sink-stream").resolve("cube")
+        ReferenceHypercube.writeCsv(cube, out.toString)
+        val lines = Files.readAllLines(out.resolve("part-00000.csv")).asScala.toVector
+        assert(lines === sparkCsv(cube), s"$parts partitions, amount ${cube.schema("amount").dataType.sql}")
+        if (cl eq clients) assert(lines.contains("7,2,1,1,1,,,1,1,2")) // NULL sums are empty cells
       }
   }
 

@@ -78,33 +78,65 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     assert(!entries(out).exists(Files.isDirectory(_)), entries(out).mkString(", "))
   }
 
-  test("refAmountFormat matches DecimalFormat('#.00') for |x| < 1") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DoubleType
-    import spark.implicits._
-    val rendered = Seq(0.5, -0.5, 0.0, 1.5, -12.345, 0.004)
-      .toDF("x").select(ReferenceHypercube.refAmountFormat(col("x"), DoubleType))
-      .as[String].collect().toSeq
+  test("writeCsv(singleFile = false) at more shuffle partitions than non-empty key " +
+      "ranges writes one headed file per non-empty partition, in key order") {
+    // a copy of the generated folder whose clients all have geo 1 or 578:
+    // of 64 equal-width key ranges, only the first and the last hold rows
+    val dir = tempDir("sink-two-geos")
+    Seq("contracts.csv", "invoices.bin").foreach(f => Files.copy(Paths.get(generated, f), dir.resolve(f)))
+    val clients = Files.readAllLines(Paths.get(generated, "clients.csv")).asScala.toSeq // id,type,geo,misc
+    Files.write(dir.resolve("clients.csv"), (clients.head +: clients.tail.map { l =>
+      val f = l.split(',')
+      f(2) = if (f(2).toInt <= 289) "1" else "578"
+      f.mkString(",")
+    }).asJava)
+    val out = tempDir("sink-partitioned").resolve("cube")
+    SparkTestSession.withConf("spark.sql.shuffle.partitions" -> "64") {
+      ReferenceHypercube.writeCsv(ReferenceHypercube.fromFolder(spark, dir.toString), out.toString, singleFile = false)
+    }
+    assert(partFiles(out).map(_.getFileName.toString) === Seq("part-00000.csv", "part-00063.csv"))
+    val files = partFiles(out).map(p => Files.readAllLines(p).asScala.toVector)
+    assert(files.forall(_.head == EtlTwin.Header))
+    val expected = EtlTwin.csvLines(dir.toString)
+    assert(files.flatMap(_.tail) === expected.tail)
+    assert(expected.tail.map(_.takeWhile(_ != ',')).distinct === Seq("1", "578"))
+    assert(!entries(out).exists(Files.isDirectory(_)), entries(out).mkString(", "))
+  }
+
+  test("writeCsv rejects a column it cannot render, naming it, and leaves outPath as it was") {
+    import org.apache.spark.sql.functions.col
+    val out = tempDir("sink-string").resolve("cube")
+    val cube = ReferenceHypercube.fromFolder(spark, generated)
+    ReferenceHypercube.writeCsv(cube, out.toString)
+    val e = intercept[IllegalArgumentException](
+      ReferenceHypercube.writeCsv(cube.withColumn("misc", col("misc").cast("string")), out.toString))
+    assert(e.getMessage.contains("writeCsv column misc is STRING"), e.getMessage)
+    assert(Files.readAllLines(partFiles(out).head).asScala.toVector === EtlTwin.csvLines(generated))
+  }
+
+  test("amountString matches DecimalFormat('#.00') for |x| < 1") {
+    val rendered = Seq(0.5, -0.5, 0.0, 1.5, -12.345, 0.004).map(ReferenceHypercube.amountString)
     // java.text.DecimalFormat("#.00") renders: .50, -.50, .00, 1.50, -12.35 (HALF_EVEN
     // on exact .345 — but Math.round(100*x)/100 in the reference is HALF_UP; we follow
     // Spark round() = HALF_UP), .00
     assert(rendered === Seq(".50", "-.50", ".00", "1.50", "-12.35", ".00"))
   }
 
-  test("refAmountFormat is byte-identical to the format_string renderer on every input") {
+  test("amountString is byte-identical to the format_string renderer on every input") {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    import org.apache.spark.sql.types.DecimalType
     import spark.implicits._
-    // the renderer this one replaced: String.format, then a regex
+    // the renderer the sink used before: String.format, then a regex
     def oracle(c: Column): Column = regexp_replace(format_string("%.2f", round(c, 2)), "^(-?)0\\.", "$1.")
     // each frame twice: as a local relation (the optimizer evaluates the
-    // projection interpreted) and shuffled (generated code, as in writeCsv)
+    // oracle interpreted) and shuffled (generated code)
     def bothWays(x: org.apache.spark.sql.DataFrame)(f: org.apache.spark.sql.DataFrame => Unit): Unit =
       Seq(x, x.repartition(3)).foreach(f)
     def mismatches(x: org.apache.spark.sql.DataFrame): Seq[String] =
-      x.select(col("x").cast("string"), ReferenceHypercube.refAmountFormat(col("x"), DoubleType), oracle(col("x")))
-        .collect().toSeq.collect { case r if r.getString(1) != r.getString(2) => r.mkString(" | ") }
+      x.select(col("x").cast("string"), col("x"), oracle(col("x"))).collect().toSeq
+        .map(r => (r.getString(0), ReferenceHypercube.amountString(r.getDouble(1)), r.getString(2)))
+        .collect { case (v, got, want) if got != want => s"$v | $got | $want" }
     val rnd = new scala.util.Random(20261018L)
     def sign(): Int = if (rnd.nextBoolean()) -1 else 1
     val edges = Seq(0.0, -0.0, 0.005, -0.005, 0.015, -0.015, 1.005, 2.675, -12.345,
@@ -130,12 +162,30 @@ class SinkSpec extends AnyFunSuite with SparkTestSession.TempDirs {
         v.setScale(2, java.math.RoundingMode.HALF_UP)).replaceFirst("^(-?)0\\.", "$1.")).sorted
       // through strings: an encoded BigDecimal is a DECIMAL(38,18), too narrow for (38,10)
       bothWays(values.map(_.toPlainString).toDF("x").select(col("x").cast(DecimalType(p, s)).as("x"))) { d =>
-        val rendered = d.select(col("x").cast("string"),
-            ReferenceHypercube.refAmountFormat(col("x"), DecimalType(p, s)))
-          .as[(String, String)].collect().toSeq.sorted
+        val rendered = d.select(col("x").cast("string"), col("x")).collect().toSeq
+          .map(r => r.getString(0) -> ReferenceHypercube.amountString(r.getDecimal(1))).sorted
         assert(rendered === expected, s"DECIMAL($p,$s)")
       }
     }
+  }
+
+  test("amountString's shortcut rounds as BigDecimal.valueOf does next to every half cent") {
+    import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+    // Spark's round(x, 2), then the digits without a leading zero
+    def reference(x: Double): String = {
+      val r = JBigDecimal.valueOf(x).setScale(2, RoundingMode.HALF_UP)
+      (if (r.signum < 0) "-" else "") + r.abs.toPlainString.dropWhile(_ == '0')
+    }
+    val rnd = new scala.util.Random(20261019L)
+    // up to 2^30 cents, the shortcut's range, and past it; on a half
+    // cent, a few ulps off it, and at a cent
+    val xs = Seq.fill(20000) {
+      val half = (rnd.nextLong(1L << (1 + rnd.nextInt(32))) + 0.5) / 100
+      val x = Seq(half, Math.nextUp(half), Math.nextDown(half), half + 3 * Math.ulp(half),
+        half - 3 * Math.ulp(half), half - 0.005)(rnd.nextInt(6))
+      if (rnd.nextBoolean()) -x else x
+    }
+    assert(xs.filter(x => ReferenceHypercube.amountString(x) != reference(x)) === Nil)
   }
 
   test("a DECIMAL(10,2) amount input sums exactly") {
