@@ -8,12 +8,15 @@ import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, IntegerType, StringType}
 
 import graft.functions._
-import graft.operators.{Curation, Dedup, Profiling, Retrieval, Vocab}
+import graft.operators.{CubePass, Curation, Dedup, Profiling, Retrieval, Vocab}
 
 /** `SparkSessionExtensions` wiring: registers the engine's native
   * Catalyst expressions as SQL functions, so `spark.sql("SELECT
   * minhash_signature(hs, 128) …")` works exactly like the Column API —
   * the registration path any BI/SQL-only consumer of the library uses.
+  * It also injects the planner strategy of the hypercube's aggregating
+  * pass ([[graft.operators.CubePass]]), without which
+  * `ReferenceHypercube.hypercube` cannot be planned.
   *
   * Enable with `spark.sql.extensions=graft.GraftExtensions` (set by
   * [[GraftSession]]) or pass to `SparkSession.builder.withExtensions`.
@@ -58,6 +61,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => CubePass.Strategy)
     ext.injectFunction((FunctionIdentifier("minhash_signature"),
       info("minhash_signature", "minhash_signature(hashes, k) - k-slot MinHash signature of an array<bigint>"),
       (args: Seq[Expression]) => {

@@ -9,11 +9,13 @@ import scala.util.DynamicVariable
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.IOUtils
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -98,10 +100,18 @@ object ReferenceHypercube {
   /** J2 + A1–A6 + P3 + O1: the hypercube of the three inputs, as one
     * plan ([[packedPlan]]): the fact is joined against the denormalized
     * dim, shuffled ONCE by a monotone bucket of the packed group key,
-    * each partition is sorted by (group, time, client‖contract), and one
-    * streaming pass folds each (group, time) run into its cube row.
-    * Sorted keys make both exact distinct counts change counts — no
-    * `Expand`, no hash map.
+    * each partition is sorted by one packed (group‖client‖contract) long
+    * — by radix, on Spark's sort prefix alone — and one Catalyst
+    * operator ([[CubePass]]) folds each group's run into its cube rows,
+    * one per time. Sorted keys make both exact distinct counts change
+    * counts — no `Expand`, no hash map of keys. The pass holds one
+    * group's accumulators at a time: at most 36 on the reference's
+    * domain, in general that group's cube rows.
+    *
+    * The operator is planned by a strategy that [[graft.GraftExtensions]]
+    * injects: a session built without
+    * `spark.sql.extensions=graft.GraftExtensions` is rejected with an
+    * `IllegalStateException` that says so.
     *
     * Empty groups never materialize (the reference needs its `!= 0`
     * filter only because its dense array pre-materializes all 3.1 M
@@ -135,6 +145,9 @@ object ReferenceHypercube {
     * follow from the input types alone; a dim column is nullable in the
     * cube exactly when it holds a NULL. */
   def hypercube(clients: DataFrame, contracts: DataFrame, invoices: DataFrame): DataFrame = {
+    if (!invoices.sparkSession.sessionState.planner.strategies.contains(CubePass.Strategy))
+      throw new IllegalStateException("hypercube plans its aggregating pass with a strategy of " +
+        "graft.GraftExtensions; build the session with spark.sql.extensions=graft.GraftExtensions")
     val dim = contractDim(clients, contracts)
     val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
     (Keys.map(dim.schema(_)) ++ Seq("time", "consumption").map(invoices.schema(_))).foreach(f =>
@@ -222,13 +235,23 @@ object ReferenceHypercube {
     * planner runs; an empty dim's NULL min and max read as 0. `time`
     * stays unpacked, so fact-side values are unconstrained.
     *
-    * One exchange, one sort and one pass: the joined fact is shuffled
-    * by a monotone bucket of `g` (below), each partition is sorted by
-    * (g, time, cc), and one `mapPartitions` pass ([[CubeStream]]) folds
-    * every (g, time) run into its cube row. With the keys sorted, both
-    * distinct counts are change counts — contracts are the changes of
-    * `cc`, clients the changes of `cc >>> bContract` — as in the
-    * reference's sorted distinct passes, so no hash map is built.
+    * One exchange, one sort and one pass: the joined fact, as rows of
+    * (g, time, cc, consumption, amt) with `time` carried as a long, is
+    * shuffled by a monotone bucket of `g` (below), each partition is
+    * sorted by (g, cc), and one Catalyst operator ([[CubePass]]) folds
+    * each `g` run into its cube rows, one per time, and writes the final
+    * cube columns. With the rows of a time in `cc` order, both distinct
+    * counts are change counts — contracts are the changes of `cc`,
+    * clients the changes of `cc >>> bContract` — as in the reference's
+    * sorted distinct passes, so no hash map of keys is built.
+    *
+    * The sort key: when `bitLength(hi - lo) + bcc <= 63`, with `bcc`
+    * the bit width of `cc`, each partition is sorted by the one long
+    * `((g - lo) << bcc) | cc`. Spark's `SortExec` then holds the whole
+    * key in its 8-byte prefix and sorts by radix, with no row
+    * comparisons. Otherwise it sorts by the two keys (g, cc); both give
+    * the same order and feed the same pass. The 1/64-scale bench folder
+    * packs 19 + 29 bits, the reference's full scale 19 + 41.
     *
     * Ordering without sampling: the same statistics bound every `g` to
     * `[lo, hi]` (the packed lowest and highest slots), so
@@ -249,104 +272,40 @@ object ReferenceHypercube {
     for (ks <- Seq(0 to 3, 4 to 5))
       require(ks.map(bits).sum <= 62, s"hypercube columns ${ks.map(Keys).mkString(", ")} span " +
         s"${ks.map(spans).mkString(", ")}: ${ks.map(bits).sum} bits, over the 62 of a packed key")
-    val Seq(_, bType, bMisc, bNature, _, bContract) = bits
+    val Seq(_, bType, bMisc, bNature, bClient, bContract) = bits
     val shifts = Seq(bType + bMisc + bNature, bMisc + bNature, bNature, 0)
 
     def slot(i: Int): Column = {
       val slot = col(Keys(i)).cast("long") - lit(mins(i)) + 1
       if (nulls(i)) coalesce(slot, lit(0L)) else slot
     }
-    def unslot(i: Int, slot: Column): Column = {
-      val value = slot - 1 + lit(mins(i))
-      (if (nulls(i)) when(slot > 0, value) else value).cast(joined.schema(Keys(i)).dataType).as(Keys(i))
-    }
     val g = (0 to 3).map(i => shiftleft(slot(i), shifts(i))).reduce(_ bitwiseOR _)
     val cc = shiftleft(slot(4), bContract).bitwiseOR(slot(5))
     def pack(slots: Int => Long): Long = (0 to 3).map(i => slots(i) << shifts(i)).reduce(_ | _)
     val lo = pack(i => if (nulls(i)) 0L else 1L)
     val hi = pack(spans(_).toLong)
-    val conf = joined.sparkSession.sessionState.conf
+    val bcc = bClient + bContract
+    val sortKey =
+      if (64 - java.lang.Long.numberOfLeadingZeros(hi - lo) + bcc <= 63)
+        Seq(shiftleft(col("g") - lit(lo), bcc).bitwiseOR(col("cc")))
+      else Seq(col("g"), col("cc"))
+    val spark = joined.sparkSession
+    val conf = spark.sessionState.conf
     val parts = conf.numShufflePartitions
-    val cube = StructType(Seq(
-      StructField("g", LongType, nullable = false),
-      StructField("time", joined.schema("time").dataType),
-      StructField("consumption", LongType),
-      StructField("amount", amountT),
-      StructField("nclients", LongType, nullable = false),
-      StructField("ncontrats", LongType, nullable = false),
-      StructField("ninvoices", LongType, nullable = false)))
-    joined
-      .select(g.as("g"), col("time"), cc.as("cc"), col("consumption").cast("long").as("consumption"),
+    val sorted = joined
+      .select(g.as("g"), col("time").cast("long").as("time"), cc.as("cc"),
+        col("consumption").cast("long").as("consumption"),
         (if (amountT == DoubleType) col("amt").cast(DoubleType) else col("amt")).as("amt"))
       .repartitionById(parts, call_function("div", col("g") - lit(lo), lit((hi - lo) / parts + 1)).cast("int"))
-      .sortWithinPartitions("g", "time", "cc") // order-preserving packing ⇒ same order as the 5 dims
-      .mapPartitions(new CubeStream(bContract, amountT, conf.ansiEnabled))(Encoders.row(cube))
-      .select((0 to 3).map(i => unslot(i,
-          shiftright(col("g"), shifts(i)).bitwiseAND(lit((1L << bits(i)) - 1)))) ++
-        Seq("time", "consumption", "amount", "nclients", "ncontrats", "ninvoices").map(col): _*)
-  }
-
-  /** The pass of [[packedPlan]] over one partition of (g, time, cc,
-    * consumption, amt) rows sorted by (g, time, cc): one cube row
-    * (g, time, consumption, amount, nclients, ncontrats, ninvoices) per
-    * (g, time) run, with SQL `SUM` semantics — NULL measures are
-    * skipped and an all-NULL run sums to NULL; the long sum overflows
-    * as `SUM` does under the session's ANSI setting (throws, or wraps);
-    * a `DECIMAL(p, s)` amount sums exactly and, like `SUM`'s
-    * `DECIMAL(min(38, p + 10), s)` result, throws (ANSI) or gives NULL
-    * when the total does not fit `amountT`. A NULL `time` is a key like
-    * any other: it sorts first and forms its own run. */
-  private final class CubeStream(bContract: Int, amountT: DataType, ansi: Boolean)
-      extends (Iterator[Row] => Iterator[Row]) with Serializable {
-    private val decimal = amountT.isInstanceOf[DecimalType]
-    private val precision = amountT match {
-      case d: DecimalType => d.precision
-      case _ => 0
-    }
-
-    def apply(rows: Iterator[Row]): Iterator[Row] = new Iterator[Row] {
-      private val in = rows.buffered
-      def hasNext: Boolean = in.hasNext
-      def next(): Row = {
-        val g = in.head.getLong(0)
-        val time = in.head.get(1)
-        var cons = 0L
-        var dbl = 0.0
-        var dec: java.math.BigDecimal = null
-        var anyCons, anyAmt = false
-        var nclients, ncontrats, ninvoices = 0L
-        var lastCc, lastClient = -1L // cc >= 0
-        while (in.hasNext && in.head.getLong(0) == g && in.head.get(1) == time) {
-          val r = in.next()
-          ninvoices += 1
-          val cc = r.getLong(2)
-          if (cc != lastCc) {
-            ncontrats += 1
-            lastCc = cc
-            if ((cc >>> bContract) != lastClient) {
-              nclients += 1
-              lastClient = cc >>> bContract
-            }
-          }
-          if (!r.isNullAt(3)) {
-            cons = if (ansi) Math.addExact(cons, r.getLong(3)) else cons + r.getLong(3)
-            anyCons = true
-          }
-          if (!r.isNullAt(4)) {
-            if (!decimal) dbl += r.getDouble(4)
-            else dec = if (dec == null) r.getDecimal(4) else dec.add(r.getDecimal(4))
-            anyAmt = true
-          }
-        }
-        val amount =
-          if (!anyAmt) null
-          else if (!decimal) dbl
-          else if (dec.precision <= precision) dec
-          else if (ansi) throw new ArithmeticException(s"sum $dec overflows $amountT")
-          else null
-        Row(g, time, if (anyCons) cons else null, amount, nclients, ncontrats, ninvoices)
-      }
-    }
+      .sortWithinPartitions(sortKey: _*) // order-preserving packing ⇒ same order as the dims
+    val dims = (0 to 3).map(i => AttributeReference(Keys(i), joined.schema(Keys(i)).dataType, nulls(i))())
+    val measures = Seq(
+      AttributeReference("time", joined.schema("time").dataType)(),
+      AttributeReference("consumption", LongType)(),
+      AttributeReference("amount", amountT)()) ++
+      Seq("nclients", "ncontrats", "ninvoices").map(AttributeReference(_, LongType, nullable = false)())
+    val layout = CubeLayout(mins.take(4), shifts, bits.take(4), bContract, conf.ansiEnabled)
+    shim.ofRows(spark, CubePass(layout, dims ++ measures, sorted.queryExecution.analyzed))
   }
 
   /** End-to-end over a reference-layout data folder (`clients.csv`,
@@ -460,8 +419,10 @@ object ReferenceHypercube {
   def writeCsv(cube: DataFrame, outPath: String, singleFile: Boolean = true): Unit = {
     val cells = cube.schema.fields.map(cellWriter)
     val header = cube.columns.mkString("", ",", "\n")
-    val hadoopConf = cube.sparkSession.sparkContext.hadoopConfiguration
-    val conf = new SerializableConfiguration(hadoopConf)
+    val sc = cube.sparkSession.sparkContext
+    val hadoopConf = sc.hadoopConfiguration
+    // shipped once per job, not inside every task's closure
+    val conf = sc.broadcast(new SerializableConfiguration(hadoopConf))
     val out = new Path(outPath)
     val fs = out.getFileSystem(hadoopConf)
     val tmp = new Path(out, "_parts")
@@ -473,7 +434,7 @@ object ReferenceHypercube {
           if (!rows.hasNext) Iterator.empty
           else {
             val path = new Path(tmp, s"part-$index-${TaskContext.get().taskAttemptId()}.csv")
-            val os = path.getFileSystem(conf.value).create(path, false)
+            val os = path.getFileSystem(conf.value.value).create(path, false)
             try {
               // rows are appended to one buffer, written out in ~64 KB chunks
               val sb = new java.lang.StringBuilder(1 << 17)

@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
@@ -15,6 +15,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWith
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 implementation of the fixed-width big-endian binary
   * source (layout DSL shared with [[FixedWidthBinary]]).
@@ -96,15 +97,6 @@ object FixedWidthBinaryV2 {
     val l = options.get("layout")
     require(l != null, "fixed-width binary source requires a 'layout' option")
     l
-  }
-
-  /** Minimal serializable Hadoop-conf carrier (the task needs the
-    * driver's filesystem configuration to open the split). */
-  final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-    private def writeObject(out: ObjectOutputStream): Unit = { out.defaultWriteObject(); value.write(out) }
-    private def readObject(in: ObjectInputStream): Unit = {
-      in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
-    }
   }
 
   /** One decoded field: output ordinal ← (byte offset within the record,
@@ -222,8 +214,10 @@ object FixedWidthBinaryV2 {
     }
 
     override def createReaderFactory(): PartitionReaderFactory = {
-      val conf = new SerializableHadoopConf(
-        SparkSession.active.sparkContext.hadoopConfiguration)
+      // the task needs the driver's filesystem configuration to open its
+      // split: broadcast once per scan, as Spark's own file scans do
+      val sc = SparkSession.active.sparkContext
+      val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
       val plans = fieldPlans(table.layout)
       val req = required.fields.map(f =>
         plans.getOrElse(f.name,
@@ -233,10 +227,10 @@ object FixedWidthBinaryV2 {
   }
 
   private final class FwbReaderFactory(recLen: Int, required: Array[FieldPlan],
-      conf: SerializableHadoopConf) extends PartitionReaderFactory {
+      conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
       val p = partition.asInstanceOf[FwbPartition]
-      new FwbReader(p, recLen, required, conf.value)
+      new FwbReader(p, recLen, required, conf.value.value)
     }
   }
 

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.ReferenceHypercube
+import graft.operators.{CubePassExec, ReferenceHypercube}
 import graft.sources.FixedWidthBinaryV2
 
 /** Binary decode → hypercube → CSV against the plain-Scala `ETL.java`
@@ -152,7 +152,7 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
         assert(executed.flatMap(p => collect(p) { case e: ShuffleExchangeExec => e }).size === 1, all)
         assert(executed.flatMap(p => collect(p) { case a: BaseAggregateExec => a }).isEmpty, all)
         assert(executed.flatMap(p => collect(p) { case s: SortExec => s.global }) === Seq(false), all)
-        assert(executed.flatMap(p => collect(p) { case m: MapPartitionsExec => m }).size === 1, all)
+        assert(executed.flatMap(p => collect(p) { case p: CubePassExec => p }).size === 1, all)
       }
   }
 
@@ -175,7 +175,7 @@ class HypercubeDifferentialSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
     val out = tempDir("etlmain-staged").resolve("cube")
     val executed = executedPlans(Console.withOut(new java.io.ByteArrayOutputStream())(
       EtlMain.run(spark, folder, out.toString, singleFile = true, stageTimes = true))).map(_.toString)
-    assert(executed.exists(_.contains("MapPartitions")), s"the cube's plan was not seen: $executed")
+    assert(executed.exists(_.contains("CubePass")), s"the cube's plan was not seen: $executed")
     assert(!executed.exists(_.contains("rangepartitioning")),
       s"--stage-times ran a range-partitioned sort:\n${executed.mkString("\n\n")}")
   }

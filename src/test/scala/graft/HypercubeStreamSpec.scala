@@ -5,12 +5,13 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.ReferenceHypercube
+import graft.operators.{CubePass, ReferenceHypercube}
 
 /** The hypercube's one plan, the sort-stream pass, against plain Spark
   * SQL: on small frames built for its edge cases (NULL, negative and
@@ -20,7 +21,7 @@ import graft.operators.ReferenceHypercube
   * must reject with the column's name the inputs it cannot pack. On the
   * same frames, `writeCsv` must write what Spark's CSV writer makes of
   * the cube with its amount formatted by a column expression. */
-class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
+class HypercubeStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with SparkTestSession.TempDirs {
   private lazy val spark = SparkTestSession.spark
   import SparkTestSession.withConf
 
@@ -39,7 +40,7 @@ class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
   /** `hypercube` over the frames, checked to run the stream. */
   private def streamed(clients: DataFrame, contracts: DataFrame, invoices: DataFrame): DataFrame = {
     val cube = ReferenceHypercube.hypercube(clients, contracts, invoices)
-    assert(cube.queryExecution.optimizedPlan.collect { case m: MapPartitions => m }.size === 1,
+    assert(cube.queryExecution.optimizedPlan.collect { case p: CubePass => p }.size === 1,
       cube.queryExecution.optimizedPlan)
     cube
   }
@@ -171,9 +172,21 @@ class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     assert(e.getMessage.contains("hypercube column consumption is DOUBLE, not integral"), e.getMessage)
   }
 
-  test("a DECIMAL(10,2) amount on the generated folder sums exactly to DECIMAL(20,2)") {
+  /** A generated folder of the reference sample's shape. */
+  private lazy val sample: String = {
     val dir = tempDir("hypercube-stream").toString
     RefScale.generate(dir, RefScale.Sample)
+    dir
+  }
+
+  /** The sort orders of each `SortExec` that running `cube` executed. */
+  private def sortOrders(cube: DataFrame): Seq[Int] = {
+    cube.collect()
+    collect(cube.queryExecution.executedPlan) { case s: SortExec => s.sortOrder.size }
+  }
+
+  test("a DECIMAL(10,2) amount on the generated folder sums exactly to DECIMAL(20,2)") {
+    val dir = sample
     val cl = ReferenceHypercube.clients(spark, s"$dir/clients.csv")
     val co = ReferenceHypercube.contracts(spark, s"$dir/contracts.csv")
     val inv = ReferenceHypercube.invoices(spark, s"$dir/invoices.bin")
@@ -182,18 +195,86 @@ class HypercubeStreamSpec extends AnyFunSuite with SparkTestSession.TempDirs {
     withConf("spark.sql.shuffle.partitions" -> "7")(assertSameRows(cl, co, inv))
   }
 
+  /** Whether `body` throws with an `ArithmeticException` among the causes. */
+  private def arithmetic(body: => Unit): Boolean = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException])
+  }
+
   test("a consumption sum that overflows a long throws as SUM does, and wraps " +
       "as SUM does without ANSI") {
     import spark.implicits._
     val big = Seq((1, 4, 1.0f, Long.MaxValue / 2 + 1), (2, 4, 1.0f, Long.MaxValue / 2 + 1))
       .toDF("contract", "time", "amount", "consumption")
-    def arithmetic(body: => Unit): Boolean = {
-      val e = intercept[Exception](body)
-      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(_.isInstanceOf[ArithmeticException])
-    }
     assert(arithmetic(grouped(clients, contracts, big).collect()))
     assert(arithmetic(streamed(clients, contracts, big).collect()))
     withConf("spark.sql.ansi.enabled" -> "false")(assertSameRows(clients, contracts, big))
+  }
+
+  test("a DECIMAL(38,0) amount sum that overflows throws as SUM does, and is NULL " +
+      "as SUM gives without ANSI") {
+    import spark.implicits._
+    // contracts 1 and 2 fall in one group: 6e37 + 6e37 has 39 digits
+    val big = Seq((1, 4, "6e37", 1), (2, 4, "6e37", 2)).toDF("contract", "time", "amount", "consumption")
+      .withColumn("amount", col("amount").cast(DecimalType(38, 0)))
+    assert(arithmetic(grouped(clients, contracts, big).collect()))
+    assert(arithmetic(streamed(clients, contracts, big).collect()))
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      assertSameRows(clients, contracts, big)
+      assert(streamed(clients, contracts, big).collect().head.isNullAt(6))
+    }
+  }
+
+  test("group and client keys that pack apart but not together sort by two keys " +
+      "and equal the SQL GROUP BY at 1, 4 and 64 shuffle partitions; the generated " +
+      "folder sorts by one") {
+    import spark.implicits._
+    // geo and client span 2^30 + 1: g takes 37 bits, client‖contract 34
+    val cl = Seq((1, 1, 0, 1), (1 << 30, 2, 1 << 30, 1), (5, 1, 0, 2)).toDF("id", "type", "geo", "misc")
+    val co = Seq((1, 1, 1), (2, 1 << 30, 2), (3, 5, 1), (4, 1 << 30, 2), (5, 1, 1))
+      .toDF("id", "client", "nature")
+    val inv = Seq[(Int, Option[Int], Option[Float], Option[Int])](
+      (1, Some(3), Some(1.5f), Some(4)), (5, Some(3), Some(0.25f), Some(1)), (2, Some(3), Some(2.0f), None),
+      (4, Some(3), None, Some(7)), (4, None, Some(-0.5f), Some(2)), (3, Some(1), Some(1.0f), Some(3)),
+      (1, Some(1), Some(0.5f), Some(5)), (2, Some(-2), Some(0.75f), Some(6))
+    ).toDF("contract", "time", "amount", "consumption")
+    for (parts <- Seq(1, 4, 64))
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        assertSameRows(cl, co, inv)
+        assert(sortOrders(streamed(cl, co, inv)) === Seq(2))
+      }
+    val dir = sample
+    assert(sortOrders(ReferenceHypercube.fromFolder(spark, dir)) === Seq(1))
+  }
+
+  test("one group with 5,000 distinct times and a NULL time over two clients' contracts " +
+      "equals the SQL GROUP BY at 1, 4 and 64 shuffle partitions") {
+    import spark.implicits._
+    // every i gives time (7919 i) mod 5000 - 100, but a multiple of 997 gives NULL;
+    // the amounts are exact binary fractions
+    val inv = (0 until 12000).map { i =>
+      (i % 3 + 1, if (i % 997 == 0) None else Some(i * 7919 % 5000 - 100), Some((i % 8) * 0.25f), Some(i % 50))
+    }.toDF("contract", "time", "amount", "consumption")
+    val (cl, co) = (clients.filter(col("id") <= 2), contracts.filter(col("id") <= 3))
+    for (parts <- Seq(1, 4, 64))
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        assertSameRows(cl, co, inv)
+        val rows = streamed(cl, co, inv).collect()
+        assert(rows.length === 5001)
+        assert(rows.head.isNullAt(4))
+      }
+  }
+
+  test("a projection over the cube keeps the pass's input: selected columns and " +
+      "a recast amount equal the SQL GROUP BY at 1, 4 and 64 shuffle partitions") {
+    val decimal = invoices.withColumn("amount", col("amount").cast(DecimalType(10, 2)))
+    for (parts <- Seq(1, 4, 64); inv <- Seq(invoices, decimal))
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+        val (cube, sql) = (streamed(clients, contracts, inv), grouped(clients, contracts, inv))
+        assert(cube.select("geo", "ninvoices").collect().toSeq === sql.select("geo", "ninvoices").collect().toSeq)
+        def recast(df: DataFrame) = df.withColumn("amount", col("amount").cast("double")).collect().toSeq
+        assert(recast(cube) === recast(sql))
+      }
   }
 }
